@@ -586,7 +586,7 @@ object SparkEntry {
       |sim AS (SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0::BIGINT END) AS BIGINT) AS simhash
       |  FROM sums GROUP BY 1)""".stripMargin
 
-  /** The df-capped band-widening stage (Dedup.cappedBandKeys) as DuckDB
+  /** The df-capped band-widening stage (CappedIndex.keys) as DuckDB
     * CTEs. The key arithmetic is rendered from the SAME
     * `Dedup.simhashKeyExpr` strings the Spark plan parses — portable
     * `>> & | %`/CAST SQL, single source of truth.
@@ -688,7 +688,7 @@ object SparkEntry {
        |bands AS (SELECT doc_id, i//3 AS band,
        |  md5(string_agg(mh::VARCHAR, ',' ORDER BY i)) AS bh FROM sigs GROUP BY 1,2)""".stripMargin
 
-  /** The df-capped MinHash keying stage (Dedup.cappedMinhashKeys) as
+  /** The df-capped MinHash keying stage (CappedIndex.keys) as
     * DuckDB CTEs — the key slot schedule is rendered from the SAME
     * `Dedup.minhashKeySlots` the Spark plan evaluates (md5 over the
     * comma-joined decimal slot values; DuckDB concat_ws casts BIGINT

@@ -482,9 +482,9 @@ object Dedup {
     * key), so level 9 is a bijection of the signature and df = 1 over
     * DISTINCT signatures. Slot lists are nested prefixes, so two sigs
     * sharing a level-k key share every coarser key and agree on the
-    * level itself — the same drop-only-approximation argument as
-    * [[cappedBandKeys]]. Shared by the Spark plan and the DuckDB
-    * oracle (SparkEntry renders the same slot schedule as SQL).
+    * level itself — the drop-only-approximation argument of
+    * [[CappedIndex]]. Shared by the Spark plan and the DuckDB oracle
+    * (SparkEntry renders the same slot schedule as SQL).
     */
   val minhashWidenLevels = 9
 
@@ -498,7 +498,7 @@ object Dedup {
     * (engine-portable: md5 of the comma-joined decimal slot values,
     * the same string the DuckDB oracle aggregates).
     */
-  private def minhashKeyCol(b: Int, j: Int): org.apache.spark.sql.Column =
+  private[dedup] def minhashKeyCol(b: Int, j: Int): org.apache.spark.sql.Column =
     md5(concat_ws(",",
       minhashKeySlots(b, j).map(i => element_at(col("mh"), i + 1).cast("string")): _*))
 
@@ -509,86 +509,6 @@ object Dedup {
   private[graft] def minhashSigKey: org.apache.spark.sql.Column =
     minhashKeyCol(0, minhashWidenLevels)
 
-  /** The level-`lvl` key for band `band`, recomputed from the row's own
-    * `mh`: a nested CaseWhen over the 4×10 (band, level) schedule —
-    * only the matched arm's md5 evaluates. Lets the capped-keying
-    * aggregate carry min(LEVEL) (a long — HashAggregate with map-side
-    * combine) instead of min(struct(j, key)), which forces
-    * SortAggregate (struct buffers aren't hash-aggregable) and made the
-    * keying stage sort its widest intermediate twice (r12, guide §2.3).
-    * Key values are unchanged: key = f(mh, band, j) is pure, and within
-    * a (sk, band) group j is unique, so min(struct) ≡ key(min j).
-    */
-  private def minhashKeyAt(bandCol: org.apache.spark.sql.Column,
-                           lvlCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    // the slot lists are NESTED PREFIXES (minhashKeySlots(b, j) =
-    // minhashKeySlots(b, 9).take(3 + j)), so one dynamic slice of the
-    // band's full 12-slot list replaces a 4×10-arm md5 CaseWhen (whose
-    // codegen size measurably outweighed the aggregate win at sf0.1)
-    def slotArrFor(b: Int) = array(
-      minhashKeySlots(b, minhashWidenLevels)
-        .map(i => element_at(col("mh"), i + 1).cast("string")): _*)
-    val slotArr = (1 until minhashNBands).foldLeft(
-      when(bandCol === 0, slotArrFor(0))) {
-      (acc, b) => acc.when(bandCol === b, slotArrFor(b))
-    }
-    md5(concat_ws(",", slice(slotArr, lit(1), lvlCol + lit(3))))
-  }
-
-  /** Per-(sig, band) bucket keys with progressive df-capped widening —
-    * [[cappedBandKeys]] transplanted to the MinHash family (VERDICT r5
-    * #1). Input is DISTINCT signatures (sk, mh); a band bucket holding
-    * more than `maxDf` of them is re-keyed with one more signature
-    * slot, repeatedly, until it fits; level 9 keys are signature
-    * bijections, so every bucket ends at df ≤ max(maxDf, 1) and the
-    * per-bucket self-join work is bounded by maxDf²/2 REGARDLESS of
-    * corpus size.
-    */
-  private[graft] def cappedMinhashKeys(sigs: DataFrame, maxDf: Int): DataFrame = {
-    // maxDf=0 would null the min(when(...)) aggregate for every bucket
-    // (df ≥ 1 always) — same loud rejection as cappedBandKeys
-    require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
-    val n = minhashWidenLevels
-    // one (band, level, key) struct per sig per band per level — 40
-    // narrow rows per sig. ONE count shuffle + ONE join + ONE
-    // min-struct groupBy, the 3-stage shape profiled in cappedBandKeys.
-    val bjk = for (b <- 0 until minhashNBands; j <- 0 to n) yield
-      struct(lit(b).as("band"), lit(j).as("j"), minhashKeyCol(b, j).as("key"))
-    val exploded = sigs
-      .select(col("sk"), col("mh"), explode(array(bjk: _*)).as("bjk"))
-      .select(col("sk"), col("mh"), col("bjk.band").as("band"),
-        col("bjk.j").as("j"), col("bjk.key").as("key"))
-    val dfs = exploded.groupBy(col("band"), col("j"), col("key"))
-      .agg(count(lit(1)).as("df"))
-    // slot-list refinement is monotone (level-j agreement implies
-    // level-(j−1) agreement) and level n has df = 1, so the min LEVEL
-    // with df ≤ cap IS "the first level that fits" and always exists.
-    // min over the long level hash-aggregates with a map-side combine;
-    // the chosen level's key is recomputed from mh ([[minhashKeyAt]])
-    exploded.join(dfs, Seq("band", "j", "key"))
-      .groupBy(col("sk"), col("mh"), col("band"))
-      .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
-      .select(col("sk"), col("band"), col("lvl0").cast("long").as("lvl"),
-        minhashKeyAt(col("band"), col("lvl0")).as("bkey"))
-  }
-
-  /** Candidate signature pairs (s1 < s2 by sig key) from the df-capped
-    * band join over DISTINCT signatures. Collapsing first is what makes
-    * dup-heavy corpora safe: an N-doc exact-duplicate group is ONE row
-    * in this join (identical-sig doc pairs are recovered by group
-    * expansion at the caller, never through the band join).
-    */
-  private def cappedMinhashSigPairs(sigs: DataFrame, maxDf: Int): DataFrame = {
-    // cached: the self-join consumes the keyed table twice
-    val keyed = cappedMinhashKeys(sigs, maxDf).cachedOnce
-    keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.band") === col("b.band") && col("a.lvl") === col("b.lvl") &&
-          col("a.bkey") === col("b.bkey") && col("a.sk") < col("b.sk"))
-      .select(col("a.sk").as("s1"), col("b.sk").as("s2"))
-      .distinct()
-  }
-
   /** F3c: MinHash LSH pairs with distinct-signature collapse + df-capped
     * band buckets — the 100 TB twin of [[minhashLsh]] (VERDICT r5 #1).
     * Same (x, y) schema; output ⊆ minhashLsh (level-0 keys ARE the
@@ -597,7 +517,8 @@ object Dedup {
     * no duplicate pairs and need no distinct.
     */
   def minhashLshCapped(spark: SparkSession, docs: DataFrame, maxDf: Int): DataFrame =
-    minhashCappedPairs(cachedSigTable(docs), maxDf).orderBy(col("x"), col("y"))
+    CappedIndex.pairs(CappedIndex.MinHash, cachedSigTable(docs), "doc_id", maxDf)
+      .orderBy(col("x"), col("y"))
 
   /** The cached (doc_id, mh, sk) signature table — ONE plan shape, so
     * every consumer in a session (capped pairs, clusters, the F3e
@@ -622,7 +543,7 @@ object Dedup {
   def minhashBucketStats(spark: SparkSession, docs: DataFrame,
                          maxDf: Int): DataFrame = {
     val sig = cachedSigTable(docs)
-    val keyed = cappedMinhashKeys(sig.select("sk", "mh").distinct(), maxDf)
+    val keyed = CappedIndex.keys(CappedIndex.MinHash, sig.select("sk", "mh").distinct(), maxDf)
     keyed.groupBy(col("band"), col("lvl"), col("bkey"))
       .agg(count(lit(1)).as("df"))
       .groupBy(col("band"), col("lvl"))
@@ -631,23 +552,6 @@ object Dedup {
       .select(col("band").cast("long").as("band"), col("lvl"),
         col("n_buckets"), col("n_sigs"), col("max_df"))
       .orderBy(col("band"), col("lvl"))
-  }
-
-  /** Capped candidate pairs from a prebuilt signature table (the
-    * [[minhashLshCapped]] body, shared with [[minhashJaccardEst]]).
-    */
-  private def minhashCappedPairs(sig: DataFrame, maxDf: Int): DataFrame = {
-    val sigPairs = cappedMinhashSigPairs(sig.select("sk", "mh").distinct(), maxDf)
-    val crossPairs = sigPairs
-      .join(sig.as("m1"), col("s1") === col("m1.sk"))
-      .join(sig.as("m2"), col("s2") === col("m2.sk"))
-      .select(least(col("m1.doc_id"), col("m2.doc_id")).as("x"),
-        greatest(col("m1.doc_id"), col("m2.doc_id")).as("y"))
-    val intra = sig.as("m1")
-      .join(sig.as("m2"),
-        col("m1.sk") === col("m2.sk") && col("m1.doc_id") < col("m2.doc_id"))
-      .select(col("m1.doc_id").as("x"), col("m2.doc_id").as("y"))
-    crossPairs.unionByName(intra)
   }
 
   /** F3e: per-pair Jaccard ESTIMATE from signature slot agreement —
@@ -671,7 +575,7 @@ object Dedup {
     val matches = (0 until k).map(i =>
       when(element_at(col("mx"), i + 1) === element_at(col("my"), i + 1), 1L)
         .otherwise(0L)).reduce(_ + _)
-    minhashCappedPairs(sig, maxDf)
+    CappedIndex.pairs(CappedIndex.MinHash, sig, "doc_id", maxDf)
       .join(sig.select(col("doc_id").as("x"), col("mh").as("mx")), "x")
       .join(sig.select(col("doc_id").as("y"), col("mh").as("my")), "y")
       .select(col("x"), col("y"),
@@ -681,38 +585,18 @@ object Dedup {
 
   /** F3k: O(n)-output keep/drop decisions over the CAPPED MinHash
     * candidate graph (re-pointed off the uncapped band join, VERDICT r5
-    * #1) — star clustering at signature-group level, the
-    * [[simhashClusters]] shape: each sig group's rep is its min doc_id;
-    * a group whose rep has a smaller neighbouring rep points at the
-    * smallest such rep (one-step min propagation — chains deliberately
-    * NOT transitively merged; the oracle replays the same rule). Docs
-    * with no signature (< 3 tokens) are their own singleton cluster.
-    * Output: (doc_id, cluster_id, keep) for every doc.
+    * #1) — [[CappedIndex.clusters]]' star clustering at signature-group
+    * level. Docs with no signature (< 3 tokens) are their own singleton
+    * cluster. Output: (doc_id, cluster_id, keep) for every doc.
     */
   def minhashClusters(spark: SparkSession, docs: DataFrame, maxDf: Int): DataFrame = {
     val sig = cachedSigTable(docs)
-    val sigPairs = cappedMinhashSigPairs(sig.select("sk", "mh").distinct(), maxDf)
-    // groups: referenced by the rep joins and the final assignment
-    val groups = sig.groupBy(col("sk")).agg(min(col("doc_id")).as("rep")).cachedOnce
-    val oriented = sigPairs
-      .join(groups.as("g1"), col("s1") === col("g1.sk"))
-      .join(groups.as("g2"), col("s2") === col("g2.sk"))
-      .select(
-        when(col("g1.rep") < col("g2.rep"), col("s2")).otherwise(col("s1")).as("sk"),
-        least(col("g1.rep"), col("g2.rep")).as("cand"))
-    val roots = oriented.groupBy(col("sk")).agg(min(col("cand")).as("root"))
-    val clusters = groups.join(roots, Seq("sk"), "left")
-      .select(col("sk"), coalesce(col("root"), col("rep")).as("cluster_id"))
-    // LEFT joins: a short doc has no signature row — it must surface as
+    // LEFT join: a short doc has no signature row — it must surface as
     // its own singleton cluster, not vanish from the output
-    docs.select(col("doc_id"))
-      .join(sig.select(col("doc_id"), col("sk")), Seq("doc_id"), "left")
-      .join(clusters, Seq("sk"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"),
-        when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L).as("keep"))
-      .orderBy(col("doc_id"))
+    CappedIndex.clusters(CappedIndex.MinHash,
+      docs.select(col("doc_id"))
+        .join(sig.select(col("doc_id"), col("sk")), Seq("doc_id"), "left"),
+      sig, maxDf)
   }
 
   /** Shared O(n)-output clustering over an (x, y) candidate pair graph:
@@ -757,9 +641,9 @@ object Dedup {
     *    are unique by the F3k singleton rule.
     *
     * Machinery is the F3c family verbatim: one shared signature table
-    * over base ∪ incoming, distinct-signature collapse, df-capped
-    * slot-widened band keys — the only new piece is the left-side
-    * restriction of the band join to incoming-bearing signatures.
+    * over base ∪ incoming, distinct-signature collapse, the
+    * [[CappedIndex]] build — the only new piece is that only
+    * incoming-bearing signatures' keys [[CappedIndex.probe]] the index.
     */
   def minhashIncremental(spark: SparkSession, base: DataFrame,
                          incoming: DataFrame, maxDf: Int): DataFrame = {
@@ -776,19 +660,15 @@ object Dedup {
       .agg(max(col("is_base")).as("has_base"),
         min(when(col("is_base") === 0, col("doc_id"))).as("min_inc"))
       .cachedOnce
-    val keyed = cappedMinhashKeys(
+    val keyed = CappedIndex.keys(CappedIndex.MinHash,
       sig.select("sk", "mh").distinct(), maxDf).cachedOnce
-    // the left side carries ONLY incoming-bearing signatures — base
-    // sigs meet the join solely as right-side bucket members, so
-    // base×base pairs are never generated
-    val keyedInc = keyed.join(
-      ski.filter(col("min_inc").isNotNull).select(col("sk")), Seq("sk"))
-    val cand = keyedInc.as("a")
-      .join(keyed.as("b"),
-        col("a.band") === col("b.band") && col("a.lvl") === col("b.lvl") &&
-          col("a.bkey") === col("b.bkey") && col("a.sk") =!= col("b.sk"))
-      .select(col("a.sk").as("ska"), col("b.sk").as("skb"))
-      .distinct()
+    // the probe side carries ONLY incoming-bearing signatures' keys —
+    // base sigs meet the probe solely as index members, so base×base
+    // pairs are never generated
+    val incKeys = keyed.join(ski.filter(col("min_inc").isNotNull).select(col("sk")), Seq("sk"))
+    val cand = CappedIndex.probe(CappedIndex.MinHash, incKeys, keyed)
+      .filter(col("s1") =!= col("s2"))
+      .select(col("s1").as("ska"), col("s2").as("skb"))
     val nearSk = cand
       .join(ski.select(col("sk").as("ska"), col("min_inc").as("me_min")), "ska")
       .join(ski.select(col("sk").as("skb"), col("has_base").as("o_base"),
@@ -817,11 +697,8 @@ object Dedup {
     * band buckets (`keys`: (sk, band, lvl, bkey)).
     */
   def incrementalIndex(spark: SparkSession, base: DataFrame,
-                       maxDf: Int): (DataFrame, DataFrame) = {
-    val sig = cachedSigTable(base)
-    val dsig = sig.select("sk", "mh").distinct().cachedOnce
-    (dsig, cappedMinhashKeys(dsig, maxDf).cachedOnce)
-  }
+                       maxDf: Int): (DataFrame, DataFrame) =
+    CappedIndex.index(CappedIndex.MinHash, cachedSigTable(base), maxDf)
 
   /** The distinct (sk, mh) signature table of a document set — the
     * portable currency of the incremental family (index sigs, F37
@@ -838,22 +715,10 @@ object Dedup {
   /** F37: standing-index REFRESH — fold a new batch's signatures into
     * the capped-key index WITHOUT a full rebuild, closing the
     * F36/G14 production loop (build once, gate all day, fold the
-    * survivors in at night; consecutive days compose). Correctness
-    * rests on a closure property of the widening schedule: level-j
-    * slot lists CONTAIN the level-0 list, so any level-j collision
-    * implies a level-0 collision — the level-0 bucket partition is
-    * closed under adding signatures, and only level-0 buckets that
-    * actually RECEIVE a new signature can see any df change at any
-    * level. The merge therefore re-keys exactly the touched buckets'
-    * member (sig, band) pairs — new members AND the old members a
-    * newly-overflowing bucket forces to a wider level — and keeps
-    * every other index row verbatim: merge(index(A), B) ≡
-    * index(A ∪ B) EXACTLY (the driver oracle states this cross-engine
-    * — the Spark side merges, DuckDB rebuilds from scratch, outputs
-    * must hash-match). Work: one map-only level-0 scan of the merged
-    * signature table + the full keying pipeline restricted to the
-    * touched cohort; nothing pairwise, nothing proportional to
-    * untouched-index size beyond the linear scan.
+    * survivors in at night; consecutive days compose). The closure
+    * property [[CappedIndex.merge]] rests on holds because level-j
+    * slot lists CONTAIN the level-0 list: merge(index(A), B) ≡
+    * index(A ∪ B) EXACTLY.
     *
     * Inputs: the standing index as (sigs = (sk, mh) distinct,
     * keyed = (sk, band, lvl, bkey)) — [[incrementalIndex]]'s shape —
@@ -862,109 +727,26 @@ object Dedup {
     */
   def indexMerge(spark: SparkSession, baseSigs: DataFrame,
                  baseKeyed: DataFrame, newSigs: DataFrame,
-                 maxDf: Int): (DataFrame, DataFrame) = {
-    require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
-    val n = minhashWidenLevels
-    val fresh = newSigs.select(col("sk"), col("mh")).distinct()
-      .join(baseSigs.select(col("sk")), Seq("sk"), "left_anti")
-      .cachedOnce
-    val mergedSigs = baseSigs.select(col("sk"), col("mh"))
-      .unionByName(fresh).cachedOnce
-    def k0Structs = array((0 until minhashNBands).map(b =>
-      struct(lit(b).as("band"), minhashKeyCol(b, 0).as("key0"))): _*)
-    // touched level-0 buckets: the fresh signatures' per-band keys
-    val touched = fresh.select(explode(k0Structs).as("t"))
-      .select(col("t.band").as("band"), col("t.key0").as("key0"))
-      .distinct()
-    // cohort = every merged (sig, band) living in a touched bucket —
-    // by the closure property, the complete set of index rows whose
-    // level choice can change
-    val cohort = mergedSigs
-      .select(col("sk"), col("mh"), explode(k0Structs).as("t"))
-      .select(col("sk"), col("mh"), col("t.band").as("band"),
-        col("t.key0").as("key0"))
-      .join(broadcast(touched), Seq("band", "key0"), "left_semi")
-      .select(col("sk"), col("mh"), col("band"))
-      .cachedOnce
-    // re-run the standard keying pipeline restricted to the cohort:
-    // within a touched bucket the cohort holds ALL members, so cohort
-    // dfs equal global dfs at every level. Keys are built for ONLY the
-    // row's own band via a CaseWhen over the 4 band values (r12:
-    // CaseWhen evaluates just the matched arm, so each cohort row pays
-    // 10 md5 keys instead of materializing all 40 (band, j, key)
-    // structs and filtering 3/4 of them away post-explode — the md5
-    // keying is this stage's dominant CPU).
-    val perBand = (0 until minhashNBands).map { b =>
-      array((0 to n).map(j =>
-        struct(lit(j).as("j"), minhashKeyCol(b, j).as("key"))): _*)
-    }
-    val bandKeys = (1 until minhashNBands).foldLeft(
-      when(col("band") === 0, perBand(0))) { (acc, b) =>
-      acc.when(col("band") === b, perBand(b))
-    }
-    val exploded = cohort
-      .select(col("sk"), col("mh"), col("band"), explode(bandKeys).as("jk"))
-      .select(col("sk"), col("mh"), col("band"), col("jk.j").as("j"),
-        col("jk.key").as("key"))
-    val dfs = exploded.groupBy(col("band"), col("j"), col("key"))
-      .agg(count(lit(1)).as("df"))
-    // min LEVEL (long, hash-aggregable) + key recomputation from mh —
-    // the [[cappedMinhashKeys]] shape (min(struct) forces SortAggregate)
-    val cohortKeyed = exploded.join(dfs, Seq("band", "j", "key"))
-      .groupBy(col("sk"), col("mh"), col("band"))
-      .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
-      .select(col("sk"), col("band"), col("lvl0").cast("long").as("lvl"),
-        minhashKeyAt(col("band"), col("lvl0")).as("bkey"))
-    val mergedKeyed = baseKeyed
-      .join(cohort.select(col("sk"), col("band")).distinct(),
-        Seq("sk", "band"), "left_anti")
-      .unionByName(cohortKeyed)
-    (mergedSigs, mergedKeyed)
-  }
+                 maxDf: Int): (DataFrame, DataFrame) =
+    CappedIndex.merge(CappedIndex.MinHash, baseSigs, baseKeyed, newSigs, maxDf)
 
   /** G14: in-flight incremental gate — each arriving document is
-    * checked against the STANDING corpus's signature index AT INGEST:
-    * `exact_dup` if its full signature exists in the base, `near_dup`
-    * if any of its band keys (computed at EVERY widening level — the
-    * base index stores each bucket at the one level its df fit, so
-    * the arriving side offers all 40 (band, lvl, key) candidates and
-    * the join picks the stored one), `unique` otherwise. This is the
+    * checked against the STANDING corpus's signature index AT INGEST
+    * ([[CappedIndex.gate]]): `exact_dup` if its full signature exists
+    * in the base, `near_dup` if any of its band keys hits a stored
+    * bucket (the arriving side offers all 40 (band, lvl, key)
+    * candidates and the join picks the stored one), `unique`
+    * otherwise; docs too short to sign are unique. This is the
     * base-only prior rule: incoming-vs-incoming dups are the nightly
     * F36 batch job's business; the gate's job is stopping re-crawls
-    * of what the corpus already holds before they land. Stream-safe
-    * shape: a map-only signature/key projection on the stream side +
-    * two stream-static left joins against the (refreshable) index —
-    * no state store, no stream-side aggregation.
+    * of what the corpus already holds before they land.
     */
   def incrementalGateRows(docs: DataFrame, baseSks: DataFrame,
-                          baseKeys: DataFrame): DataFrame = {
-    val sig = minhashSigRows(docs)
-      .select(col("doc_id"), col("mh"), minhashSigKey.as("sk"))
-    val exact = sig.join(baseSks.select(col("sk"), lit(1L).as("ex")),
-      Seq("sk"), "left")
-    // the arriving doc's 40 candidate keys; a hit at ANY level of any
-    // band is a collision with a stored base bucket
-    val n = minhashWidenLevels
-    val bjk = for (b <- 0 until minhashNBands; j <- 0 to n) yield
-      struct(lit(b).as("band"), lit(j.toLong).as("lvl"),
-        minhashKeyCol(b, j).as("bkey"))
-    val nearHits = sig
-      .select(col("doc_id"), explode(array(bjk: _*)).as("k"))
-      .select(col("doc_id"), col("k.band").as("band"),
-        col("k.lvl").as("lvl"), col("k.bkey").as("bkey"))
-      .join(baseKeys.select(col("band"), col("lvl"), col("bkey"),
-        col("sk").as("bsk")), Seq("band", "lvl", "bkey"))
-      .select(col("doc_id")).distinct()
-      .withColumn("nr", lit(1L))
-    docs.select(col("doc_id"))
-      .join(exact.select(col("doc_id"), col("ex")), Seq("doc_id"), "left")
-      .join(nearHits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex").isNotNull, "exact_dup")
-          .when(col("nr").isNotNull, "near_dup")
-          .otherwise("unique").as("verdict"))
-      .withColumn("keep", when(col("verdict") === "unique", 1L).otherwise(0L))
-  }
+                          baseKeys: DataFrame): DataFrame =
+    CappedIndex.gate(CappedIndex.MinHash,
+      docs.select(col("doc_id")).join(minhashSigRows(docs)
+        .select(col("doc_id"), col("mh"), minhashSigKey.as("sk")), Seq("doc_id"), "left"),
+      "doc_id", baseSks, baseKeys)
 
   /** F2k: O(n)-output keep/drop over the df-capped shingle-Jaccard
     * candidate graph (the scale-path pair source), same one-step rule.
@@ -1259,83 +1041,6 @@ object Dedup {
     (base +: exts).mkString("(", " | ", ")")
   }
 
-  /** The level-`lvl` widened key recomputed from the row's `simhash`
-    * and `band` columns — the simhash twin of [[minhashKeyAt]], for the
-    * same reason: aggregating min(LEVEL) hash-aggregates where
-    * min(struct(j, key)) forces a SortAggregate. Keys are nested
-    * prefixes in BIT space (extension chunk c occupies bits
-    * 15+5c..19+5c, so k_j = k_9 & (2^(15+5j)−1)): one level-9 key and
-    * one dynamic mask, pure integer arithmetic, no CaseWhen.
-    */
-  private def simhashKeyAt(lvlCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    expr(simhashKeyExpr(simhashWidenLevels))
-      .bitwiseAND(call_function("shiftleft", lit(1L),
-        (lvlCol * 5 + lit(15)).cast("int")) - 1)
-
-  /** Per-(sig, band) bucket keys with progressive df-capped widening
-    * (VERDICT r2 #1). A band bucket holding more than `maxDf` DISTINCT
-    * signatures is re-keyed with 5 more simhash bits, repeatedly, until
-    * it fits; level 9 keys carry all 60 bits, and the input rows are
-    * distinct signatures, so every bucket ends at df ≤ max(maxDf, 1) —
-    * the per-bucket self-join work is bounded by maxDf²/2 pairs
-    * REGARDLESS of corpus size (at sf0.1 the max bucket drops 1,582 →
-    * maxDf). Keys are nested prefixes, so two sigs sharing a level-k key
-    * share every coarser key and therefore agree on the level itself:
-    * joining on (band, lvl, key) loses exactly the pairs whose only
-    * shared bands were hot AND whose extension bits differ — the same
-    * documented drop-only approximation as ngramJaccardCapped.
-    */
-  private[graft] def cappedBandKeys(spark: SparkSession, sigs: DataFrame, maxDf: Int): DataFrame = {
-    // maxDf=0 would make the min(when(df <= maxDf, ...)) aggregate null
-    // for EVERY bucket (df ≥ 1 always), silently dropping all candidates
-    // instead of falling back to the level-9 key — reject it loudly
-    require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
-    val n = simhashWidenLevels
-    val bandIdx = broadcast(spark.range(4).toDF("band"))
-    // one (band, level, key) row per sig per level — 10 narrow rows per
-    // band row. ONE count shuffle + ONE join + ONE min-struct groupBy
-    // replaces a per-level window cascade (10 sequential exchanges):
-    // same shuffled bytes, 3 stages instead of 10 (profiled 5.0 s →
-    // sub-second on the 20k-row sf0.1 keyed table; at 10B sigs the win
-    // is stage-barrier count, volume stays linear).
-    val exploded = sigs.crossJoin(bandIdx)
-      .select(col("simhash"), col("band"),
-        posexplode(array((0 to n).map(j => expr(simhashKeyExpr(j))): _*))
-          .as(Seq("j", "key")))
-    val dfs = exploded.groupBy(col("band"), col("j"), col("key"))
-      .agg(count(lit(1)).as("df"))
-    // bucket refinement is monotone (k_j = mask(k_{j+1}), so df never
-    // grows with j) and level n is a per-band bijection of the full
-    // simhash (df = 1 over DISTINCT sigs), so min(when(df ≤ cap, j))
-    // IS "the first level that fits" and always exists; the chosen
-    // level's key is recomputed from (simhash, band) ([[simhashKeyAt]])
-    exploded.join(dfs, Seq("band", "j", "key"))
-      .groupBy(col("simhash"), col("band"))
-      .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
-      .select(col("simhash"), col("band"), col("lvl0").cast("long").as("lvl"),
-        simhashKeyAt(col("lvl0")).as("bkey"))
-  }
-
-  /** Candidate signature pairs (s1 < s2, hamming ≤ maxHamming) from the
-    * df-capped band join over DISTINCT simhash values. Collapsing to
-    * distinct sigs first is what makes dup-heavy corpora safe: an
-    * N-doc exact-duplicate group is ONE row in this join.
-    */
-  private[graft] def cappedSigPairs(spark: SparkSession, sigs: DataFrame,
-                                    maxHamming: Int, maxDf: Int): DataFrame = {
-    // cached: the self-join consumes keyed twice — uncached, the whole
-    // explode/count/join keying pipeline executes once per join side
-    val keyed = cappedBandKeys(spark, sigs, maxDf).cachedOnce
-    keyed.as("a")
-      .join(keyed.as("b"),
-        col("a.band") === col("b.band") && col("a.lvl") === col("b.lvl") &&
-          col("a.bkey") === col("b.bkey") && col("a.simhash") < col("b.simhash"))
-      .select(col("a.simhash").as("s1"), col("b.simhash").as("s2"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** F4-scale pairs: simhashPairs with df-capped band buckets. Same
     * (x, y, hamming) schema; output ⊆ simhashPairs (drop-only). Exact
     * within a widened bucket; equals simhashPairs when no bucket is hot.
@@ -1351,51 +1056,23 @@ object Dedup {
     */
   def simhashPairsCapped(spark: SparkSession, docs: DataFrame,
                          maxHamming: Int, maxDf: Int): DataFrame =
-    cappedPairsFromSigs(spark, simhash(spark, docs), "doc_id", maxHamming, maxDf)
-
-  /** Id-level (x, y, hamming) pairs from any (id, simhash) 60-bit
-    * signature map via the df-capped band join — the expansion stage of
-    * [[simhashPairsCapped]], factored out so non-text signature sources
-    * (image perceptual hashes, ImageDedup) reuse the identical
-    * machinery. Identical-sig pairs come from the intra-group
-    * expansion, never through the band join.
-    */
-  private[graft] def cappedPairsFromSigs(spark: SparkSession, sigMap: DataFrame,
-                                         idCol: String, maxHamming: Int,
-                                         maxDf: Int): DataFrame = {
-    // two pair-expansion joins reference the id→sig map
-    val sim = sigMap.cachedOnce
-    val sigPairs = cappedSigPairs(spark, sim.select("simhash").distinct(), maxHamming, maxDf)
-    val crossPairs = sigPairs
-      .join(sim.as("m1"), col("s1") === col("m1.simhash"))
-      .join(sim.as("m2"), col("s2") === col("m2.simhash"))
-      .select(least(col(s"m1.$idCol"), col(s"m2.$idCol")).as("x"),
-        greatest(col(s"m1.$idCol"), col(s"m2.$idCol")).as("y"), col("hamming"))
-    val intra = sim.as("m1")
-      .join(sim.as("m2"),
-        col("m1.simhash") === col("m2.simhash") && col(s"m1.$idCol") < col(s"m2.$idCol"))
-      .select(col(s"m1.$idCol").as("x"), col(s"m2.$idCol").as("y"), lit(0L).as("hamming"))
-    crossPairs.unionByName(intra).orderBy(col("x"), col("y"))
-  }
+    CappedIndex.pairs(CappedIndex.SimHash.within(maxHamming), simhash(spark, docs),
+      "doc_id", maxDf).orderBy(col("x"), col("y"))
 
   /** F34: hamming-space top-k SEARCH over 60-bit signatures — ranked
     * nearest-neighbour lookup against a STANDING signature index, the
-    * search twin of [[cappedPairsFromSigs]]: "which corpus items does
+    * search twin of [[CappedIndex.pairs]]: "which corpus items does
     * this new item near-duplicate", ordered by distance, without ever
     * pairing the base against itself (the [[minhashIncremental]]
     * base-is-never-self-joined discipline, in hamming space).
     *
-    * Candidate generation is the G14 all-level probe: the base index
-    * ([[cappedBandKeys]] over the base's DISTINCT signatures) stores
-    * each (sig, band) bucket at the ONE widening level its df fit, so
-    * the query side offers its key at EVERY level (40 narrow rows per
-    * distinct query signature — map-only) and the (band, lvl, key)
-    * equi-join picks out exactly the stored bucket. An identical
-    * signature collides at every level including the stored one; a
-    * near-duplicate at hamming ≤ 3 has an untouched band (4-band
-    * pigeonhole) and is found unless that band was df-widened past the
-    * differing bits — the same drop-only approximation as every capped
-    * family.
+    * Candidate generation is the G14 all-level probe
+    * ([[CappedIndex.offers]]) against the capped index of the base's
+    * DISTINCT signatures. An identical signature collides at every
+    * level including the stored one; a near-duplicate at hamming ≤ 3
+    * has an untouched band (4-band pigeonhole) and is found unless that
+    * band was df-widened past the differing bits — the same drop-only
+    * approximation as every capped family.
     *
     * Ranking: per query, row_number over (hamming asc, match_id asc) —
     * deterministic; rows past `k` or past `maxHamming` are cut.
@@ -1411,44 +1088,21 @@ object Dedup {
                     querySigs: DataFrame, k: Int, maxHamming: Int,
                     maxDf: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
+    val f = CappedIndex.SimHash.within(maxHamming)
     // (match_id, simhash): consumed by the distinct-sig index build and
     // the id expansion join
     val base = baseSigs.select(col("match_id"), col("simhash")).cachedOnce
-    val keyed = cappedBandKeys(spark, base.select("simhash").distinct(), maxDf)
+    val keyed = CappedIndex.keys(f, base.select("simhash").distinct(), maxDf)
     val qsig = querySigs.select(col("q_id"), col("simhash")).cachedOnce
-    val candSigs = hammingProbeKeys(spark, qsig.select(col("simhash")))
-      .join(keyed, Seq("band", "lvl", "bkey"))
-      .select(col("qs"), col("simhash").as("bs"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("qs").bitwiseXOR(col("bs"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("hamming"), col("match_id"))
-    candSigs
-      .join(qsig.select(col("q_id"), col("simhash").as("qs")), "qs")
-      .join(base.select(col("match_id"), col("simhash").as("bs")), "bs")
+    CappedIndex.probe(f, CappedIndex.offers(f, qsig.select(col("simhash")).distinct()), keyed)
+      .join(qsig.select(col("q_id"), col("simhash").as("s1")), "s1")
+      .join(base.select(col("match_id"), col("simhash").as("s2")), "s2")
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("match_id"), col("hamming"), col("rank"))
       .orderBy(col("q_id"), col("rank"))
-  }
-
-  /** Every (band, level) key for each distinct signature — the G14
-    * all-level probe offering against a [[cappedBandKeys]] index,
-    * shared by [[hammingSearch]] and [[hammingGateRows]]. Map-only:
-    * 40 narrow rows per distinct signature, no shuffle until the
-    * probe join itself.
-    */
-  private def hammingProbeKeys(spark: SparkSession, sigs: DataFrame): DataFrame = {
-    val n = simhashWidenLevels
-    val bandIdx = broadcast(spark.range(4).toDF("band"))
-    sigs.select(col("simhash")).distinct()
-      .crossJoin(bandIdx)
-      .select(col("simhash"), col("band"),
-        posexplode(array((0 to n).map(j => expr(simhashKeyExpr(j))): _*))
-          .as(Seq("j", "key")))
-      .select(col("simhash").as("qs"), col("band"),
-        col("j").cast("long").as("lvl"), col("key").as("bkey"))
   }
 
   /** The standing hamming-space index over a base signature set — the
@@ -1457,27 +1111,16 @@ object Dedup {
     * refreshable artifact an ingest gate holds between micro-batches.
     */
   def hammingIndex(spark: SparkSession, baseSigs: DataFrame,
-                   maxDf: Int): (DataFrame, DataFrame) = {
-    val sv = baseSigs.select(col("simhash")).distinct().cachedOnce
-    (sv, cappedBandKeys(spark, sv, maxDf).cachedOnce)
-  }
+                   maxDf: Int): (DataFrame, DataFrame) =
+    CappedIndex.index(CappedIndex.SimHash, baseSigs, maxDf)
 
   /** F41: standing HAMMING-index refresh — [[indexMerge]]'s theorem in
     * 60-bit signature space, closing the F34/G15 loop the way F37
     * closed F36/G14: fold a batch's signatures into the capped-key
-    * index WITHOUT a full rebuild. The closure property holds
-    * verbatim: a level-j key is the level-0 band value OR-extended
-    * with higher bits ([[simhashKeyExpr]]), so any level-j collision
-    * implies a level-0 collision — only level-0 buckets that RECEIVE
-    * a new signature can see any df change at any level, and a level-j
-    * bucket lies entirely inside one level-0 bucket, so the cohort
-    * (every merged signature in a touched level-0 bucket) sees
-    * cohort-local dfs equal to global dfs at every level. The merge
-    * re-keys exactly the cohort's (sig, band) rows — new members AND
-    * standing members a newly-overflowing bucket forces wider — and
-    * keeps every other index row verbatim: merge(index(A), B) ≡
-    * index(A ∪ B) EXACTLY (the driver oracle states this cross-engine:
-    * Spark merges, DuckDB rebuilds from scratch).
+    * index WITHOUT a full rebuild ([[CappedIndex.merge]]). The closure
+    * property holds verbatim: a level-j key is the level-0 band value
+    * OR-extended with higher bits ([[simhashKeyExpr]]), so
+    * merge(index(A), B) ≡ index(A ∪ B) EXACTLY.
     *
     * Inputs are [[hammingIndex]]'s shape — (distinct simhash values,
     * (simhash, band, lvl, bkey)) — plus the batch's signature values
@@ -1485,113 +1128,36 @@ object Dedup {
     */
   def hammingIndexMerge(spark: SparkSession, baseSigVals: DataFrame,
                         baseKeyed: DataFrame, newSigVals: DataFrame,
-                        maxDf: Int): (DataFrame, DataFrame) = {
-    require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
-    val n = simhashWidenLevels
-    val bandIdx = broadcast(spark.range(4).toDF("band"))
-    val fresh = newSigVals.select(col("simhash")).distinct()
-      .join(baseSigVals.select(col("simhash")), Seq("simhash"), "left_anti")
-      .cachedOnce
-    val mergedSigs = baseSigVals.select(col("simhash"))
-      .unionByName(fresh).cachedOnce
-    def k0(df: DataFrame) = df.crossJoin(bandIdx)
-      .select(col("simhash"), col("band"), expr(simhashKeyExpr(0)).as("key0"))
-    // touched level-0 buckets: the fresh signatures' per-band values
-    val touched = k0(fresh).select(col("band"), col("key0")).distinct()
-    val cohort = k0(mergedSigs)
-      .join(broadcast(touched), Seq("band", "key0"), "left_semi")
-      .select(col("simhash"), col("band"))
-      .cachedOnce
-    // the standard keying pipeline restricted to the cohort
-    val exploded = cohort
-      .select(col("simhash"), col("band"),
-        posexplode(array((0 to n).map(j => expr(simhashKeyExpr(j))): _*))
-          .as(Seq("j", "key")))
-    val dfs = exploded.groupBy(col("band"), col("j"), col("key"))
-      .agg(count(lit(1)).as("df"))
-    // min LEVEL (long, hash-aggregable) + key recomputation — the
-    // [[cappedBandKeys]] shape (min(struct) forces SortAggregate)
-    val cohortKeyed = exploded.join(dfs, Seq("band", "j", "key"))
-      .groupBy(col("simhash"), col("band"))
-      .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
-      .select(col("simhash"), col("band"), col("lvl0").cast("long").as("lvl"),
-        simhashKeyAt(col("lvl0")).as("bkey"))
-    val mergedKeyed = baseKeyed
-      .join(cohort, Seq("simhash", "band"), "left_anti")
-      .unionByName(cohortKeyed)
-    (mergedSigs, mergedKeyed)
-  }
+                        maxDf: Int): (DataFrame, DataFrame) =
+    CappedIndex.merge(CappedIndex.SimHash, baseSigVals, baseKeyed, newSigVals, maxDf)
 
-  /** G15 core: in-flight hamming-space gate — each arriving signature
-    * checked against the STANDING index: `exact_dup` if the 60-bit
-    * signature itself exists in the base, `near_dup` if a DIFFERENT
-    * base signature sits within `maxHamming` (candidates via the
-    * all-level probe — the stored bucket is found at whatever level
-    * its df fit), `unique` otherwise. Base-only priors (the G14
-    * discipline): arriving-vs-arriving duplicates are the nightly
-    * batch job's business. Stream-safe: map-only signature/probe
-    * projection + two stream-static joins against the refreshable
-    * index — no state store, no stream-side aggregation.
+  /** G15 core: in-flight hamming-space gate ([[CappedIndex.gate]]) —
+    * each arriving signature checked against the STANDING index:
+    * `exact_dup` if the 60-bit signature itself exists in the base,
+    * `near_dup` if a DIFFERENT base signature sits within `maxHamming`
+    * (candidates via the all-level probe — the stored bucket is found
+    * at whatever level its df fit), `unique` otherwise. Base-only
+    * priors (the G14 discipline): arriving-vs-arriving duplicates are
+    * the nightly batch job's business.
     */
   def hammingGateRows(spark: SparkSession, querySigs: DataFrame,
                       baseSigVals: DataFrame, baseKeyed: DataFrame,
-                      maxHamming: Int): DataFrame = {
-    val q = querySigs.select(col("q_id"), col("simhash"))
-    val exact = baseSigVals.select(col("simhash")).distinct()
-      .withColumn("ex", lit(1L))
-    val nearSigs = hammingProbeKeys(spark, q.select(col("simhash")))
-      .join(baseKeyed, Seq("band", "lvl", "bkey"))
-      .select(col("qs"), col("simhash").as("bs"))
-      .distinct()
-      .filter(col("qs") =!= col("bs") &&
-        bit_count(col("qs").bitwiseXOR(col("bs"))).cast("long") <= maxHamming)
-      .select(col("qs").as("simhash")).distinct()
-      .withColumn("nr", lit(1L))
-    q.join(exact, Seq("simhash"), "left")
-      .join(nearSigs, Seq("simhash"), "left")
-      .select(col("q_id"),
-        when(col("ex").isNotNull, "exact_dup")
-          .when(col("nr").isNotNull, "near_dup")
-          .otherwise("unique").as("verdict"))
-      .withColumn("keep", when(col("verdict") === "unique", 1L).otherwise(0L))
-  }
+                      maxHamming: Int): DataFrame =
+    CappedIndex.gate(CappedIndex.SimHash.within(maxHamming),
+      querySigs.select(col("q_id"), col("simhash")), "q_id", baseSigVals, baseKeyed)
 
   /** F4-scale clusters: O(n)-output keep/drop decisions instead of
-    * Ω(n²) pairs (VERDICT r2 #1b). Star clustering, single pass: each
-    * signature group's representative is its min doc_id; a group whose
-    * rep has a smaller hamming-≤-max neighbour rep points at the
-    * smallest such rep (one-step min propagation — chains are NOT
-    * transitively merged; deterministic, and the oracle applies the
-    * same rule). Output: (doc_id, cluster_id, keep) for every doc,
-    * keep = 1 iff doc_id == cluster_id.
+    * Ω(n²) pairs (VERDICT r2 #1b) — [[CappedIndex.clusters]]' star
+    * clustering over hamming-≤-max signature groups. Output: (doc_id,
+    * cluster_id, keep) for every doc, keep = 1 iff doc_id == cluster_id.
     */
   def simhashClusters(spark: SparkSession, docs: DataFrame,
                       maxHamming: Int, maxDf: Int): DataFrame = {
+    // a null-text doc has a null signature: its own singleton cluster
+    // (the contract is one row per doc; null sigs carry no similarity
+    // evidence)
     val sim = simhash(spark, docs).cachedOnce
-    // groups: referenced by the rep join and the final assignment
-    val groups = sim.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep")).cachedOnce
-    val sigPairs = cappedSigPairs(spark, groups.select("simhash"), maxHamming, maxDf)
-    // orient each sig pair by rep order; the larger rep's group gets a
-    // root candidate — min over candidates is the cluster id
-    val oriented = sigPairs
-      .join(groups.as("g1"), col("s1") === col("g1.simhash"))
-      .join(groups.as("g2"), col("s2") === col("g2.simhash"))
-      .select(
-        when(col("g1.rep") < col("g2.rep"), col("s2")).otherwise(col("s1")).as("simhash"),
-        least(col("g1.rep"), col("g2.rep")).as("cand"))
-    val roots = oriented.groupBy(col("simhash")).agg(min(col("cand")).as("root"))
-    val clusters = groups.join(roots, Seq("simhash"), "left")
-      .select(col("simhash"), coalesce(col("root"), col("rep")).as("cluster_id"))
-    // LEFT join + coalesce: a null-text doc has a null signature, which
-    // an inner join would silently DROP from the output — it becomes
-    // its own singleton cluster instead (the contract is one row per
-    // doc; null sigs carry no similarity evidence)
-    sim.join(clusters, Seq("simhash"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"),
-        when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L).as("keep"))
-      .orderBy(col("doc_id"))
+    CappedIndex.clusters(CappedIndex.SimHash.within(maxHamming), sim, sim, maxDf)
   }
 
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int): DataFrame = {

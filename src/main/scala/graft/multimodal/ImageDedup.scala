@@ -5,13 +5,14 @@ import java.awt.image.BufferedImage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.CappedIndex
 import graft.multimodal.BinaryPipeline.{DecodeBatchSize, MediaRecord}
 
 /** Image near-duplicate detection — the multimodal × dedup bridge
   * (VERDICT r5 #3): a perceptual hash computed from DECODED rasters in
   * the same partition-preserving batched decode stage as
   * [[BinaryPipeline]], feeding the EXISTING df-capped hamming band
-  * machinery ([[graft.dedup.Dedup.cappedPairsFromSigs]]) and cluster
+  * machinery ([[graft.dedup.CappedIndex]]) and cluster
   * rule — no new join shapes, the image family rides the text family's
   * 100 TB path.
   *
@@ -99,8 +100,8 @@ object ImageDedup {
     */
   def phashPairs(spark: SparkSession, media: Dataset[MediaRecord],
                  maxHamming: Int, maxDf: Int): DataFrame =
-    graft.dedup.Dedup.cappedPairsFromSigs(spark, imageHashes(media),
-      "media_id", maxHamming, maxDf)
+    CappedIndex.pairs(CappedIndex.SimHash.within(maxHamming), imageHashes(media),
+      "media_id", maxDf).orderBy(col("x"), col("y"))
 
   /** F34: image near-dup SEARCH — ranked hamming top-k of arriving
     * images against the standing corpus's perceptual-hash index

@@ -19,7 +19,7 @@ object LlmQueries {
   val JaccardMaxDf = 5
   val SimhashMaxHamming = 6
   // band buckets holding more distinct sigs than this are re-keyed with
-  // 5 more simhash bits (Dedup.cappedBandKeys): bounds per-bucket join
+  // 5 more simhash bits (CappedIndex.SimHash): bounds per-bucket join
   // work at maxDf²/2 pairs regardless of corpus size. 64 exercises the
   // widening at sf0.01 (max raw bucket 97) while keeping sf0.01 pair
   // recall at 0.85 vs exact F4.
@@ -230,7 +230,7 @@ object LlmQueries {
     Dedup.minhashLsh(spark, Tables.documents(spark, dir))
 
   // band buckets holding more distinct SIGNATURES than this are re-keyed
-  // with extra signature slots (Dedup.cappedMinhashKeys) — the MinHash
+  // with extra signature slots (CappedIndex.MinHash) — the MinHash
   // twin of SimhashMaxDf, same per-bucket maxDf²/2 work bound
   val MinhashMaxDf = 64
 

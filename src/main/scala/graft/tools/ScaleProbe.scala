@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.CappedIndex
+
 /** Scale-growth probe for the df-capped candidate generators
   * (SURVEY.md §6): measures, at 1× / 4× / 10× the sf0.1 corpus, the
   * raw vs capped band-bucket density of `dedup_simhash_capped` and the
@@ -61,7 +63,7 @@ object ScaleProbe {
         .groupBy("band", "key").agg(count(lit(1)).as("df"))
         .agg(max("df").as("max_df"), pairSum("df").as("pairs"))
         .head()
-      val capped = graft.dedup.Dedup.cappedBandKeys(spark, sigs, maxDf)
+      val capped = CappedIndex.keys(CappedIndex.SimHash, sigs, maxDf)
         .groupBy("band", "lvl", "bkey").agg(count(lit(1)).as("df"))
         .agg(max("df").as("max_df"), pairSum("df").as("pairs"))
         .head()
@@ -78,7 +80,7 @@ object ScaleProbe {
         .select(col("mh"), graft.dedup.Dedup.minhashSigKey.as("sk"))
         .dropDuplicates("sk").cache()
       val nMhSigs = mhSigs.count()
-      val mhCapped = graft.dedup.Dedup.cappedMinhashKeys(mhSigs, maxDf)
+      val mhCapped = CappedIndex.keys(CappedIndex.MinHash, mhSigs, maxDf)
         .groupBy("band", "lvl", "bkey").agg(count(lit(1)).as("df"))
         .agg(max("df").as("max_df"), pairSum("df").as("pairs"))
         .head()

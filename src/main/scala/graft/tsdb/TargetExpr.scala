@@ -931,27 +931,13 @@ object TargetExpr {
     * query invocation — every bench/verify sample rebuilds it from the
     * parquet inputs (no cross-run reuse).
     */
-  def memoFetch(raw: (String, Long) => DataFrame): (String, Long) => DataFrame =
-    memoFetch(raw, Set.empty)
-
-  /** [[memoFetch]] with a statically-known HOT set — globs the parse
-    * tree references at least twice ([[hotGlobs]]): those checkpoint on
-    * the FIRST request, so no inline copy of their fetch subtree ever
-    * enters the plan. Globs outside the set stay raw on first request
-    * (zero overhead for the once-fetched case — the common simple
-    * query) and only materialize if a repeat request proves reuse
-    * (runtime-derived fetches the static scan cannot see).
-    */
-  def memoFetch(raw: (String, Long) => DataFrame,
-                hot: Set[String]): (String, Long) => DataFrame = {
+  def memoFetch(raw: (String, Long) => DataFrame): (String, Long) => DataFrame = {
     import graft.core.Caching._
     val first = scala.collection.mutable.Map.empty[(String, Long), DataFrame]
     val reused = scala.collection.mutable.Map.empty[(String, Long), DataFrame]
     (glob, shift) => {
       val key = (glob, shift)
-      if (hot.contains(glob))
-        reused.getOrElseUpdate(key, raw(glob, shift).localCheckpoint())
-      else first.get(key) match {
+      first.get(key) match {
         case None =>
           // raw and UNWRAPPED: a single-fetch query keeps its exact
           // pre-memo plan (the pins on gfn_percent_const etc. hold)
@@ -966,24 +952,6 @@ object TargetExpr {
           reused.getOrElseUpdate(key, df.cachedOnce.localCheckpoint())
       }
     }
-  }
-
-  /** Globs the parsed target references MORE THAN ONCE — the static
-    * hot set for [[memoFetch]]. Repeated references are where the
-    * per-reference inline fetch subtree multiplies Catalyst planning
-    * work; a glob fetched once stays on the zero-overhead raw path.
-    */
-  def hotGlobs(target: String): Set[String] = {
-    def globs(e: Expr): Seq[String] = e match {
-      case PathExpr(g) => Seq(g)
-      case CallExpr(_, args) => args.flatMap {
-        case SeriesArg(s) => globs(s)
-        case _ => Nil
-      }
-    }
-    globs(parse(target)).groupBy(identity).collect {
-      case (g, occ) if occ.size >= 2 => g
-    }.toSet
   }
 
   /** Parse + evaluate in one step (fixed-window fetch). */

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{CappedIndex, Dedup}
 import graft.similarity.Ann
 import graft.text.{Analysis, TextFns}
 
@@ -423,9 +423,10 @@ class LlmSpec extends SparkSpec {
     assert(cover >= 0.95, s"doc coverage $cover too low")
   }
 
-  test("simhash widening keys: nested prefixes, level-9 injective per band (F4-capped)") {
-    // the df-monotonicity and termination arguments of cappedBandKeys
-    // rest on these two invariants of simhashKeyExpr
+  test("widening keys: nested prefixes, level-9 injective per band (F3c, F4-capped)") {
+    // the df-monotonicity and termination arguments of CappedIndex rest
+    // on these two invariants of both schedules, simhashKeyExpr and
+    // minhashKeySlots
     import org.apache.spark.sql.functions.{col, expr}
     val rnd = new scala.util.Random(42)
     val sigs = Seq.fill(2000)(rnd.nextLong() & ((1L << 60) - 1)).distinct
@@ -443,6 +444,43 @@ class LlmSpec extends SparkSpec {
     val n9 = df.select(col("band"), col(s"k${Dedup.simhashWidenLevels}")).distinct().count()
     assert(n9 == 4L * sigs.length)
     df.unpersist()
+    // MinHash: slot lists are nested prefixes — the property
+    // CappedIndex.MinHash's single dynamic slice relies on
+    val (nb, n) = (Dedup.minhashNBands, Dedup.minhashWidenLevels)
+    for (b <- 0 until nb; j <- 0 to n)
+      assert(Dedup.minhashKeySlots(b, j) == Dedup.minhashKeySlots(b, n).take(3 + j),
+        s"band $b level $j")
+    // level 9 covers all 12 slots: (band, k9) is injective over sigs
+    // (slot values from a small range, so sigs share most band keys)
+    val mhs = Seq.fill(2000)(Seq.fill(Dedup.minhashParams.size)(rnd.nextInt(8).toLong)).distinct
+    val mk9 = mhs.toDF("mh")
+      .select(col("mh"), explode(array((0 until nb).map(lit(_)): _*)).as("band"))
+      .select(col("band"), CappedIndex.MinHash.key(n).as("k9"))
+    assert(mk9.distinct().count() == nb.toLong * mhs.length)
+  }
+
+  test("capped entry points reject maxDf < 1 loudly (F3c, F4-capped, F20)") {
+    // maxDf = 0 would null every bucket's level choice and silently
+    // drop all candidates; every capped entry point must refuse it
+    import graft.multimodal.{BinaryPipeline, ImageDedup}
+    val d = docs
+    val sims = Dedup.simhash(spark, d).select($"doc_id".as("match_id"), $"simhash")
+    val queries = sims.select($"match_id".as("q_id"), $"simhash")
+    val (mSigs, mKeyed) = Dedup.incrementalIndex(spark, d, 64)
+    val (hSigs, hKeyed) = Dedup.hammingIndex(spark, sims.select($"simhash"), 64)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "minhashClusters" -> (() => Dedup.minhashClusters(spark, d, 0)),
+      "minhashIncremental" -> (() => Dedup.minhashIncremental(spark, d, d, 0)),
+      "indexMerge" -> (() => Dedup.indexMerge(spark, mSigs, mKeyed, mSigs, 0)),
+      "simhashClusters" -> (() => Dedup.simhashClusters(spark, d, 6, 0)),
+      "hammingSearch" -> (() => Dedup.hammingSearch(spark, sims, queries, 3, 6, 0)),
+      "hammingIndexMerge" -> (() => Dedup.hammingIndexMerge(spark, hSigs, hKeyed, hSigs, 0)),
+      "phashPairs" -> (() => ImageDedup.phashPairs(spark,
+        spark.emptyDataset[BinaryPipeline.MediaRecord], 6, 0)))
+    try for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("maxDf must be >= 1 (got 0)"), s"$name: ${e.getMessage}")
+    } finally spark.catalog.clearCache()
   }
 
   test("capped simhash keying: hard per-bucket df bound under adversarial collisions (F4c)") {
@@ -456,7 +494,7 @@ class LlmSpec extends SparkSpec {
     }.distinct.toDF("simhash")
     val nSigs = sigs.count()
     val maxDf = 4
-    val keyed = Dedup.cappedBandKeys(spark, sigs, maxDf)
+    val keyed = CappedIndex.keys(CappedIndex.SimHash, sigs, maxDf)
     val hottest = keyed.groupBy(col("band"), col("lvl"), col("bkey"))
       .count().agg(max(col("count"))).head.getLong(0)
     assert(hottest <= maxDf, s"bucket of $hottest > cap $maxDf")
@@ -465,10 +503,10 @@ class LlmSpec extends SparkSpec {
     assert(keyed.count() == 4L * nSigs)
     // drop-only at sig level: capped pairs ⊆ the level-0 band join
     // (= the keying at a cap nothing overflows)
-    val capped = Dedup.cappedSigPairs(spark, sigs, maxHamming = 60, maxDf)
+    val capped = CappedIndex.sigPairs(CappedIndex.SimHash.within(60), sigs, maxDf)
       .select(col("s1"), col("s2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val raw = Dedup.cappedSigPairs(spark, sigs, maxHamming = 60, maxDf = 1000000)
+    val raw = CappedIndex.sigPairs(CappedIndex.SimHash.within(60), sigs, maxDf = 1000000)
       .select(col("s1"), col("s2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped.subsetOf(raw))
@@ -1381,7 +1419,7 @@ class LlmSpec extends SparkSpec {
     val distinctSigs = Dedup.minhashSigRows(adv)
       .select(col("mh"), Dedup.minhashSigKey.as("sk"))
       .dropDuplicates("sk")
-    val keyed = Dedup.cappedMinhashKeys(distinctSigs, maxDf)
+    val keyed = CappedIndex.keys(CappedIndex.MinHash, distinctSigs, maxDf)
     // THE bound the whole scale argument rests on: no final bucket
     // holds more than maxDf distinct signatures, on ANY corpus
     val hottest = keyed.groupBy(col("band"), col("lvl"), col("bkey"))
@@ -1415,7 +1453,7 @@ class LlmSpec extends SparkSpec {
     val distinctSigs = Dedup.minhashSigRows(adv)
       .select(col("mh"), Dedup.minhashSigKey.as("sk"))
       .dropDuplicates("sk")
-    val keyed = Dedup.cappedMinhashKeys(distinctSigs, maxDf = 4)
+    val keyed = CappedIndex.keys(CappedIndex.MinHash, distinctSigs, maxDf = 4)
       .join(distinctSigs, Seq("sk"))
     assert(keyed.filter(col("lvl") > 0).count() > 0) // widening engaged
     def expectedKey(b: Int, j: Int) = md5(concat_ws(",",
@@ -1432,7 +1470,7 @@ class LlmSpec extends SparkSpec {
     val sigs = (0 until 500).map { _ =>
       lows(rnd2.nextInt(3)) | ((rnd2.nextLong() & 0x7FFFL) << 45)
     }.distinct.toDF("simhash")
-    val skeyed = Dedup.cappedBandKeys(spark, sigs, maxDf = 4)
+    val skeyed = CappedIndex.keys(CappedIndex.SimHash, sigs, maxDf = 4)
     assert(skeyed.filter(col("lvl") > 0).count() > 0)
     val smismatched = skeyed.filter(
       (0 to Dedup.simhashWidenLevels).map(j =>
