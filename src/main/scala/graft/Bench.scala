@@ -1,78 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, parquet footers, FS cache) so the
-    // first timed query doesn't absorb ~10s of one-time startup cost.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      graft.core.Tables.metrics(spark, sfDir).count()
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warm(spark, sfDir)
     // Sorted order → stable per-query attribution across rounds.
     // noop write executes the FULL plan (count() lets Catalyst prune
     // projects/sorts, understating materialization cost).
-    // Each query is timed repeatedly and reported as the per-query MIN:
-    // one-shot timings under background machine load swung >10× per
-    // query in r2 and made the artifact unusable for regression
-    // detection. Sampling continues until two post-warmup samples agree
-    // within 10% (the FIRST sample is excluded from the convergence
-    // test — it reliably carries this query's codegen/JIT warmup, and
-    // two warmup-slow samples otherwise "converge" on a plateau 2×
-    // above the plan's real time). Limits: ≤5 samples, ≥2 always,
-    // stop adding once cumulative time passes 60 s. All samples ship
-    // in target/bench.json.
-    // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (dev loops)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // SPARK_GRAFT_MAX_SAMPLES caps repeat samples (default 5) — the
-    // sf1 honesty pass runs the whole surface at 10× data, where the
-    // standard convergence loop would cost hours for numbers that only
-    // feed a ratio table
-    val maxSamples = sys.env.getOrElse("SPARK_GRAFT_MAX_SAMPLES", "5").toInt
+    // Each query is timed by Harness.samples and reported as its MIN;
+    // all samples ship in target/bench.json.
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => Harness.wanted(n) }
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val samples = selected.flatMap { case (name, fn) =>
-      val times = scala.collection.mutable.ArrayBuffer[Double]()
-      var budgetNs = 60e9
-      var broken = false
-      def converged: Boolean = {
-        val s = times.drop(1).sorted
-        s.size >= 2 && s(1) <= s(0) * 1.10
-      }
-      while (!broken && times.size < maxSamples &&
-             (times.size < math.min(2, maxSamples) ||
-               (budgetNs > 0 && !converged))) {
-        val t0 = System.nanoTime()
-        // a failing query must be VISIBLE and excluded — timing the
-        // exception path would report a healthy-looking near-zero
-        // sample for a broken query (VERDICT r3 #2)
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = System.nanoTime() - t0
-          budgetNs -= dt
-          times += dt / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          broken = true
-        }
-        // drop cached intermediates AFTER each sample (outside the
-        // timed section): a repeat must re-run the full plan, not read
-        // the previous sample's cache — and a 52-query session must not
-        // accumulate executor storage (VERDICT r2 cache hygiene)
-        spark.catalog.clearCache()
-        // RDD-level persists are not covered by catalog.clearCache
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // a failing query must be VISIBLE and excluded (VERDICT r3 #2)
+      val times = try Some(Harness.samples(spark) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        None
       }
       // single-JVM contamination fix (VERDICT r12 #2): 277 queries in one
       // JVM accumulate heap garbage (broadcasts, codegen classes, fixture
@@ -81,7 +28,8 @@ object Bench {
       // A full GC between queries — outside every timed region — gives
       // each query the same clean-heap start an isolated run would.
       System.gc()
-      if (broken) { failed += name; None } else Some(name -> times.toSeq)
+      if (times.isEmpty) failed += name
+      times.map(name -> _)
     }
     val results = samples.map { case (n, ts) => n -> ts.min }
     // compact mins (3 dp) so the summary line stays under the driver's
@@ -130,7 +78,7 @@ object Bench {
     // above and, with all samples, in target/bench.json). Additions to
     // output only — the timing methodology is unchanged.
     val summary =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":$fl,"sf":"$sfName","cpus":$cpus,"queries_file":"target/bench.json"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":$fl,"sf":"$sfName","cpus":${Harness.cpus},"queries_file":"target/bench.json"}"""
     println(summary)
     spark.stop()
   }

@@ -1,58 +1,18 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
 /** Per-query profile: planning time vs execution time, job/stage/task
   * counts, shuffle bytes — the §1 "where is the time going" measurement
   * the bench's single wall number can't answer. Usage:
   *   runMain graft.tools.ProfileBench <q1,q2,...> [dataDir]
-  * Env: SPARK_GRAFT_CPUS (default 4).
   */
 object ProfileBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileBench <q1,q2,...> [dataDir]")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // session warmup, mirroring Bench
-    try {
-      spark.read.parquet(s"$dir/lineitem.parquet").count()
-      graft.core.Tables.metrics(spark, dir).count()
-    } catch { case _: Throwable => () }
-
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val shufWrite = new AtomicLong(0L)
-    val shufRead = new AtomicLong(0L)
-    val taskTime = new AtomicLong(0L)   // summed task run time (ms)
-    val gcTime = new AtomicLong(0L)     // summed JVM GC time inside tasks (ms)
-    val deserTime = new AtomicLong(0L)  // task deserialization (ms)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        shufWrite.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(s.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (t.taskMetrics != null) {
-          taskTime.addAndGet(t.taskMetrics.executorRunTime)
-          gcTime.addAndGet(t.taskMetrics.jvmGCTime)
-          deserTime.addAndGet(t.taskMetrics.executorDeserializeTime)
-        }
-      }
-    })
+    val spark = Harness.session()
+    Harness.warm(spark, dir)
+    val listener = Harness.listen(spark)
 
     println(f"${"query"}%-34s ${"plan_s"}%7s ${"run1_s"}%7s ${"run2_s"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"shW_MB"}%7s ${"shR_MB"}%7s ${"tsk_s"}%7s ${"gc_s"}%6s ${"deser_s"}%7s")
     for (name <- names) {
@@ -60,23 +20,22 @@ object ProfileBench {
       val df = graft.SparkEntry.queries(name)(spark, dir)
       df.queryExecution.executedPlan // force analysis+optimization+physical planning
       val tPlan = (System.nanoTime() - t0) / 1e9
-      jobs.set(0); stages.set(0); tasks.set(0); shufWrite.set(0); shufRead.set(0)
-      taskTime.set(0); gcTime.set(0); deserTime.set(0)
+      listener.reset()
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val tRun = (System.nanoTime() - t1) / 1e9
-      Thread.sleep(200) // let the listener bus drain before reading counters
-      val (j1, s1, k1) = (jobs.get, stages.get, tasks.get)
-      val (w1, r1) = (shufWrite.get / 1e6, shufRead.get / 1e6)
-      val (tt1, gc1, de1) = (taskTime.get / 1e3, gcTime.get / 1e3, deserTime.get / 1e3)
-      spark.catalog.clearCache()
+      val st = listener.stages()
+      val j1 = listener.jobs
+      Harness.clean(spark)
       // second run: steady-state (codegen cached, JIT warm)
       val df2 = graft.SparkEntry.queries(name)(spark, dir)
       val t2 = System.nanoTime()
       df2.write.format("noop").mode("overwrite").save()
       val tRun2 = (System.nanoTime() - t2) / 1e9
-      spark.catalog.clearCache()
-      println(f"$name%-34s $tPlan%7.2f $tRun%7.2f $tRun2%7.2f $j1%5d $s1%5d $k1%6d $w1%7.1f $r1%7.1f $tt1%7.1f $gc1%6.1f $de1%7.1f")
+      Harness.clean(spark)
+      def tot(f: Harness.Stage => Double) = st.map(f).sum
+      println(f"$name%-34s $tPlan%7.2f $tRun%7.2f $tRun2%7.2f $j1%5d ${st.size}%5d ${st.map(_.tasks).sum}%6d " +
+        f"${tot(_.shWMB)}%7.1f ${tot(_.shRMB)}%7.1f ${tot(_.runS)}%7.1f ${tot(_.gcS)}%6.1f ${tot(_.deserS)}%7.1f")
     }
     spark.stop()
   }

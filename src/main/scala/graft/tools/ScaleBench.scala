@@ -18,11 +18,9 @@ import graft.ops.LlmQueries
   * to parquet first — so the timed plans start from a real pruned scan
   * and the replication transform is never inside the timed section —
   * then each family runs as a noop write (full plan, no count-pruning),
-  * min of ≤4 samples with the first sample excluded from the 10%
-  * convergence test (it carries codegen/JIT warmup), cache cleared
-  * between samples. The decontamination eval side stays FIXED at the
-  * base-corpus sample (a benchmark does not grow with the crawl); only
-  * the corpus side scales.
+  * timed by Bench's min-of-samples loop (`Harness.samples`). The
+  * decontamination eval side stays FIXED at the base-corpus sample (a
+  * benchmark does not grow with the crawl); only the corpus side scales.
   *
   * Output: one JSON line per (family, copies) and a final compact
   * per-family summary line {"family":{"x1":s,"x4":s,"x10":s}, ...}.
@@ -85,29 +83,8 @@ object ScaleBench {
       concat(lit("cpu;dc=dc"), (col("id") % 20).cast("string"),
         lit(";host=h"), col("id").cast("string")).as("path"))
 
-  private def timeNoop(spark: SparkSession, mk: () => DataFrame): Double = {
-    val times = scala.collection.mutable.ArrayBuffer[Double]()
-    def converged: Boolean = {
-      val s = times.drop(1).sorted
-      s.size >= 2 && s(1) <= s(0) * 1.10
-    }
-    while (times.size < 4 && (times.size < 2 || !converged)) {
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      times += (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-    }
-    times.min
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val base = graft.core.Tables.documents(spark, dir)
     val ebase = graft.core.Tables.embeddings(spark, dir)
@@ -758,7 +735,9 @@ object ScaleBench {
       def f2(v: Double): String =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
       for ((name, mk) <- families if only.isEmpty || only(name)) {
-        val sec = timeNoop(spark, mk)
+        val sec = Harness.samples(spark) {
+          mk().write.format("noop").mode("overwrite").save()
+        }.min
         out.getOrElseUpdate(name,
           scala.collection.mutable.LinkedHashMap[Int, Double]())(copies) = sec
         println(s"""{"family":"$name","copies":$copies,"docs":$nDocs,"sec":${f2(sec)}}""")

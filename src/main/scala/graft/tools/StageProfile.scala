@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
 
 /** Per-STAGE time attribution for one query — the §1 drill-down below
@@ -10,51 +7,25 @@ import scala.collection.mutable
   * task time, GC, deserialize, shuffle bytes. Stage names carry the
   * call site, so the row maps back to an operator. Usage:
   *   runMain graft.tools.StageProfile <query> [dataDir]
-  * Env: SPARK_GRAFT_CPUS (default 4).
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProfile <query> [dataDir]")
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
-      spark.read.parquet(s"$dir/lineitem.parquet").count()
-      graft.core.Tables.metrics(spark, dir).count()
-    } catch { case _: Throwable => () }
-
-    case class Row(id: Int, nTasks: Int, runS: Double, gcS: Double,
-                   deserS: Double, shWMB: Double, shRMB: Double, name: String)
-    val rows = mutable.ArrayBuffer.empty[Row]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        rows.synchronized {
-          rows += Row(s.stageInfo.stageId, s.stageInfo.numTasks,
-            m.executorRunTime / 1e3, m.jvmGCTime / 1e3,
-            m.executorDeserializeTime / 1e3,
-            m.shuffleWriteMetrics.bytesWritten / 1e6,
-            m.shuffleReadMetrics.totalBytesRead / 1e6,
-            s.stageInfo.name.take(120))
-        }
-      }
-    })
+    val spark = Harness.session()
+    Harness.warm(spark, dir)
+    val listener = Harness.listen(spark)
 
     val df = graft.SparkEntry.queries(name)(spark, dir)
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(400)
+    val rows = listener.stages()
     println(f"== $name wall=$wall%.2f s, ${rows.size} stages (by summed task run time) ==")
     println(f"${"stage"}%5s ${"tasks"}%5s ${"run_s"}%8s ${"gc_s"}%6s ${"deser_s"}%7s ${"shW_MB"}%7s ${"shR_MB"}%7s  name")
     for (r <- rows.sortBy(-_.runS))
-      println(f"${r.id}%5d ${r.nTasks}%5d ${r.runS}%8.2f ${r.gcS}%6.1f ${r.deserS}%7.1f ${r.shWMB}%7.2f ${r.shRMB}%7.2f  ${r.name}")
+      println(f"${r.id}%5d ${r.tasks}%5d ${r.runS}%8.2f ${r.gcS}%6.1f ${r.deserS}%7.1f ${r.shWMB}%7.2f ${r.shRMB}%7.2f  ${r.name}")
 
     // operator-level attribution: the executed (AQE-final) plan with
     // each operator's accumulated SQL metrics — maps the hot stage back

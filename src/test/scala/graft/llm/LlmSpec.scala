@@ -1723,7 +1723,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("fuzzy decontamination catches a perturbed copy exact 5-grams miss (F15c)") {
-    // fixture found by tools/FuzzyProbe (seedless md5 arithmetic, so
+    // fixture recorded in SURVEY.md under F15c (seedless md5 arithmetic, so
     // "measured, then pinned" holds forever): a 24-token doc whose
     // adjacent-swap perturbation at positions (5,6), (11,12), (17,18)
     // breaks every 5-token window except starts 0 and 19 — 2 shared

@@ -317,7 +317,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("capped minhash consumers share the session-cached keyed table") {
-    // the 40-rows/sig keyed table (cappedMinhashKeys) and the signature
+    // the 40-rows/sig keyed table (CappedIndex.keys) and the signature
     // table are cachedOnce at ONE plan shape — so in a session that
     // runs several minhash consumers (capped pairs, then clusters), the
     // second consumer's plan must READ the in-memory tables instead of
