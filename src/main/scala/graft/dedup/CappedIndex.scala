@@ -86,7 +86,7 @@ object CappedIndex {
     * every bucket (df ≥ 1 always), silently dropping all candidates
     * instead of falling back to the bijective top level.
     */
-  private def checkCap(maxDf: Int): Unit =
+  private[dedup] def checkCap(maxDf: Int): Unit =
     require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
 
   /** One row per signature row per band (map-only). */

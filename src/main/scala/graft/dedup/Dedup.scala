@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caching._
+import graft.functions.FloatDot.dot
 
 import graft.text.TextFns._
 
@@ -52,13 +53,18 @@ object Dedup {
     // join sides + sizes); without the cache each reference re-runs
     // tokenize+explode over the corpus
     val sh = docShingles(docs).cachedOnce
+    jaccardPairs(sh, sh, tau)
+  }
+
+  /** The Jaccard body of the n-gram family: intersections from the
+    * shingle self-join over `postings` (all of `sh`, or its df-capped
+    * part), sizes from the full shingle sets `sh`, union = |A|+|B|−∩.
+    */
+  private def jaccardPairs(sh: DataFrame, postings: DataFrame, tau: Double): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+    selfPairs(postings, Seq("shingle"), "doc_id")
       .groupBy(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
       .agg(count(lit(1)).as("i"))
-    inter
       .join(sizes.as("sa"), col("x") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("y") === col("sb.doc_id"))
       .withColumn("jaccard", col("i") / (col("sa.n") + col("sb.n") - col("i")))
@@ -67,6 +73,25 @@ object Dedup {
       // .xxxx5 boundaries (graft.tsdb.Queries.Eps rationale)
       .select(col("x"), col("y"), round(col("jaccard") - 1e-9, 4).as("jaccard"))
       .orderBy(col("x"), col("y"))
+  }
+
+  /** The posting self-join every plain family pairs through: each
+    * (a, b) of `rows` agreeing on all `keys` with a.`id` < b.`id`, one
+    * row per shared key (columns stay reachable as a.* and b.*).
+    */
+  private def selfPairs(rows: DataFrame, keys: Seq[String], id: String): DataFrame =
+    rows.as("a").join(rows.as("b"),
+      keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+
+  /** The df cap of the plain families (no widening): the `keys` held
+    * by at most `maxDf` rows of the per-id-distinct `rows`, so a row
+    * count is the key's doc frequency.
+    */
+  private def rareKeys(rows: DataFrame, keys: Seq[String], maxDf: Int): DataFrame = {
+    CappedIndex.checkCap(maxDf)
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select(keys.map(col): _*)
   }
 
   /** Scale-path variant of ngramJaccard: shingles appearing in more
@@ -80,22 +105,7 @@ object Dedup {
   def ngramJaccardCapped(docs: DataFrame, tau: Double, maxDf: Int): DataFrame = {
     // four plan references (df counts, both capped sides, sizes)
     val sh = docShingles(docs).cachedOnce
-    val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("shingle"))
-    val shCapped = sh.join(rare, "shingle")
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = shCapped.as("a")
-      .join(shCapped.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.as("sa"), col("x") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("y") === col("sb.doc_id"))
-      .withColumn("jaccard", col("i") / (col("sa.n") + col("sb.n") - col("i")))
-      .filter(col("jaccard") >= tau)
-      .select(col("x"), col("y"), round(col("jaccard") - 1e-9, 4).as("jaccard"))
-      .orderBy(col("x"), col("y"))
+    jaccardPairs(sh, sh.join(rareKeys(sh, Seq("shingle"), maxDf), "shingle"), tau)
   }
 
   /** F15: train/eval decontamination — (corpus doc, eval doc) pairs
@@ -127,9 +137,7 @@ object Dedup {
       .cachedOnce
     // per-shingle doc counts over `hit` == full-corpus df for these
     // shingles (the semijoin dropped no corpus row of an eval shingle)
-    val rare = hit.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("shingle"))
-    hit.join(broadcast(rare), "shingle")
+    hit.join(broadcast(rareKeys(hit, Seq("shingle"), maxDf)), "shingle")
       .join(broadcast(ev), "shingle")
       .groupBy(col("doc_id"), col("eval_id"))
       .agg(count(lit(1)).as("hits"))
@@ -306,12 +314,7 @@ object Dedup {
       .select(col("doc_id"), graft.text.TextFns.h60(col("shingle")).as("g"))
       .distinct()
       .cachedOnce
-    val rare = sh.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("g"))
-    val shc = sh.join(rare, "g")
-    shc.as("a")
-      .join(shc.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+    selfPairs(sh.join(rareKeys(sh, Seq("g"), maxDf), "g"), Seq("g"), "doc_id")
       .groupBy(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
       .agg(count(lit(1)).as("n_grams"))
       .orderBy(col("x"), col("y"))
@@ -357,13 +360,8 @@ object Dedup {
     // df cap on per-doc-DISTINCT grams (same stop-gram rule as
     // substringPairs); positions of surviving grams join after
     val pg = positionedGrams(docs, w).cachedOnce
-    val rare = pg.select(col("doc_id"), col("g")).distinct()
-      .groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("g"))
-    val pgc = pg.join(rare, "g")
-    val hits = pgc.as("a")
-      .join(pgc.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+    val rare = rareKeys(pg.select(col("doc_id"), col("g")).distinct(), Seq("g"), maxDf)
+    val hits = selfPairs(pg.join(rare, "g"), Seq("g"), "doc_id")
       .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"),
         col("a.p").as("pa"), (col("a.p") - col("b.p")).as("diag"))
       .distinct()
@@ -403,9 +401,7 @@ object Dedup {
       posexplode(graft.text.TextFns.tokens(col("text"))).as(Seq("p", "tok")))
     val pg = positionedGrams(docs, w).cachedOnce
     val shw = pg.select(col("doc_id"), col("g")).distinct()
-    val rare = shw.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("g"))
-    val gmin = shw.join(rare, "g")
+    val gmin = shw.join(rareKeys(shw, Seq("g"), maxDf), "g")
       .groupBy(col("g")).agg(min(col("doc_id")).as("gm"))
     val dst = pg.join(gmin, "g")
       .filter(col("gm") < col("doc_id"))
@@ -453,11 +449,7 @@ object Dedup {
     // cache the per-doc band rows (nBands rows/doc — tiny): the self-join
     // otherwise evaluates the whole signature aggregation twice, because
     // the broadcast side's Exchange can't be reused against the shuffle side
-    val bands = minhashBands(docs).cachedOnce
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
+    selfPairs(minhashBands(docs).cachedOnce, Seq("band", "bh"), "doc_id")
       .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
       .distinct()
       .orderBy(col("x"), col("y"))
@@ -894,8 +886,6 @@ object Dedup {
     * oracle's DOUBLE[] list_dot_product.
     */
   def embedCosinePairs(vecs: DataFrame, tau: Double): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.FloatDot.dot(a, b)
     val n = vecs.select(col("vec_id"), col("embedding").as("e"),
       sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -916,8 +906,6 @@ object Dedup {
   def embedCosineLshPairs(vecs: DataFrame, tau: Double, nPlanes: Int,
                           dim: Int, nTables: Int = 4): DataFrame = {
     import graft.similarity.Ann
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.FloatDot.dot(a, b)
     val pls = Ann.planes(nPlanes, dim)
     // candidate join carries ONLY ids — the bucket self-join can fan out
     // to many candidate rows, and shuffling 16-byte id pairs instead of
@@ -925,20 +913,26 @@ object Dedup {
     // AFTER the (x,y) dedup, from a per-doc (so broadcastable) side
     val b = vecs.select(col("vec_id"),
       posexplode(Ann.tableBuckets(col("embedding"), pls, nTables)).as(Seq("t", "b")))
-    val cand = b.as("a").join(b.as("b"),
-        col("a.t") === col("b.t") && col("a.b") === col("b.b") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val cand = selfPairs(b, Seq("t", "b"), "vec_id")
       .select(col("a.vec_id").as("x"), col("b.vec_id").as("y"))
       .dropDuplicates("x", "y")
+    withCosine(cand, vecs)
+      .filter(col("cos") >= tau)
+      .select(col("x"), col("y"), round(col("cos") - 1e-9, 4).as("cos"))
+      .orderBy(col("x"), col("y"))
+  }
+
+  /** (x, y, cos) over id-only candidate pairs: each side's embedding
+    * and norm re-join per id AFTER the pair stage, so the candidate
+    * shuffle never carries embedding payloads.
+    */
+  private def withCosine(cand: DataFrame, vecs: DataFrame): DataFrame = {
     val n = vecs.select(col("vec_id"), col("embedding").as("e"),
       sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     cand
       .join(n.as("na"), col("x") === col("na.vec_id"))
       .join(n.as("nb"), col("y") === col("nb.vec_id"))
       .withColumn("cos", dot(col("na.e"), col("nb.e")) / (col("na.nrm") * col("nb.nrm")))
-      .filter(col("cos") >= tau)
-      .select(col("x"), col("y"), round(col("cos") - 1e-9, 4).as("cos"))
-      .orderBy(col("x"), col("y"))
   }
 
   /** F28: semantic dedup, the cluster-then-prune shape of SemDeDup
@@ -983,23 +977,16 @@ object Dedup {
     */
   private[graft] def semanticClustersAssigned(vecs: DataFrame, tau: Double,
                                               assignment: DataFrame): DataFrame = {
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.FloatDot.dot(a, b)
     // the (vec_id, cent_id) assignment feeds three consumers (both
     // sides of the cell self-join + the output projection) — cache the
     // 16-byte/row table once instead of re-running the corpus×codebook
     // scoring per reference (the cached-MinHash-signature discipline;
     // at 100 TB this narrow table is what you'd checkpoint)
     val assigned = assignment.select(col("vec_id"), col("cent_id")).cachedOnce
-    val cand = assigned.as("ja").join(assigned.as("jb"),
-        col("ja.cent_id") === col("jb.cent_id") && col("ja.vec_id") < col("jb.vec_id"))
-      .select(col("ja.vec_id").as("x"), col("jb.vec_id").as("y"))
-    val n = vecs.select(col("vec_id"), col("embedding").as("e"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    val pairs = cand
-      .join(n.as("na"), col("x") === col("na.vec_id"))
-      .join(n.as("nb"), col("y") === col("nb.vec_id"))
-      .filter(dot(col("na.e"), col("nb.e")) / (col("na.nrm") * col("nb.nrm")) >= tau)
+    val cand = selfPairs(assigned, Seq("cent_id"), "vec_id")
+      .select(col("a.vec_id").as("x"), col("b.vec_id").as("y"))
+    val pairs = withCosine(cand, vecs)
+      .filter(col("cos") >= tau)
       .select(col("x"), col("y"))
       // clusterize symmetrizes the edge list (two projections of this
       // plan) — cache the 16-byte/row pair table, not the cosine work
@@ -1161,20 +1148,15 @@ object Dedup {
   }
 
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int): DataFrame = {
-    import spark.implicits._
     // cache per-doc band rows (4/doc): without it the self-join evaluates
-    // the 60-bit-sum aggregation twice (broadcast side can't reuse the
-    // shuffle side's exchange)
-    val sim = simhash(spark, docs)
-    val bandIdx = broadcast(spark.range(4).toDF("band"))
-    val bands = sim.crossJoin(bandIdx)
-      .select(col("doc_id"), col("simhash"), col("band"),
-        expr("(simhash >> cast(band*15 AS int)) & 32767").as("bv"))
+    // the signature pass twice (broadcast side can't reuse the shuffle
+    // side's exchange)
+    val bands = simhash(spark, docs)
+      .select(col("doc_id"), col("simhash"),
+        posexplode(array((0 until 4).map(b =>
+          shiftright(col("simhash"), b * 15).bitwiseAND(32767L)): _*)).as(Seq("band", "bv")))
       .cachedOnce
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
+    selfPairs(bands, Seq("band", "bv"), "doc_id")
       .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1362,10 +1344,16 @@ object Dedup {
     */
   def cdcChunkIndex(payloads: DataFrame,
                     maskBits: Int = CdcBytesMaskBits): DataFrame =
-    payloads.select(
+    chunkRows(payloads, maskBits).select(col("chunk_md5"), col("len")).distinct()
+
+  /** One (media_id, chunk_md5, len) row per chunk occurrence: the
+    * compiled gear-hash kernel, map-only over the payload scan.
+    */
+  private def chunkRows(payloads: DataFrame, maskBits: Int): DataFrame =
+    payloads.select(col("media_id"),
         explode(graft.functions.CdcChunks.cdcChunks(col("payload"), maskBits)).as("c"))
-      .select(col("c.chunk_md5").as("chunk_md5"), col("c.length").as("len"))
-      .distinct()
+      .select(col("media_id"), col("c.chunk_md5").as("chunk_md5"),
+        col("c.length").as("len"))
 
   /** G25 batch form: per-payload ingest verdict against the frozen
     * chunk index — each incoming payload chunks map-only (the
@@ -1388,11 +1376,7 @@ object Dedup {
                   maskBits: Int = CdcBytesMaskBits,
                   tau: Double = 0.5): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"cdcGateRows: tau must be in (0,1] (got $tau)")
-    val ch = incoming.select(col("media_id"),
-        explode(graft.functions.CdcChunks.cdcChunks(col("payload"), maskBits)).as("c"))
-      .select(col("media_id"), col("c.chunk_md5").as("chunk_md5"),
-        col("c.length").as("len"))
-    ch.join(index.withColumn("hit", lit(1L)),
+    chunkRows(incoming, maskBits).join(index.withColumn("hit", lit(1L)),
         Seq("chunk_md5", "len"), "left")
       .groupBy(col("media_id"))
       .agg(sum(col("len")).as("total"),
@@ -1426,30 +1410,17 @@ object Dedup {
                     minFrac: Double = 0.5): DataFrame = {
     require(minFrac > 0.0 && minFrac <= 1.0,
       s"minFrac must be in (0,1] (got $minFrac)")
-    val ch = payloads.select(col("media_id"),
-        explode(graft.functions.CdcChunks.cdcChunks(col("payload"), maskBits)).as("c"))
-      .select(col("media_id"), col("c.chunk_md5").as("chunk_md5"),
-        col("c.length").as("len"))
+    val ch = chunkRows(payloads, maskBits)
       .groupBy(col("media_id"), col("chunk_md5"), col("len"))
       .agg(count(lit(1)).as("cnt"))
       .cachedOnce
     val totals = ch.groupBy(col("media_id"))
       .agg(sum(col("len") * col("cnt")).as("total"))
     // df cap over DISTINCT payloads carrying the chunk (boilerplate gate)
-    val rare = ch.groupBy(col("chunk_md5"), col("len"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select(col("chunk_md5"), col("len"))
-    val keyed = ch.join(rare, Seq("chunk_md5", "len"))
-    val shared = keyed.select(col("chunk_md5"), col("len"),
-        col("media_id").as("x"), col("cnt").as("nx"))
-      .join(keyed.select(col("chunk_md5"), col("len"),
-        col("media_id").as("y"), col("cnt").as("ny")),
-        Seq("chunk_md5", "len"))
-      .filter(col("x") < col("y"))
-      .groupBy(col("x"), col("y"))
-      .agg(sum(least(col("nx"), col("ny")) * col("len")).as("shared_bytes"))
-    shared
+    val key = Seq("chunk_md5", "len")
+    selfPairs(ch.join(rareKeys(ch, key, maxDf), key), key, "media_id")
+      .groupBy(col("a.media_id").as("x"), col("b.media_id").as("y"))
+      .agg(sum(least(col("a.cnt"), col("b.cnt")) * col("a.len")).as("shared_bytes"))
       .join(totals.select(col("media_id").as("x"), col("total").as("tx")), Seq("x"))
       .join(totals.select(col("media_id").as("y"), col("total").as("ty")), Seq("y"))
       .filter(col("shared_bytes").cast("double") >=

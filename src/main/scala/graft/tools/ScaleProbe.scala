@@ -90,10 +90,9 @@ object ScaleProbe {
         .agg(coalesce(max("df"), lit(0L)).as("max_df"),
           coalesce(pairSum("df"), lit(0L)).as("pairs")).head()
 
-      // ---- jaccard shingles: raw df fan-out vs df<=cap kept ----
-      val shd = docs.select(col("doc_id"),
-          explode(array_distinct(graft.text.TextFns.shingles3(
-            graft.text.TextFns.tokens(col("text"))))).as("shingle"))
+      // ---- jaccard shingles (the operator's own table): raw df
+      // fan-out vs df<=cap kept ----
+      val shd = graft.dedup.Dedup.docShingles(docs)
         .groupBy("shingle").agg(count(lit(1)).as("df")).cache()
       val jRaw = shd.agg(max("df").as("max_df"), pairSum("df").as("pairs")).head()
       val jCap = shd.filter(col("df") <= jMaxDf)

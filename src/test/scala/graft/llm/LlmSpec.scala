@@ -460,14 +460,16 @@ class LlmSpec extends SparkSpec {
   }
 
   test("capped entry points reject maxDf < 1 loudly (F3c, F4-capped, F20)") {
-    // maxDf = 0 would null every bucket's level choice and silently
-    // drop all candidates; every capped entry point must refuse it
+    // maxDf = 0 would null every bucket's level choice (or empty a
+    // plain family's rare-key set) and silently drop all candidates;
+    // every capped entry point must refuse it
     import graft.multimodal.{BinaryPipeline, ImageDedup}
     val d = docs
     val sims = Dedup.simhash(spark, d).select($"doc_id".as("match_id"), $"simhash")
     val queries = sims.select($"match_id".as("q_id"), $"simhash")
     val (mSigs, mKeyed) = Dedup.incrementalIndex(spark, d, 64)
     val (hSigs, hKeyed) = Dedup.hammingIndex(spark, sims.select($"simhash"), 64)
+    val ev = d.select($"doc_id".as("eval_id"), $"text", lit("b").as("bench_id"))
     val calls: Seq[(String, () => Any)] = Seq(
       "minhashClusters" -> (() => Dedup.minhashClusters(spark, d, 0)),
       "minhashIncremental" -> (() => Dedup.minhashIncremental(spark, d, d, 0)),
@@ -476,7 +478,18 @@ class LlmSpec extends SparkSpec {
       "hammingSearch" -> (() => Dedup.hammingSearch(spark, sims, queries, 3, 6, 0)),
       "hammingIndexMerge" -> (() => Dedup.hammingIndexMerge(spark, hSigs, hKeyed, hSigs, 0)),
       "phashPairs" -> (() => ImageDedup.phashPairs(spark,
-        spark.emptyDataset[BinaryPipeline.MediaRecord], 6, 0)))
+        spark.emptyDataset[BinaryPipeline.MediaRecord], 6, 0)),
+      "ngramJaccardCapped" -> (() => Dedup.ngramJaccardCapped(d, 0.5, 0)),
+      "jaccardClusters" -> (() => Dedup.jaccardClusters(d, 0.5, 0)),
+      "decontaminate" -> (() => Dedup.decontaminate(d, ev, 5, 1, 0)),
+      "decontaminateNormalized" -> (() => Dedup.decontaminateNormalized(d, ev, 5, 1, 0)),
+      "decontaminateMulti" -> (() => Dedup.decontaminateMulti(d, ev, 5, 1, 0)),
+      "substringPairs" -> (() => Dedup.substringPairs(d, 5, 0)),
+      "substringClusters" -> (() => Dedup.substringClusters(d, 5, 0)),
+      "substringSpans" -> (() => Dedup.substringSpans(d, 5, 0)),
+      "substringScrub" -> (() => Dedup.substringScrub(d, 5, 0)),
+      "dedupCdcBytes" -> (() => Dedup.dedupCdcBytes(spark,
+        Dedup.cdcBytePayloads(spark, d), maxDf = 0)))
     try for ((name, call) <- calls) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains("maxDf must be >= 1 (got 0)"), s"$name: ${e.getMessage}")

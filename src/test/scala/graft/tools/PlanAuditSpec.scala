@@ -200,12 +200,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
-  test("dedup_substring family: hashed-gram equi-joins, no nested loops") {
-    for (name <- Seq("dedup_substring", "dedup_substring_spans")) {
+  test("posting self-join family: hash equi-joins, no nested loops") {
+    for (name <- Seq("dedup_substring", "dedup_substring_spans", "dedup_minhash",
+        "dedup_simhash", "dedup_ngram_jaccard", "dedup_ngram_jaccard_capped",
+        "dedup_cdc_bytes", "dedup_embed_cosine_lsh")) {
       val p = plan(name)
-      // the pair source must stay a hash equi-join on the 8-byte gram
-      // key; a nested-loop join here means the gram equality was lost
-      // to an expression rewrite and the corpus goes all-pairs
+      // the pair source must stay a hash equi-join on the posting key
+      // (gram, shingle, band, chunk, LSH cell); a nested-loop join here
+      // means the key equality was lost and the corpus goes all-pairs
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
         s"$name:\n${p.take(2000)}")
       assert(p.contains("Join"), s"$name:\n${p.take(2000)}")
