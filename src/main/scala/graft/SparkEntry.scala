@@ -587,9 +587,9 @@ object SparkEntry {
       |  FROM sums GROUP BY 1)""".stripMargin
 
   /** The df-capped band-widening stage (CappedIndex.keys) as DuckDB
-    * CTEs. The key arithmetic is rendered from the SAME
-    * `Dedup.simhashKeyExpr` strings the Spark plan parses — portable
-    * `>> & | %`/CAST SQL, single source of truth.
+    * CTEs. The key arithmetic is rendered from `Dedup.simhashKeyExpr`
+    * — portable `>> & | %`/CAST SQL — which the Spark plan's compiled
+    * `SimHashKeys` repeats (LlmSpec pins the two equal).
     */
   private val SimhashCappedKeyed: String = {
     val cap = graft.ops.LlmQueries.SimhashMaxDf

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 import graft.core.Caching._
+import graft.functions.{MinHashKeys, SimHashKeys}
 
 /** The df-capped, level-widened band index every near-dup signature
   * family runs on (MinHash, SimHash, and image phash through the
@@ -36,51 +37,36 @@ object CappedIndex {
     *                 signatures are identical
     * @param payload  extra columns the keys are computed from
     * @param bandType type of the `band` column the index carries
-    * @param key      the key of the row's own `band` at level `j`
-    * @param keyAt    the same key at a level COLUMN (the build
-    *                 aggregates min(LEVEL), which hash-aggregates with a
-    *                 map-side combine, and recomputes the chosen level's
-    *                 key afterwards; min(struct(j, key)) would force a
-    *                 SortAggregate)
+    * @param keys     the keys of the row's own `band` at every level, as
+    *                 one array indexed by level (one compiled per-row
+    *                 call; the build explodes it, then recomputes the
+    *                 chosen level's key after its min(LEVEL) aggregate,
+    *                 which hash-aggregates with a map-side combine where
+    *                 min(struct(j, key)) would force a SortAggregate)
     * @param maxHamming optional pair check: signature pairs farther
     *                 apart are dropped and kept ones carry `hamming`
     */
   final case class Family(sig: String, payload: Seq[String], bandType: DataType,
-                          nBands: Int, levels: Int,
-                          key: Int => Column, keyAt: Column => Column,
-                          maxHamming: Option[Int] = None) {
+                          nBands: Int, keys: Column, maxHamming: Option[Int] = None) {
     def cols: Seq[Column] = (sig +: payload).map(col)
     def within(maxHamming: Int): Family = copy(maxHamming = Some(maxHamming))
   }
 
-  /** 12-slot MinHash signatures keyed by `sk` ([[Dedup.minhashSigKey]])
-    * over [[Dedup.minhashKeySlots]]; a CaseWhen over the band values
-    * evaluates only the row's own band. The slot lists are NESTED
-    * PREFIXES (slots(b, j) = slots(b, 9).take(3 + j)), so one dynamic
-    * slice of the band's full 12-slot list recomputes any level — a
-    * 4×10-arm md5 CaseWhen's codegen size measurably outweighed the
-    * aggregate win at sf0.1.
+  /** 12-slot MinHash signatures keyed by `sk` ([[Dedup.minhashSigKey]]);
+    * a band's keys are [[graft.functions.MinHashKeys]]: the md5 of each
+    * level's [[Dedup.minhashKeySlots]] list, all ten from one string,
+    * since the lists are nested prefixes.
     */
-  val MinHash: Family = {
-    def byBand(k: Int => Column) = (1 until Dedup.minhashNBands)
-      .foldLeft(when(col("band") === 0, k(0)))((acc, b) => acc.when(col("band") === b, k(b)))
-    def slotArr(b: Int) = array(Dedup.minhashKeySlots(b, Dedup.minhashWidenLevels)
-      .map(i => element_at(col("mh"), i + 1).cast("string")): _*)
-    Family("sk", Seq("mh"), IntegerType, Dedup.minhashNBands, Dedup.minhashWidenLevels,
-      j => byBand(b => Dedup.minhashKeyCol(b, j)),
-      lvl => md5(concat_ws(",", slice(byBand(slotArr), lit(1), lvl + lit(3)))))
-  }
+  val MinHash: Family = Family("sk", Seq("mh"), IntegerType, Dedup.minhashNBands,
+    MinHashKeys.keys(col("mh"), col("band")))
 
-  /** 60-bit SimHash values over [[Dedup.simhashKeyExpr]]. Keys are
-    * nested prefixes in BIT space (extension chunk c occupies bits
-    * 15+5c..19+5c, so k_j = k_9 & (2^(15+5j)−1)): one level-9 key and
-    * one dynamic mask recompute any level, pure integer arithmetic.
+  /** 60-bit SimHash values; a band's keys are
+    * [[graft.functions.SimHashKeys]], the [[Dedup.simhashKeyExpr]]
+    * arithmetic: nested prefixes in BIT space, each level OR-ing one
+    * more 5-bit chunk of the other bands onto the previous key.
     */
-  val SimHash: Family =
-    Family("simhash", Nil, LongType, 4, Dedup.simhashWidenLevels,
-      j => expr(Dedup.simhashKeyExpr(j)),
-      lvl => expr(Dedup.simhashKeyExpr(Dedup.simhashWidenLevels))
-        .bitwiseAND(call_function("shiftleft", lit(1L), (lvl * 5 + lit(15)).cast("int")) - 1))
+  val SimHash: Family = Family("simhash", Nil, LongType, 4,
+    SimHashKeys.keys(col("simhash"), col("band")))
 
   /** maxDf=0 would null the min(when(df <= maxDf, j)) aggregate for
     * every bucket (df ≥ 1 always), silently dropping all candidates
@@ -94,13 +80,12 @@ object CappedIndex {
     sigs.select(f.cols :+ explode(array((0 until f.nBands).map(b =>
       lit(b).cast(f.bandType)): _*)).as("band"): _*)
 
-  /** Every (j, key) of each (signature, band) row — levels + 1 narrow
-    * rows per row, map-only. Keys are computed for the row's own band
-    * only (key hashing is the keying stages' dominant CPU).
+  /** Every (j, key) of each (signature, band) row — one narrow row per
+    * level, map-only. Keys are computed for the row's own band only
+    * (key hashing is the keying stages' dominant CPU).
     */
   private def levelRows(f: Family, bandRows: DataFrame): DataFrame =
-    bandRows.select(f.cols :+ col("band") :+
-      posexplode(array((0 to f.levels).map(f.key): _*)).as(Seq("j", "key")): _*)
+    bandRows.select(f.cols :+ col("band") :+ posexplode(f.keys).as(Seq("j", "key")): _*)
 
   /** The level choice: ONE count shuffle + ONE join + ONE min-level
     * groupBy (a per-level window cascade would be 10 sequential
@@ -117,7 +102,7 @@ object CappedIndex {
       .groupBy(f.cols :+ col("band"): _*)
       .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
       .select(col(f.sig), col("band"), col("lvl0").cast("long").as("lvl"),
-        f.keyAt(col("lvl0")).as("bkey"))
+        element_at(f.keys, col("lvl0") + 1).as("bkey"))
   }
 
   /** The index build over DISTINCT signatures: (sig, band, lvl, bkey),
@@ -284,7 +269,7 @@ object CappedIndex {
       .join(baseSigs.select(col(s)), Seq(s), "left_anti")
       .cachedOnce
     val mergedSigs = baseSigs.select(f.cols: _*).unionByName(fresh).cachedOnce
-    def level0(df: DataFrame) = perBand(f, df).withColumn("key0", f.key(0))
+    def level0(df: DataFrame) = perBand(f, df).withColumn("key0", element_at(f.keys, 1))
     val touched = level0(fresh).select(col("band"), col("key0")).distinct()
     val cohort = level0(mergedSigs)
       .join(broadcast(touched), Seq("band", "key0"), "left_semi")

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caching._
@@ -279,10 +279,7 @@ object Dedup {
     * the pair without any signature re-join.
     */
   private def minhashBandRowsWithSig(docs: DataFrame): DataFrame =
-    minhashSigRows(docs)
-      .select(col("doc_id"), col("mh"),
-        posexplode(array((0 until minhashNBands).map(b => minhashKeyCol(b, 0)): _*))
-          .as(Seq("band", "bh")))
+    minhashSigRows(docs).select(col("doc_id"), col("mh"), minhashLevel0Bands)
 
   /** F16: exact-substring dedup — the 50-token-overlap rule of Lee et
     * al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -456,14 +453,16 @@ object Dedup {
   }
 
   /** Per-doc (doc_id, band, bh) band rows — the uncapped F3 shuffle key
-    * (each band hash is [[minhashKeyCol]] at level 0; ScaleProbe
+    * (each band hash is the band's level-0 widening key; ScaleProbe
     * measures this table's bucket density against the capped keying).
     */
   private[graft] def minhashBands(docs: DataFrame): DataFrame =
-    minhashSigRows(docs)
-      .select(col("doc_id"),
-        posexplode(array((0 until minhashNBands).map(b => minhashKeyCol(b, 0)): _*))
-          .as(Seq("band", "bh")))
+    minhashSigRows(docs).select(col("doc_id"), minhashLevel0Bands)
+
+  /** (band, bh) rows of an `mh` row: every band's level-0 key. */
+  private def minhashLevel0Bands: Column =
+    posexplode(array((0 until minhashNBands).map(b => minhashKey(b, 0)): _*))
+      .as(Seq("band", "bh"))
 
   /** Widening schedule for the df-capped MinHash variants (the exact
     * analogue of [[simhashKeyExpr]], with signature SLOTS playing the
@@ -486,20 +485,18 @@ object Dedup {
       (0 until j).map(c =>
         ((b + 1 + c / bandRows) % minhashNBands) * bandRows + (c % bandRows))
 
-  /** md5 key over band `b`'s level-`j` slot subset of the `mh` array
-    * (engine-portable: md5 of the comma-joined decimal slot values,
-    * the same string the DuckDB oracle aggregates).
+  /** Band `b`'s level-`j` key of the `mh` column
+    * ([[graft.functions.MinHashKeys]]: md5 of the comma-joined decimal
+    * slot values, the same string the DuckDB oracle aggregates).
     */
-  private[dedup] def minhashKeyCol(b: Int, j: Int): org.apache.spark.sql.Column =
-    md5(concat_ws(",",
-      minhashKeySlots(b, j).map(i => element_at(col("mh"), i + 1).cast("string")): _*))
+  private def minhashKey(b: Int, j: Int): Column =
+    element_at(graft.functions.MinHashKeys.keys(col("mh"), lit(b)), j + 1)
 
   /** Full-signature identity key: md5 over all 12 slots in natural
     * order (= band 0's level-9 key). Two docs share `sk` iff their
     * signatures are identical.
     */
-  private[graft] def minhashSigKey: org.apache.spark.sql.Column =
-    minhashKeyCol(0, minhashWidenLevels)
+  private[graft] def minhashSigKey: Column = minhashKey(0, minhashWidenLevels)
 
   /** F3c: MinHash LSH pairs with distinct-signature collapse + df-capped
     * band buckets — the 100 TB twin of [[minhashLsh]] (VERDICT r5 #1).
@@ -1019,6 +1016,8 @@ object Dedup {
 
   /** SQL expression for the level-`j` widened band key (15 + 5j bits).
     * Engine-portable arithmetic: only `>>`, `&`, `|`, `%` on BIGINT.
+    * The DuckDB oracle renders it; the Spark plan computes the same
+    * arithmetic for all levels at once ([[graft.functions.SimHashKeys]]).
     */
   def simhashKeyExpr(j: Int): String = {
     val base = "(simhash >> cast(band*15 AS int)) & 32767"

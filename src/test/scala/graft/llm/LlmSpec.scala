@@ -445,7 +445,7 @@ class LlmSpec extends SparkSpec {
     assert(n9 == 4L * sigs.length)
     df.unpersist()
     // MinHash: slot lists are nested prefixes — the property
-    // CappedIndex.MinHash's single dynamic slice relies on
+    // MinHashKeys' one string with a digest per prefix relies on
     val (nb, n) = (Dedup.minhashNBands, Dedup.minhashWidenLevels)
     for (b <- 0 until nb; j <- 0 to n)
       assert(Dedup.minhashKeySlots(b, j) == Dedup.minhashKeySlots(b, n).take(3 + j),
@@ -455,8 +455,68 @@ class LlmSpec extends SparkSpec {
     val mhs = Seq.fill(2000)(Seq.fill(Dedup.minhashParams.size)(rnd.nextInt(8).toLong)).distinct
     val mk9 = mhs.toDF("mh")
       .select(col("mh"), explode(array((0 until nb).map(lit(_)): _*)).as("band"))
-      .select(col("band"), CappedIndex.MinHash.key(n).as("k9"))
+      .select(col("band"), element_at(CappedIndex.MinHash.keys, n + 1).as("k9"))
     assert(mk9.distinct().count() == nb.toLong * mhs.length)
+  }
+
+  /** Band `b`'s level-`j` MinHash key spelled as Spark md5 over the
+    * slot schedule — the string the DuckDB oracle hashes.
+    */
+  private def minhashKeyRef(b: Int, j: Int) = md5(concat_ws(",",
+    Dedup.minhashKeySlots(b, j).map(i => element_at(col("mh"), i + 1).cast("string")): _*))
+
+  test("widening keys: compiled keys equal the md5 / bit-arithmetic schedules (F3c, F4-capped)") {
+    // MinHashKeys and SimHashKeys replace one Spark expression per
+    // (band, level); every key must stay byte-identical to that
+    // expression (the oracle hashes rest on it), both in generated code
+    // (a DataFrame over an RDD: no local-relation folding) and in
+    // interpreted eval
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.functions.{MinHashKeys, SimHashKeys}
+    val rnd = new scala.util.Random(11)
+    val (nb, n) = (Dedup.minhashNBands, Dedup.minhashWidenLevels)
+    // slot values of every magnitude and sign: decimal rendering is
+    // part of the key string
+    val mhs = Seq.fill(2000)(Seq.fill(Dedup.minhashParams.size)(
+      rnd.nextLong() >> rnd.nextInt(64)))
+    val mhDf = spark.sparkContext.parallelize(mhs, 2).toDF("mh")
+    for (b <- 0 until nb) {
+      val q = mhDf.select(col("mh"), MinHashKeys.keys(col("mh"), lit(b)).as("k"),
+        array((0 to n).map(minhashKeyRef(b, _)): _*).as("ref"))
+      assert(q.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+      val rows = q.collect()
+      val bad = rows.count(r => r.getSeq[String](1) != r.getSeq[String](2))
+      assert(bad == 0, s"band $b: $bad codegen key arrays differ from md5(concat_ws)")
+      val badEval = rows.count { r =>
+        val k = MinHashKeys(Literal.create(r.getSeq[Long](0), ArrayType(LongType)), Literal(b))
+          .eval().asInstanceOf[ArrayData]
+        (0 to n).map(j => k.getUTF8String(j).toString) != r.getSeq[String](2)
+      }
+      assert(badEval == 0, s"band $b: $badEval interpreted key arrays differ")
+    }
+    // simhash: full 64-bit values (the arithmetic shift of the sign bit
+    // included) and 60-bit signatures
+    val sims = Seq.fill(1000)(rnd.nextLong()) ++ Seq.fill(1000)(rnd.nextLong() & ((1L << 60) - 1))
+    val sq = spark.sparkContext.parallelize(sims.flatMap(v => (0L until 4L).map((v, _))), 2)
+      .toDF("simhash", "band")
+      .select(col("simhash"), col("band"),
+        SimHashKeys.keys(col("simhash"), col("band")).as("k"),
+        array((0 to Dedup.simhashWidenLevels).map(j => expr(Dedup.simhashKeyExpr(j))): _*)
+          .as("ref"))
+    assert(sq.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+    val srows = sq.collect()
+    assert(srows.length == 4 * sims.length)
+    val sbad = srows.count(r => r.getSeq[Long](2) != r.getSeq[Long](3))
+    assert(sbad == 0, s"$sbad codegen simhash key arrays differ from simhashKeyExpr")
+    val sbadEval = srows.count { r =>
+      SimHashKeys(Literal(r.getLong(0)), Literal(r.getLong(1))).eval()
+        .asInstanceOf[ArrayData].toLongArray().toSeq !=
+        r.getSeq[Long](3)
+    }
+    assert(sbadEval == 0, s"$sbadEval interpreted simhash key arrays differ")
   }
 
   test("capped entry points reject maxDf < 1 loudly (F3c, F4-capped, F20)") {
@@ -1456,9 +1516,10 @@ class LlmSpec extends SparkSpec {
   test("capped keying recomputes the chosen level's key exactly (r12 hash-agg shape)") {
     // r12: the keying aggregate carries min(LEVEL) (hash-aggregable)
     // and recomputes the level's key from the signature afterward —
-    // this pins the recomputation against the schedule's definition
-    // (md5 over the level's slot prefix / the level's widened-bits
-    // expression) on fixtures where widening actually engages
+    // this pins the recomputation against the key the level offers
+    // (MinHashKeys at the level / the level's widened-bits expression;
+    // the compiled-keys spec ties MinHashKeys to its md5 definition) on
+    // fixtures where widening actually engages
     val rnd = new scala.util.Random(42)
     val adv = (0L until 300L).map { i =>
       (i, Seq.fill(12)("t" + rnd.nextInt(6)).mkString(" "))
@@ -1469,15 +1530,14 @@ class LlmSpec extends SparkSpec {
     val keyed = CappedIndex.keys(CappedIndex.MinHash, distinctSigs, maxDf = 4)
       .join(distinctSigs, Seq("sk"))
     assert(keyed.filter(col("lvl") > 0).count() > 0) // widening engaged
-    def expectedKey(b: Int, j: Int) = md5(concat_ws(",",
-      Dedup.minhashKeySlots(b, j)
-        .map(i => element_at(col("mh"), i + 1).cast("string")): _*))
+    def expectedKey(b: Int, j: Int) =
+      element_at(graft.functions.MinHashKeys.keys(col("mh"), lit(b)), j + 1)
     val mismatched = keyed.filter(
       (for (b <- 0 until Dedup.minhashNBands; j <- 0 to Dedup.minhashWidenLevels)
         yield col("band") === b && col("lvl") === j &&
           col("bkey") =!= expectedKey(b, j)).reduce(_ || _)).count()
     assert(mismatched == 0L, s"$mismatched minhash keys diverge from the schedule")
-    // simhash twin (the bit-mask prefix recomputation)
+    // simhash twin
     val rnd2 = new scala.util.Random(7)
     val lows = Array(0x1234L, 0x777L, 0x2AAAL)
     val sigs = (0 until 500).map { _ =>

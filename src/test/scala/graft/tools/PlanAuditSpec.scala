@@ -226,6 +226,29 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("capped index build: whole-stage code stays small enough to JIT") {
+    // a Column per (band, level) generates a class of hundreds of kB
+    // whose largest method is past HotSpot's 8,000-byte JIT limit, so
+    // it runs interpreted and is recompiled whenever the class cache
+    // evicts it; the keys must stay one compiled per-row call
+    import graft.dedup.{CappedIndex, Dedup}
+    // a keyed table another test cached would stand in for the build
+    spark.catalog.clearCache()
+    val docs = graft.core.Tables.documents(spark, dir)
+    val sigs = Seq(
+      CappedIndex.MinHash -> Dedup.distinctSigs(docs),
+      CappedIndex.SimHash -> Dedup.simhash(spark, docs).select("simhash").distinct())
+    for ((f, s) <- sigs) {
+      val keyed = CappedIndex.keys(f, s, 64)
+      keyed.queryExecution.toRdd.count()
+      val (n, chars, bytes) = PlanDump.codegenSize(keyed.queryExecution.executedPlan)
+      assert(n > 0, s"${f.sig}: no whole-stage subtree")
+      assert(chars < 100000, s"${f.sig}: largest whole-stage source $chars chars")
+      assert(bytes < 8000, s"${f.sig}: largest generated method $bytes B")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("dedup_cc_clusters: a steady-state iteration is one groupBy shuffle") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
