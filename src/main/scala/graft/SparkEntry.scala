@@ -4372,10 +4372,10 @@ object SparkEntry {
          |SELECT path, ts, round(value, 4) AS value
          |FROM m ORDER BY 1, 2, 3""".stripMargin,
     // G26: streaming maintenance is LOSSLESS — the maintained read
-    // (cold compacted days + hot live tail + late overlay) is the raw
-    // point multiset, the B15 law with the compaction driven from the
-    // ingest loop — now under held-back LATE delivery and a REPLAYED
-    // batch id too (r11)
+    // (each cold day's newest generation + the hot live tail) is the
+    // raw point multiset, the B15 law with the compaction driven from
+    // the ingest loop — under held-back LATE delivery (a new generation
+    // of a published day) and a REPLAYED batch id too
     "store_maintained_fetch" ->
       s"""WITH $M
          |SELECT path, ts, round(value, 4) AS value
@@ -4393,11 +4393,11 @@ object SparkEntry {
          |SELECT path, ts, round(value, 4) AS value FROM m, c
          |WHERE ts - ts%86400 >= c.cutoff ORDER BY 1, 2, 3""".stripMargin,
     // G28: the store report's day/row counts are pure functions of the
-    // fixture's routing — after 3 day-ordered ticks with the fold
-    // draining late: cold = every day before the max (on-time + folded
-    // late rows), hot = the live tail plus the 3rd tick's grace copies
-    // (days >= the 2/3 cut, plus the max day before that cut), late =
-    // (0, 0) by construction
+    // fixture's routing — after 3 day-ordered ticks, late rows living in
+    // their day's newest generation: cold = every day before the max
+    // (on-time + late rows), hot = the live tail plus the copies the
+    // 3rd tick replaced (days >= the 2/3 cut, plus the max day before
+    // that cut), late = (0, 0) by construction
     "store_report" ->
       s"""WITH $M,
          |d AS (SELECT DISTINCT ts - ts%86400 AS day FROM m),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.tsdb.{Carbon, Rollup}
+import graft.tsdb.{Carbon, MetricStore, Rollup}
 
 /** Structured-Streaming re-expression of the carbon-cache ingest loop
   * (/root/reference/L_DataCache.lua:161-200): plaintext lines → parse →
@@ -65,18 +65,17 @@ object CarbonStream {
   }
 
   /** G26: [[ingestSink]] WITH store maintenance — every micro-batch
-    * appends to the HOT day-partitioned store, then runs the
-    * compact-and-swap tick: days the stream has moved past (strictly
-    * before the store's max day) rewrite into the COLD store as one
-    * sorted file each and publish via an atomic directory rename,
-    * while the live day keeps appending in hot. Hot copies of
-    * previously-published days are reclaimed at the START of the next
-    * tick (the grace rule), so a reader concurrent with any tick sees
-    * each day in exactly one layout — old or new, never a mix
-    * (MetricStore.readMaintained resolves the day split once per
-    * plan). This is the piece whisper never needed: its ring files are
-    * update-in-place (L_DataWhisper.lua:331-354); a parquet stream
-    * sink instead accretes one file per micro-batch per day (B15).
+    * runs [[maintainTick]] once: append to the HOT day-partitioned
+    * store, publish the days the stream has moved past (and any late
+    * rows) as immutable COLD generations by one rename each, then sweep
+    * the copies replaced before the tick began. A reader
+    * (MetricStore.readMaintained) resolves one copy per day into
+    * explicit paths, and no copy it lists is rewritten, or deleted
+    * before the end of the tick after its replacement. This is the
+    * piece whisper never needed: its ring files are update-in-place
+    * (L_DataWhisper.lua:331-354); parquet cannot update in place, and
+    * a parquet stream sink accretes one file per micro-batch per day
+    * (B15).
     */
   def ingestSinkMaintained(lines: DataFrame, now: Long, hotDir: String,
                            coldDir: String, checkpoint: String,
@@ -93,64 +92,61 @@ object CarbonStream {
       .start()
   }
 
-  /** Exactly-once wrapper around [[maintainTick]] — the
-    * [[mergeBatchOnce]] txn discipline applied to the maintained sink
-    * (VERDICT r10 #1): foreachBatch is at-least-once, and without the
-    * `_txn/<batchId>` marker a crash after the hot append but before
-    * the checkpoint commit would replay the batch and append every
-    * point AGAIN — duplicate raw points that compact into cold and
-    * silently corrupt every downstream sum/avg rollup. The marker is
-    * written strictly AFTER the tick completes, so a committed batch
-    * id replays as a full no-op (store bytes untouched). The one
-    * remaining window — tick done, marker lost — replays into a tick
-    * that is ITSELF idempotent: the hot append lands under the batch's
-    * own `ingest_batch=<id>` partition with dynamic overwrite (a
-    * replayed write replaces its own files), days the lost tick
-    * already published route through the late store whose
-    * last-write-wins merge converges to identical values, and
-    * compactTick/cleanupHot skip days already done. Observable state
-    * is exactly-once in every interleaving. Returns whether the tick
-    * ran.
+  /** The exactly-once discipline of both txn-marked sinks (VERDICT r9
+    * #3, r10 #1): foreachBatch is at-least-once, so `dir` carries one
+    * `_txn/<batchId>` marker per committed batch (an underscore dir
+    * parquet discovery ignores; one atomic file-create, written strictly
+    * AFTER `tick` completes). A committed batch id replays as a full
+    * no-op — the store's bytes stay exactly those of the single
+    * successful run. The one remaining window — tick done, marker lost —
+    * replays into a tick that converges by itself: last-write-wins
+    * merges reproduce identical values. Returns whether `tick` ran.
     */
-  private[graft] def maintainTickOnce(batch: DataFrame, hotDir: String,
-                                      coldDir: String, batchId: Long,
-                                      retentionDays: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(hotDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$hotDir/_txn/$batchId")
+  private def once(spark: org.apache.spark.sql.SparkSession, dir: String,
+                   batchId: Long)(tick: => Unit): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/_txn/$batchId")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) false
     else {
-      maintainTick(batch, hotDir, coldDir, batchId, retentionDays)
+      tick
       fs.mkdirs(marker.getParent)
       fs.createNewFile(marker)
       true
     }
   }
 
-  /** The late store: late points (days the cold store already
-    * published) merge here through the G6 upsert path instead of
-    * poisoning the stream. Underscore dir — invisible to the hot
-    * store's own parquet discovery; [[graft.tsdb.MetricStore
-    * .readMaintained]] overlays it last-write-wins per (path, ts).
+  /** Exactly-once [[maintainTick]] ([[once]]). Without the marker a
+    * crash after the hot append but before the checkpoint commit would
+    * replay the batch and append every point AGAIN — duplicate raw
+    * points that compact into cold and corrupt every sum/avg rollup. In
+    * the crash window the replayed tick is idempotent: the hot append
+    * lands under the batch's own `ingest_batch=<id>` partition with
+    * dynamic overwrite (a replayed write replaces its own files), and
+    * days the lost tick already published take the replayed rows as one
+    * more generation with equal values.
     */
-  private[graft] def lateStoreDir(hotDir: String): String = s"$hotDir/_late"
+  private[graft] def maintainTickOnce(batch: DataFrame, hotDir: String,
+                                      coldDir: String, batchId: Long,
+                                      retentionDays: Int = 0): Boolean =
+    once(batch.sparkSession, hotDir, batchId)(
+      maintainTick(batch, hotDir, coldDir, batchId, retentionDays))
 
   /** One maintenance micro-batch, shared verbatim by the
-    * `store_maintained_fetch` batch twin: split the batch on the cold
-    * store's published-day set (K-row metadata — the batch's distinct
-    * days vs the cold listing, never a data scan), merge LATE points
-    * (published days are immutable — that is what makes the rename
-    * swap and the deferred hot delete safe without a lock) into the
-    * [[lateStoreDir]] via the G6 last-write-wins upsert, append the
-    * on-time points to hot under this batch's own `ingest_batch`
-    * partition (dynamic overwrite — a replayed write is file-level
-    * idempotent), reclaim hot copies of days EARLIER ticks published
-    * (any reader concurrent with those ticks has long resolved its
-    * plan), then compact every day strictly before the store's max
-    * day. The live-day watermark is the store-wide max (monotone — a
-    * late batch carrying only old points can never reopen a published
-    * day). NOTE: the maintained sink owns `hotDir` from birth — the
+    * `store_maintained_fetch` batch twin. One Spark job learns the
+    * batch's day set; one listing of the store (MetricStore.resolve),
+    * taken before anything is written, then decides the whole tick:
+    *   - rows of days the cold store has not published append to hot
+    *     under this batch's own `ingest_batch` partition (dynamic
+    *     overwrite — a replayed write is file-level idempotent);
+    *   - MetricStore.compactTick publishes every hot day strictly
+    *     before the store's max day as generation 0, and the LATE rows
+    *     (days already published) as their day's next generation,
+    *     last-write-wins per (path, ts) — one job, one rename per day;
+    *   - with `retentionDays` set, days that old age out;
+    *   - MetricStore.sweep deletes what that listing shows superseded.
+    * The live-day watermark is the store-wide max (monotone — a late
+    * batch carrying only old points can never reopen a published day).
+    * NOTE: the maintained sink owns `hotDir` from birth — the
     * (day, ingest_batch) layout must not mix with a plain
     * day-partitioned append store.
     */
@@ -160,57 +156,44 @@ object CarbonStream {
     val spark = batch.sparkSession
     val withDay =
       if (batch.columns.contains("day")) batch
-      else batch.withColumn("day",
-        col("ts") - col("ts") % graft.tsdb.MetricStore.DaySeconds)
+      else batch.withColumn("day", col("ts") - col("ts") % MetricStore.DaySeconds)
     // whisper's archive-range rule at the door: a point older than the
     // PERSISTED retention horizon is rejected, never stored — without
     // this, a very-late point for an aged-out day (whose dir the
     // vacuum deleted, so no listing remembers it) would be classified
     // on-time and resurrect a day older than the horizon
-    val horizon = graft.tsdb.MetricStore.readHorizon(spark, coldDir)
+    val horizon = MetricStore.readHorizon(spark, coldDir)
     val inRange =
       if (horizon == 0L) withDay
       else withDay.filter(col("day") >= horizon)
     val b = inRange.select(col("path"), col("ts"), col("value"), col("day"))
       .cache()
-    if (!b.isEmpty) {
-      val published = graft.tsdb.MetricStore.coldDays(spark, coldDir).toSet
-      val days = b.select(col("day").cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      val lateDays = days.filter(published.contains).sorted.toSeq
-      if (lateDays.nonEmpty)
-        mergeBatch(b.filter(col("day").isin(lateDays.map(d => d: Any): _*))
-          .select(col("path"), col("ts"), col("value")), lateStoreDir(hotDir))
-      if (days.exists(!published.contains(_))) {
-        val onTime =
-          if (lateDays.isEmpty) b
-          else b.filter(!col("day").isin(lateDays.map(d => d: Any): _*))
-        onTime.withColumn("ingest_batch", lit(batchId))
+    val days = b.select(col("day")).distinct().collect().map(_.getLong(0)).toSeq.sorted
+    if (days.nonEmpty) {
+      val start = MetricStore.resolve(spark, hotDir, coldDir)
+      val (lateDays, onTime) = days.partition(start.cold.contains)
+      def ofDays(ds: Seq[Long]) = b.filter(col("day").isin(ds.map(d => d: Any): _*))
+      if (onTime.nonEmpty)
+        ofDays(onTime).withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("day", "ingest_batch").parquet(hotDir)
-        graft.tsdb.MetricStore.cleanupHot(spark, hotDir, coldDir)
-        // the live-day watermark is a directory-name fact (the
-        // MetricStore.dayDirs listing) — never a data scan of the hot
-        // tail, which at 100 TB is the live day of the whole fleet
-        // re-read per micro-batch
-        val liveDay = graft.tsdb.MetricStore.dayDirs(spark, hotDir).max
-        graft.tsdb.MetricStore.compactTick(spark, hotDir, coldDir, liveDay)
-        // whisper's maxRetention, live: with a horizon configured the
-        // tick ages out days the store has moved past — the full ring
-        // behavior (append at the head, compact the middle, drop the
-        // tail) in ONE maintenance loop. Idempotent (a replayed tick
-        // re-deletes nothing), monotone in liveDay.
-        if (retentionDays > 0)
-          graft.tsdb.MetricStore.retentionVacuum(spark, hotDir, coldDir,
-            liveDay - retentionDays.toLong *
-              graft.tsdb.MetricStore.DaySeconds): Unit
+      // the live-day watermark is a directory-name fact plus this
+      // batch's days — never a data scan of the hot tail, which at
+      // 100 TB is the live day of the whole fleet re-read per batch
+      val store = start.copy(hot = (start.hot ++ onTime).distinct.sorted)
+      val liveDay = store.hot.lastOption
+      MetricStore.compactTick(spark, store, liveDay.getOrElse(Long.MinValue),
+        lateDays, ofDays(lateDays))
+      // whisper's maxRetention, live: with a horizon configured the
+      // tick ages out days the store has moved past — the full ring
+      // behavior (append at the head, compact the middle, drop the
+      // tail) in ONE maintenance loop. Idempotent, monotone in liveDay.
+      if (retentionDays > 0) liveDay.foreach { d =>
+        MetricStore.retentionVacuum(spark, hotDir, coldDir,
+          d - retentionDays.toLong * MetricStore.DaySeconds)
       }
-      // drain the late store into cold (LWW per slot, staged swap):
-      // after this, `_late` holds only days whose merge hasn't run —
-      // the read path's broadcast overlay is bounded by construction,
-      // and at steady state it short-circuits away entirely
-      graft.tsdb.MetricStore.lateFoldTick(spark, hotDir, coldDir): Unit
+      MetricStore.sweep(spark, start)
     }
     b.unpersist()
   }
@@ -236,36 +219,14 @@ object CarbonStream {
       }
       .start()
 
-  /** Exactly-once wrapper around [[mergeBatch]] (VERDICT r9 #3): the
-    * store carries a per-batch TXN MARKER (`_txn/<batchId>`, an
-    * underscore dir parquet discovery ignores; one atomic file-create
-    * per committed batch, written strictly AFTER the merge commits).
-    * Structured Streaming replays a micro-batch id after a failure —
-    * foreachBatch is at-least-once — and without the marker the replay
-    * would re-run the whole merge: value-idempotent (last-write-wins),
-    * but a full dynamic-partition REWRITE of every touched day, i.e.
-    * new files for nothing. With it the replay is a no-op at the FILE
-    * level: the store's bytes are exactly those of the single
-    * successful run. The one remaining window — a crash after the
-    * merge, before the marker — replays into a merge whose
-    * last-write-wins fold converges to the identical values (the G6
-    * law), after which the marker lands; so observable state is
-    * exactly-once in every interleaving. Returns whether the merge ran.
+  /** Exactly-once [[mergeBatch]] ([[once]]). Without the marker a
+    * replayed batch id would re-run the whole merge: value-idempotent
+    * (last-write-wins), but a full dynamic-partition REWRITE of every
+    * touched day, i.e. new files for nothing.
     */
   private[graft] def mergeBatchOnce(batch: DataFrame, dir: String,
-                                    batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_txn/$batchId")
-    if (fs.exists(marker)) false
-    else {
-      mergeBatch(batch, dir)
-      fs.mkdirs(marker.getParent)
-      fs.createNewFile(marker)
-      true
-    }
-  }
+                                    batchId: Long): Boolean =
+    once(batch.sparkSession, dir, batchId)(mergeBatch(batch, dir))
 
   /** One micro-batch's merge, shared verbatim by the `stream_upsert`
     * batch twin: read ONLY the day partitions the batch touches

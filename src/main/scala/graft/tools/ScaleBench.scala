@@ -166,8 +166,12 @@ object ScaleBench {
       // below scan each layout through the same aggregate, so the
       // delta IS the small-file listing/open overhead compaction buys
       // back
+      // the marker names the store's layout (cold generations): a store
+      // left in an older layout has no such marker and is rebuilt
       val mroot = s"target/scalebench/x$copies/maintstore"
-      if (!new java.io.File(s"$mroot/_OK").exists) {
+      if (!new java.io.File(s"$mroot/_OK_GEN").exists) {
+        val mpath = new org.apache.hadoop.fs.Path(mroot)
+        mpath.getFileSystem(spark.sessionState.newHadoopConf()).delete(mpath, true)
         // split the appends on id (ts = id*26 is always even, so a ts%8
         // split would leave the odd appends empty and halve the
         // documented ~64 files/day small-file pressure)
@@ -180,10 +184,12 @@ object ScaleBench {
         for (k <- 0 until 8; dst <- Seq("splintered", "hot"))
           pts.filter(col("id") % 8 === k).drop("id").repartition(8)
             .write.partitionBy("day").mode("append").parquet(s"$mroot/$dst")
-        graft.tsdb.MetricStore.compactTick(spark, s"$mroot/hot",
-          s"$mroot/cold", 29L * 86400L)
-        graft.tsdb.MetricStore.cleanupHot(spark, s"$mroot/hot", s"$mroot/cold")
-        new java.io.File(s"$mroot/_OK").createNewFile()
+        // a def: the sweep needs the listing taken after the publish
+        def store = graft.tsdb.MetricStore.resolve(spark, s"$mroot/hot", s"$mroot/cold")
+        graft.tsdb.MetricStore.compactTick(spark, store, 29L * 86400L, Nil,
+          spark.emptyDataFrame)
+        graft.tsdb.MetricStore.sweep(spark, store)
+        new java.io.File(s"$mroot/_OK_GEN").createNewFile()
       }
 
       val families: Seq[(String, () => DataFrame)] = Seq(

@@ -1,7 +1,9 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Materialized metric storage — the 100 TB posture (SURVEY.md §6).
   *
@@ -152,19 +154,30 @@ object MetricStore {
       .sortWithinPartitions(col("day"), col("path"), col("ts"))
       .write.partitionBy("day").mode("overwrite").parquet(dstDir)
 
-  // ---- G26: the MAINTAINED store — hot appends + cold compacted days
+  // ---- G26: the MAINTAINED store — hot appends + cold generations
+  //
+  // Layout: the stream appends to `hot/day=D/…`; every closed or
+  // rewritten day lives in `cold/day=D/gen=G/`, one (path, ts)-sorted
+  // file per generation. Nothing a reader may have listed is ever
+  // rewritten in place: each rewrite of a day is a NEW generation,
+  // written under `cold/_staging` and published by one rename
+  // ([[compactTick]]), and replaced copies go only in a later tick's
+  // [[sweep]].
+
+  /** The one schema of every maintained-store read, hot or cold. */
+  private val PointSchema: StructType = StructType(Seq(
+    StructField("path", StringType), StructField("ts", LongType),
+    StructField("value", DoubleType), StructField("day", LongType)))
 
   private def hadoopFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
   /** The day set of ANY day-partitioned store — K-row metadata read off
-    * the directory names (one listing, never a data scan). This is the
-    * watermark/pointer primitive everywhere: the cold published set,
-    * the hot live-day watermark, and the late store's unfolded days all
-    * derive from names, so no maintenance decision ever pays a data
-    * scan of the store it maintains.
+    * the directory names (one listing, never a data scan), so no
+    * maintenance decision ever pays a data scan of the store it
+    * maintains.
     */
   def dayDirs(spark: SparkSession, dir: String): Seq[Long] = {
     val (fs, p) = hadoopFs(spark, dir)
@@ -174,85 +187,119 @@ object MetricStore {
       .sorted
   }
 
+  /** One listing of the maintained store: every published generation
+    * of each cold day and every hot day dir. A day is published exactly
+    * when it has a generation; `_staging` is never listed.
+    */
+  private[graft] final case class Layout(hotDir: String, coldDir: String,
+                                         gens: Map[Long, Seq[Long]], hot: Seq[Long]) {
+    /** Each published day's newest generation — the one a read opens. */
+    val cold: Map[Long, Long] = gens.map { case (d, g) => d -> g.max }
+    def coldPaths(days: Seq[Long]): Seq[String] =
+      days.map(d => s"$coldDir/day=$d/gen=${cold(d)}")
+    def hotPaths(days: Seq[Long]): Seq[String] = days.map(d => s"$hotDir/day=$d")
+    /** Hot copies of published days and every generation but a day's newest. */
+    def superseded: Seq[String] =
+      hotPaths(hot.filter(gens.contains)) ++ gens.toSeq.flatMap { case (d, g) =>
+        g.filter(_ < g.max).map(x => s"$coldDir/day=$d/gen=$x")
+      }
+  }
+
+  private def generations(spark: SparkSession, coldDir: String): Map[Long, Seq[Long]] = {
+    val (fs, _) = hadoopFs(spark, coldDir)
+    Option(fs.globStatus(new Path(s"$coldDir/day=*/gen=*")))
+      .getOrElse(Array.empty).toSeq.map(_.getPath)
+      .map(p => p.getParent.getName.stripPrefix("day=").toLong -> p.getName.stripPrefix("gen=").toLong)
+      .groupMap(_._1)(_._2)
+  }
+
+  private[graft] def resolve(spark: SparkSession, hotDir: String, coldDir: String): Layout =
+    Layout(hotDir, coldDir, generations(spark, coldDir), dayDirs(spark, hotDir))
+
   /** The cold store's published day set. */
   def coldDays(spark: SparkSession, coldDir: String): Seq[Long] =
-    dayDirs(spark, coldDir)
+    generations(spark, coldDir).keys.toSeq.sorted
 
-  /** G26 maintenance tick: compact every CLOSED hot day (strictly
-    * before `beforeDay`, not yet cold) into the cold store. One
-    * [[compactRaw]]-shaped job writes the closed days into an
-    * underscore-prefixed staging dir (invisible to parquet listings),
-    * then each day PUBLISHES via one directory rename — atomic at the
-    * name level, so a concurrent reader sees a day's cold copy
-    * entirely or not at all, never a partial file set. The hot copy is
-    * NOT deleted here: a reader that resolved its day list before the
-    * rename is still scanning it — [[cleanupHot]] reclaims it on a
-    * LATER tick (the grace rule), which is what makes the swap safe
-    * without a lock. Work ∝ the closed days' rows (typically one day),
-    * never the store. Returns the days published.
+  /** Explicit day or generation dirs under `base`, read with the fixed
+    * schema: no footer is read for inference, and the file list is the
+    * one Spark takes here, once.
     */
-  def compactTick(spark: SparkSession, hotDir: String, coldDir: String,
-                  beforeDay: Long): Seq[Long] = {
-    val already = coldDays(spark, coldDir).toSet
-    val (fs, coldP) = hadoopFs(spark, coldDir)
-    val hot = spark.read.parquet(hotDir)
-    // partition values read back type-inferred from directory names
-    // (INT for small day buckets) — normalize to long
-    val days = hot.select(col("day").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-      .filter(d => d < beforeDay && !already.contains(d)).sorted
-    if (days.isEmpty) Seq.empty
-    else {
-      val staging = s"$coldDir/_staging"
-      // project to the point columns: the maintained sink's hot layout
-      // carries an ingest_batch partition (replay idempotence) that
-      // must not leak into the cold store's data columns
-      hot.filter(col("day").isin(days.map(d => d: Any): _*))
-        .select(col("path"), col("ts"), col("value"), col("day"))
-        .repartition(col("day"))
-        .sortWithinPartitions(col("day"), col("path"), col("ts"))
-        .write.partitionBy("day").mode("overwrite").parquet(staging)
-      fs.mkdirs(coldP)
-      days.foreach { d =>
-        val ok = fs.rename(
-          new org.apache.hadoop.fs.Path(s"$staging/day=$d"),
-          new org.apache.hadoop.fs.Path(s"$coldDir/day=$d"))
-        require(ok, s"compactTick: publishing day=$d failed (exists?)")
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      days
+  private def scan(spark: SparkSession, base: String, dirs: Seq[String]): Option[DataFrame] =
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(PointSchema).option("basePath", base).parquet(dirs: _*)
+      .select(PointSchema.fieldNames.toSeq.map(col): _*))
+
+  /** The publish half of a G26 maintenance tick, against `store`, the
+    * listing the tick took at its start (plus the days it appended):
+    *   - every closed hot day (strictly before `beforeDay`, not yet
+    *     cold) becomes generation 0 of its cold day;
+    *   - every published day in `lateDays` becomes its next generation,
+    *     `Rollup.upsert(current generation, late rows)` — the G6
+    *     last-write-wins fold, so the late row wins its slot.
+    * One job writes them all under `cold/_staging` (underscore:
+    * invisible to every listing), sorted by (path, ts) within one file
+    * per day so parquet row-group statistics prune the fetch's pushed
+    * path predicates. Each then publishes with ONE rename: generation 0
+    * moves its whole `day=D` dir (so a day is published exactly when it
+    * has a complete generation), a later one moves its `gen=G` dir into
+    * the day. A crash before a rename leaves only a stage no reader
+    * sees (the next publish overwrites it); a crash after one replays
+    * the batch into one more generation with equal values. Work ∝ the
+    * published days' rows, never the store. Returns the days published.
+    */
+  def compactTick(spark: SparkSession, store: Layout, beforeDay: Long,
+                  lateDays: Seq[Long], late: DataFrame): Seq[Long] = {
+    val closed = store.hot.filter(d => d < beforeDay && !store.cold.contains(d))
+    val merged = scan(spark, store.coldDir, store.coldPaths(lateDays)).map { current =>
+      Rollup.upsert(current.select(col("path"), col("ts"), col("value")),
+          late.select(col("path"), col("ts"), col("value")))
+        .withColumn("day", col("ts") - col("ts") % DaySeconds)
     }
+    val gens = closed.map(_ -> 0L) ++ lateDays.map(d => d -> (store.cold(d) + 1))
+    (scan(spark, store.hotDir, store.hotPaths(closed)) ++ merged).reduceOption(_ unionByName _)
+      .foreach { rows =>
+        val staging = s"${store.coldDir}/_staging"
+        rows.withColumn("gen", element_at(typedLit(gens.toMap), col("day")))
+          .repartition(col("day"))
+          .sortWithinPartitions(col("day"), col("path"), col("ts"))
+          .write.partitionBy("day", "gen").mode("overwrite").parquet(staging)
+        val (fs, _) = hadoopFs(spark, staging)
+        gens.foreach { case (d, g) =>
+          val at = if (g == 0L) s"day=$d" else s"day=$d/gen=$g"
+          require(fs.rename(new Path(s"$staging/$at"), new Path(s"${store.coldDir}/$at")),
+            s"compactTick: publishing $at failed (exists?)")
+        }
+        fs.delete(new Path(staging), true)
+      }
+    gens.map(_._1).sorted
   }
 
-  /** Reclaim hot copies of days the cold store has published. Run on a
-    * tick AFTER the one that compacted them (the grace rule): any
-    * reader concurrent with that earlier tick resolved its plan
-    * against a day list from before the publication and may still be
-    * scanning the hot copy. Returns the days deleted.
+  /** The last step of a G26 tick: delete every copy `store` shows
+    * superseded — hot copies of published days and every generation
+    * but a day's newest. `store` is the listing the tick took at its
+    * start, so only copies replaced BEFORE this tick go: a copy replaced
+    * during tick N survives until the end of tick N+1, which is what
+    * lets a reader that resolved its paths before the replacement finish
+    * without a lock (the contract: a read finishes within one tick).
     */
-  def cleanupHot(spark: SparkSession, hotDir: String, coldDir: String): Seq[Long] = {
-    val cold = coldDays(spark, coldDir).toSet
-    val (fs, hotP) = hadoopFs(spark, hotDir)
-    if (!fs.exists(hotP)) Seq.empty
-    else fs.listStatus(hotP).map(_.getPath).toSeq
-      .filter(p => p.getName.startsWith("day=") &&
-        cold.contains(p.getName.stripPrefix("day=").toLong))
-      .map { p => fs.delete(p, true); p.getName.stripPrefix("day=").toLong }
-      .sorted
-  }
+  def sweep(spark: SparkSession, store: Layout): Unit =
+    store.superseded.foreach { p =>
+      val (fs, path) = hadoopFs(spark, p)
+      fs.delete(path, true): Unit
+    }
 
   /** RETENTION ageing for the maintained store — whisper's
     * maxRetention semantics on parquet (L_DataWhisper.lua: the ring
     * buffer OVERWRITES slots older than the archive's horizon, so old
     * points simply cease to exist; a day-partitioned store instead
     * grows forever unless someone drops the old days). Applies the
-    * horizon at DAY granularity: every cold, hot, and late-store day
-    * dir strictly before `beforeDay` deletes — name-level metadata
-    * ops off the directory listings, never a data scan, exactly the
-    * [[graft.similarity.AnnIndex.vacuum]] shape for the metric side.
-    * Readers concurrent with the vacuum follow the same retention
-    * contract as every such system: pin + finish within the horizon.
-    * Returns the days dropped (deduplicated across stores).
+    * horizon at DAY granularity: every cold day (all its generations)
+    * and hot day dir strictly before `beforeDay` deletes — name-level
+    * metadata ops off the directory listings, never a data scan,
+    * exactly the [[graft.similarity.AnnIndex.vacuum]] shape for the
+    * metric side. Readers concurrent with the vacuum follow the same
+    * retention contract as every such system: pin + finish within the
+    * horizon. Returns the days dropped (deduplicated across stores).
     */
   def retentionVacuum(spark: SparkSession, hotDir: String, coldDir: String,
                       beforeDay: Long): Seq[Long] = {
@@ -261,15 +308,11 @@ object MetricStore {
     // half-aged day as on-time on the next tick
     writeHorizon(spark, coldDir, beforeDay)
     def dropOld(dir: String): Seq[Long] = {
-      val (fs, p) = hadoopFs(spark, dir)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).map(_.getPath).toSeq
-        .filter(q => q.getName.startsWith("day=") &&
-          q.getName.stripPrefix("day=").toLong < beforeDay)
-        .map { q => fs.delete(q, true); q.getName.stripPrefix("day=").toLong }
+      val (fs, _) = hadoopFs(spark, dir)
+      dayDirs(spark, dir).filter(_ < beforeDay)
+        .map { d => fs.delete(new Path(s"$dir/day=$d"), true); d }
     }
-    (dropOld(coldDir) ++ dropOld(hotDir) ++ dropOld(s"$hotDir/_late"))
-      .distinct.sorted
+    (dropOld(coldDir) ++ dropOld(hotDir)).distinct.sorted
   }
 
   /** The PERSISTED retention horizon — `_horizon_<day>` markers under
@@ -300,166 +343,58 @@ object MetricStore {
     if (beforeDay > old) {
       val (fs, p) = hadoopFs(spark, coldDir)
       fs.mkdirs(p)
-      fs.createNewFile(new org.apache.hadoop.fs.Path(p, s"_horizon_$beforeDay"))
+      fs.createNewFile(new Path(p, s"_horizon_$beforeDay"))
       if (old > 0L)
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"_horizon_$old"), false): Unit
+        fs.delete(new Path(p, s"_horizon_$old"), false): Unit
     }
-  }
-
-  /** Drain the LATE store into cold — the tick that turns
-    * [[readMaintained]]'s by-contract K-row late bound into a
-    * by-construction one (VERDICT r11 #1): for each published day
-    * holding late rows, merge cold + late last-write-wins per
-    * (path, ts) (the G6 fold — the late row is the newest write for
-    * its slot), stage the merged day under `_foldstage` (underscore:
-    * invisible to readers), swap it in (move the old cold day out,
-    * one rename in), and drop the late copies. After the fold the late
-    * store holds ONLY days whose merge hasn't run yet — under a fleet
-    * with a permanently clock-skewed source, reads stay one bounded
-    * tick behind instead of paying an ever-growing broadcast.
-    *
-    * Crash-safe at every point: the staged day is the write-ahead copy
-    * of the merge, so a fold that dies between the move-out and the
-    * publish leaves `_foldstage/day=d` complete and `day=d` absent —
-    * the NEXT tick's recovery pass finishes the rename (and until it
-    * runs, readers miss only that one day, the same pin-and-finish
-    * window every retention system documents); a fold that dies with
-    * both copies present re-merges (LWW converges); a fold that dies
-    * after the publish but before the late delete re-merges already-
-    * merged rows (idempotent). Returns the days folded.
-    */
-  def lateFoldTick(spark: SparkSession, hotDir: String,
-                   coldDir: String): Seq[Long] = {
-    val lateDir = s"$hotDir/_late"
-    val stage = s"$coldDir/_foldstage"
-    val (fs, _) = hadoopFs(spark, coldDir)
-    // recovery pass: finish any publish a prior fold died before
-    dayDirs(spark, stage).foreach { d =>
-      val stageP = new org.apache.hadoop.fs.Path(s"$stage/day=$d")
-      val coldP = new org.apache.hadoop.fs.Path(s"$coldDir/day=$d")
-      if (!fs.exists(coldP)) {
-        require(fs.rename(stageP, coldP), s"lateFoldTick: recovery of day=$d failed")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$lateDir/day=$d"), true): Unit
-      } else fs.delete(stageP, true): Unit // stale stage, cold copy intact
-    }
-    val published = coldDays(spark, coldDir).toSet
-    val folded = dayDirs(spark, lateDir).filter(published.contains)
-    folded.foreach { d =>
-      val stageP = new org.apache.hadoop.fs.Path(s"$stage/day=$d")
-      val coldP = new org.apache.hadoop.fs.Path(s"$coldDir/day=$d")
-      val lateP = new org.apache.hadoop.fs.Path(s"$lateDir/day=$d")
-      val merged = Rollup.upsert(
-        spark.read.parquet(coldP.toString).select(col("path"), col("ts"), col("value")),
-        spark.read.parquet(lateP.toString).select(col("path"), col("ts"), col("value")))
-      merged.coalesce(1)
-        .sortWithinPartitions(col("path"), col("ts"))
-        .write.mode("overwrite").parquet(stageP.toString)
-      fs.delete(coldP, true)
-      require(fs.rename(stageP, coldP), s"lateFoldTick: publishing day=$d failed")
-      fs.delete(lateP, true)
-    }
-    val stageRoot = new org.apache.hadoop.fs.Path(stage)
-    if (fs.exists(stageRoot)) fs.delete(stageRoot, true): Unit
-    folded
   }
 
   /** Maintained-store OBSERVABILITY (VERDICT r11 #7): one row per
-    * section — hot, cold, late — with day count, row count, and file
-    * count, so the failure modes the maintenance loop guards against
-    * (late accumulation, small-file regrowth, a stuck compactor) are
-    * VISIBLE as numbers before they degrade reads. The late section's
-    * steady state is (0, 0, 0) once [[lateFoldTick]] runs in the tick;
-    * growth there means a clock-skewed source is outrunning the fold.
-    * Day and row counts are data-derivable (the driver oracle
-    * recomputes them from the source routing); file counts are
-    * filesystem facts the spec pins.
+    * section with day count, row count, and file count, so the failure
+    * modes the maintenance loop guards against (small-file regrowth, a
+    * stuck compactor) are VISIBLE as numbers before they degrade reads.
+    * Cold counts what a read opens (each published day's newest
+    * generation); hot counts every hot day dir, the grace copies the
+    * next sweep deletes included. The `late` row is (0, 0, 0) by
+    * construction — late rows become a cold generation inside their
+    * tick — and stays for the report's readers. Day and row counts are
+    * data-derivable (the `store_report` oracle recomputes them from the
+    * source routing); file counts are filesystem facts the spec pins.
     */
   def storeReport(spark: SparkSession, hotDir: String,
                   coldDir: String): DataFrame = {
     import spark.implicits._
-    def section(name: String, dir: String): (String, Long, Long, Long) = {
-      val days = dayDirs(spark, dir)
-      val (fs, _) = hadoopFs(spark, dir)
-      val nFiles = days.map { d =>
-        val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$dir/day=$d"), true)
+    val store = resolve(spark, hotDir, coldDir)
+    def section(name: String, base: String, dirs: Seq[String]): (String, Long, Long, Long) = {
+      val (fs, _) = hadoopFs(spark, base)
+      val nFiles = dirs.map { d =>
+        val it = fs.listFiles(new Path(d), true)
         var n = 0L
         while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
         n
       }.sum
-      val nRows = if (days.isEmpty) 0L else spark.read.parquet(dir).count()
-      (name, days.size.toLong, nRows, nFiles)
+      (name, dirs.size.toLong, scan(spark, base, dirs).fold(0L)(_.count()), nFiles)
     }
-    Seq(section("cold", coldDir), section("hot", hotDir),
-      section("late", s"$hotDir/_late"))
+    Seq(section("cold", coldDir, store.coldPaths(store.cold.keys.toSeq.sorted)),
+      section("hot", hotDir, store.hotPaths(store.hot)), ("late", 0L, 0L, 0L))
       .toDF("section", "n_days", "n_rows", "n_files")
   }
 
-  /** One consistent scan of the maintained store: the cold copy wins
-    * for every published day, the hot copy serves the rest (the live
-    * day and any not-yet-compacted closed day). The day list resolves
-    * ONCE, here, so the frame this returns reads one layout per day
-    * for its whole lifetime — combined with the rename publication and
-    * the deferred hot delete, a read concurrent with a maintenance
-    * tick sees the old layout or the new one, never a mix.
+  /** One consistent read of the maintained store: each published day's
+    * newest generation, and every hot day the cold store has not
+    * published (the live day and any not-yet-compacted closed day). The
+    * store resolves ONCE, here, into explicit paths, so the frame this
+    * returns reads one copy per day for its whole lifetime; no copy it
+    * lists is rewritten, and none is deleted before the end of the tick
+    * after the one that replaced it ([[sweep]]).
     */
   def readMaintained(spark: SparkSession, hotDir: String,
                      coldDir: String): DataFrame = {
-    val base = readMaintainedBase(spark, hotDir, coldDir)
-    // LATE overlay: points that arrived after their day published merge
-    // into `<hot>/_late` (the G6 upsert store — CarbonStream
-    // .maintainTick's late path). Whisper slot semantics are
-    // last-write-wins, and the late row is by construction the newest
-    // write for its slot, so the late copy displaces the base copy per
-    // (path, ts). Late arrivals are rare by contract, so the key set
-    // broadcasts — one map-side anti-join, never a corpus shuffle.
-    val late = s"$hotDir/_late"
-    val (fs, lp) = hadoopFs(spark, late)
-    val lateHasDays = fs.exists(lp) &&
-      fs.listStatus(lp).exists(_.getPath.getName.startsWith("day="))
-    if (!lateHasDays) base
-    else {
-      val lateDf = spark.read.parquet(late)
-        .select(col("path"), col("ts"), col("value"),
-          col("day").cast("long").as("day"))
-      base.join(broadcast(lateDf.select(col("path"), col("ts"))),
-          Seq("path", "ts"), "left_anti")
-        .unionByName(lateDf)
-    }
-  }
-
-  private def readMaintainedBase(spark: SparkSession, hotDir: String,
-                                 coldDir: String): DataFrame = {
-    val cold = coldDays(spark, coldDir)
-    // a hot store with no day dirs (brand-new store, or a paused
-    // stream whose closed days all compacted) has no schema to infer —
-    // the maintained read must still answer from cold (or be typed
-    // empty), not throw
-    val (fs, hotP) = hadoopFs(spark, hotDir)
-    val hotHasDays = fs.exists(hotP) &&
-      fs.listStatus(hotP).exists(_.getPath.getName.startsWith("day="))
-    def coldAll = spark.read.parquet(coldDir)
-      .select(col("path"), col("ts"), col("value"), col("day").cast("long").as("day"))
-    if (!hotHasDays) {
-      if (cold.nonEmpty) coldAll
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("day",
-            org.apache.spark.sql.types.LongType))))
-    } else {
-      val hotAll = spark.read.parquet(hotDir)
-        .select(col("path"), col("ts"), col("value"),
-          col("day").cast("long").as("day"))
-      if (cold.isEmpty) hotAll
-      else hotAll.filter(!col("day").isin(cold.map(d => d: Any): _*))
-        .unionByName(coldAll)
-    }
+    val store = resolve(spark, hotDir, coldDir)
+    (scan(spark, coldDir, store.coldPaths(store.cold.keys.toSeq.sorted)) ++
+      scan(spark, hotDir, store.hotPaths(store.hot.filterNot(store.cold.contains))))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), PointSchema))
   }
 
   /** Fetch from the materialized store: archive selection as in

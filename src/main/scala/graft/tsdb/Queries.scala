@@ -1240,20 +1240,18 @@ object Queries {
   /** G26: the MAINTAINED store — the B15 compaction driven from the
     * ingest loop: three simulated micro-batches append through
     * CarbonStream.maintainTickOnce (the exact foreachBatch body of
-    * ingestSinkMaintained), each tick compacting the days the stream
-    * has moved past into the cold store (atomic per-day rename
-    * publication) and reclaiming hot copies published by earlier
-    * ticks. LATE arrival is part of the drive (VERDICT r10 #2): a
-    * deterministic slice of the FIRST third's points is held back and
-    * delivered with the LAST batch — by then their days are published,
-    * so the tick routes them through the `_late` upsert store instead
-    * of crashing; the read folds them back in last-write-wins. A
+    * ingestSinkMaintained), each tick publishing the days the stream
+    * has moved past as cold generation 0 (one rename per day) and
+    * sweeping the hot copies earlier ticks replaced. LATE arrival is
+    * part of the drive (VERDICT r10 #2): a deterministic slice of the
+    * FIRST third's points is held back and delivered with the LAST
+    * batch — by then their days are published, so the tick publishes
+    * each such day's next generation, last-write-wins per slot. A
     * committed batch id is then REPLAYED (foreachBatch at-least-once)
     * and must be a no-op. The read is MetricStore.readMaintained —
-    * cold wins per published day, hot serves the live tail, late
-    * overlays per slot — and must STILL equal the raw point multiset
-    * (lossless maintenance under late arrival and replay, the B15
-    * oracle shared).
+    * each published day's newest generation, hot for the live tail —
+    * and must STILL equal the raw point multiset (lossless maintenance
+    * under late arrival and replay, the B15 oracle shared).
     */
   /** The shared G26 fixture: a 3-tick maintained ingest (day-ordered
     * thirds, held-back late stragglers delivered last, one replayed
@@ -1303,13 +1301,13 @@ object Queries {
   }
 
   /** G28: maintained-store observability — the per-section
-    * (days, rows) report over the SAME fixture store, so the fold's
-    * by-construction bound is a CHECKED number: late must read
-    * (0, 0) after the tick's drain, cold must hold every closed day's
-    * rows (on-time AND folded late), hot exactly the live tail plus
-    * the last tick's grace copies. File counts are filesystem facts
-    * the spec pins ([[MetricStore.storeReport]] returns them; this
-    * projection keeps the SQL-derivable columns).
+    * (days, rows) report over the SAME fixture store: cold must hold
+    * every closed day's rows (on-time AND late, through each day's
+    * newest generation), hot exactly the live tail plus the copies the
+    * last tick replaced (the next sweep's), and late reads (0, 0) by
+    * construction. File counts are filesystem facts the spec pins
+    * ([[MetricStore.storeReport]] returns them; this projection keeps
+    * the SQL-derivable columns).
     */
   def storeReportQuery(spark: SparkSession, dir: String): DataFrame = {
     val root = maintainedRoot(spark, dir)

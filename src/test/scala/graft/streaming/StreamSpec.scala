@@ -227,8 +227,8 @@ class StreamSpec extends SparkSpec {
     assert(snapshot(cold) == committed._2)
     assert(values == want)
     // crash window where the lost tick had PUBLISHED the batch's days:
-    // the replay routes those points through the late store and the
-    // last-write-wins overlay converges — still no duplicates
+    // the replay publishes those points as the day's next generation,
+    // last-write-wins per slot — still no duplicates
     fs.delete(new org.apache.hadoop.fs.Path(s"$hot/_txn/1"), false)
     assert(CarbonStream.maintainTickOnce(
       b1.unionByName(df(("a.x", 90060L, 4.0))), hot, cold, 1L))
@@ -263,8 +263,8 @@ class StreamSpec extends SparkSpec {
       assert(dayDirs(cold) == Seq("day=0", "day=86400"))
       assert(dayDirs(hot).toSet == Set("day=86400", "day=172800"))
     } finally query.stop()
-    // published day: exactly one sorted file
-    assert(new java.io.File(s"$cold/day=0").listFiles()
+    // published day: exactly one sorted file in its current generation
+    assert(new java.io.File(s"$cold/day=0/gen=0").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
     // the maintained read is the full point multiset, each point once
     val got = MetricStore.readMaintained(spark, hot, cold)

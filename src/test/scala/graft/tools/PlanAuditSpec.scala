@@ -569,14 +569,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(ai.contains("BroadcastHashJoin"), ai.take(3000))
     assert(!ai.contains("SortMergeJoin") && !ai.contains("ShuffledHashJoin"),
       ai.take(3000))
-    // G26: the maintained read is a union of the two stores' scans
-    // (the day split resolves as plan-time metadata) and — since the
-    // r12 lateFoldTick drains `_late` into cold inside the tick — the
-    // late overlay short-circuits away entirely at steady state: the
-    // read plan is JOIN-FREE again (the r11 verdict's #1 done
-    // criterion). The transient non-empty-late case (at most one
-    // broadcast anti-join, never shuffled) is pinned in
-    // MetricStoreSpec's sustained-lateness test.
+    // G26: the maintained read is a union of explicit-path scans (each
+    // cold day's newest generation, the unpublished hot days), resolved
+    // as plan-time metadata; late rows live in the cold generations, so
+    // no overlay exists and the read plan is JOIN-FREE (the r11
+    // verdict's #1 done criterion).
     val sm = plan("store_maintained_fetch")
     assert(!sm.contains("Join"), sm.take(3000))
     // C15f: autocomplete off the persisted index is ONE K-row scan +
@@ -590,8 +587,8 @@ class PlanAuditSpec extends SparkSpec {
     val ad = plan("ann_index_deleted")
     assert(!ad.contains("SortMergeJoin") && !ad.contains("ShuffledHashJoin"),
       ad.take(3000))
-    // r11 G26r: after retention ageing (late store vacuumed too) the
-    // maintained read is back to the join-free union of scans
+    // r11 G26r: after retention ageing the maintained read is the same
+    // join-free union of scans
     val sr = plan("store_retention_fetch")
     assert(!sr.contains("Join"), sr.take(3000))
     // r11 A8: the aggregator plan is join-free (rename + fold only),

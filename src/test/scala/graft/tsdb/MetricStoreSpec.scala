@@ -151,9 +151,13 @@ class MetricStoreSpec extends SparkSpec {
       df.select("path", "ts", "value").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val want = multiset(pts)
-    // tick: publish the two closed days; the live day stays hot-only
-    assert(MetricStore.compactTick(spark, hot, cold, 2 * day) == Seq(0L, day))
+    def store = MetricStore.resolve(spark, hot, cold)
+    def compact() = MetricStore.compactTick(spark, store, 2 * day, Nil, spark.emptyDataFrame)
+    // tick: publish the two closed days as generation 0; the live day
+    // stays hot-only
+    assert(compact() == Seq(0L, day))
     assert(dayDirs(cold) == Seq("day=0", s"day=$day"))
+    assert(store.cold == Map(0L -> 0L, day -> 0L))
     // grace: hot copies survive the publishing tick, so a reader that
     // resolved its plan pre-publication still has its files — and a
     // post-publication read takes the cold copy per day, each point
@@ -161,13 +165,13 @@ class MetricStoreSpec extends SparkSpec {
     assert(dayDirs(hot).contains("day=0"))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want)
     // published days are one sorted file each
-    val coldDay0 = new java.io.File(s"$cold/day=0").listFiles()
+    val coldDay0 = new java.io.File(s"$cold/day=0/gen=0").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(coldDay0.length == 1)
-    // a later tick is a no-op for published days; cleanup then
+    // a later tick is a no-op for published days; the sweep then
     // reclaims the hot copies and the read is unchanged
-    assert(MetricStore.compactTick(spark, hot, cold, 2 * day).isEmpty)
-    assert(MetricStore.cleanupHot(spark, hot, cold) == Seq(0L, day))
+    assert(compact().isEmpty)
+    MetricStore.sweep(spark, store)
     assert(dayDirs(hot) == Seq(s"day=${2 * day}"))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want)
     // a mid-write staging dir is invisible to readers (underscore
@@ -175,28 +179,30 @@ class MetricStoreSpec extends SparkSpec {
     new java.io.File(s"$cold/_staging/day=${3 * day}").mkdirs()
     assert(MetricStore.coldDays(spark, cold) == Seq(0L, day))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want)
-    // published days are immutable — a late point for one neither
-    // kills the tick nor lands twice: it routes through the `_late`
-    // upsert store (VERDICT r10 #2) and the maintained read overlays
-    // it last-write-wins per slot. (m.0, 0) OVERWRITES an existing
-    // slot; (m.0, 60) fills a NEW slot in the published day.
+    // published generations are immutable — a late point for a
+    // published day neither kills the tick nor lands twice: the tick
+    // publishes the day's NEXT generation, last-write-wins per slot
+    // (VERDICT r10 #2). (m.0, 0) OVERWRITES an existing slot; (m.0, 60)
+    // fills a NEW slot in the published day.
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m.0", 60L, 9.9), ("m.0", 0L, 7.7)).toDF("path", "ts", "value"),
       hot, cold, batchId = 99L)
-    assert(new java.io.File(s"$hot/_late").exists)
+    assert(store.cold == Map(0L -> 1L, day -> 0L))
     assert(dayDirs(cold) == Seq("day=0", s"day=$day")) // nothing reopened
     val wantLate = (want.filterNot(p => p._1 == "m.0" && p._2 == 0L) ++
       Seq(("m.0", 60L, 9.9), ("m.0", 0L, 7.7))).sorted
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == wantLate)
-    // a REPLAYED late delivery converges (G6 last-write-wins): same
-    // multiset, no duplicates
+    // a REPLAYED late delivery converges (G6 last-write-wins): one more
+    // generation, same multiset, no duplicates; this tick's sweep took
+    // the generation the previous tick replaced
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m.0", 60L, 9.9), ("m.0", 0L, 7.7)).toDF("path", "ts", "value"),
       hot, cold, batchId = 100L)
+    assert(store.gens(0L) == Seq(1L, 2L))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == wantLate)
     // RETENTION ageing (whisper maxRetention): dropping days before a
-    // horizon is exact at day granularity — late-store days age too,
-    // days at/after the horizon survive untouched
+    // horizon is exact at day granularity — every generation of an aged
+    // day goes, days at/after the horizon survive untouched
     assert(MetricStore.retentionVacuum(spark, hot, cold, day) == Seq(0L))
     assert(dayDirs(cold) == Seq(s"day=$day"))
     val wantAged = wantLate.filter(_._2 >= day)
@@ -221,7 +227,7 @@ class MetricStoreSpec extends SparkSpec {
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.select("path", "ts", "value").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    def lateDays = MetricStore.dayDirs(spark, s"$hot/_late")
+    def day0Gens = MetricStore.resolve(spark, hot, cold).gens(0L)
     // tick 0: two days on-time — day 0 publishes, day 1 stays live
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0))
@@ -240,42 +246,80 @@ class MetricStoreSpec extends SparkSpec {
           .toDF("path", "ts", "value"), hot, cold, k.toLong)
       want = want.filterNot(p => p._2 == 60L) ++
         Seq(("m", lateTs, k.toDouble), ("m", 60L, 10.0 + k), ("m", (k + 1) * day, 5.0))
-      // the fold ran IN the tick: no unfolded late day survives it
-      assert(lateDays.isEmpty, s"tick $k left unfolded late days: $lateDays")
+      // the late rows became day 0's next generation IN the tick, and
+      // the tick swept the generation the previous tick replaced
+      assert(day0Gens == (math.max(0, k - 1) to k).map(_.toLong), s"tick $k")
       assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want.sorted)
     }
-    // TRANSIENT late (merged but not yet folded — the mid-tick window):
-    // the overlay is ONE broadcast anti-join on the K-row key set,
-    // never a shuffled join against the stores
-    graft.streaming.CarbonStream.mergeBatch(
-      Seq(("m", 45L, 7.0)).toDF("path", "ts", "value"), s"$hot/_late")
-    val planLate = MetricStore.readMaintained(spark, hot, cold)
-      .queryExecution.executedPlan.toString
-    assert(planLate.contains("BroadcastHashJoin"), planLate.take(3000))
-    assert(!planLate.contains("SortMergeJoin") &&
-      !planLate.contains("ShuffledHashJoin"), planLate.take(3000))
-    // the fold drains it; the overlay short-circuits away: join-free
-    assert(MetricStore.lateFoldTick(spark, hot, cold) == Seq(0L))
-    want = want :+ (("m", 45L, 7.0))
-    assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want.sorted)
+    // the read is a plain union of scans: no overlay, no join
     val plan = MetricStore.readMaintained(spark, hot, cold)
       .queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("join"), plan)
-    // published day 0 is still ONE file (the fold rewrites, not appends)
-    assert(new java.io.File(s"$cold/day=0").listFiles()
+    // day 0's current generation is ONE file (a rewrite, not an append)
+    assert(new java.io.File(s"$cold/day=0/gen=4").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
-    // CRASH RECOVERY: simulate a fold that died between move-out and
-    // publish — stage holds the merged day, cold copy missing; the next
-    // tick's recovery pass finishes the rename
-    val fs = new org.apache.hadoop.fs.Path(cold)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  }
+
+  test("a resolved read keeps its files while later ticks publish and sweep (D7)") {
+    val day = MetricStore.DaySeconds
+    val hot = Files.createTempDirectory("graft-snap-hot").toString
+    val cold = Files.createTempDirectory("graft-snap-cold").toString
+    def tick(id: Long, rows: (String, Long, Double)*): Unit =
+      graft.streaming.CarbonStream.maintainTick(rows.toDF("path", "ts", "value"), hot, cold, id)
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "ts", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    def exists(dir: String) = new java.io.File(dir).exists
+    tick(0, ("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0)) // day 0 publishes
+    tick(1, ("m", 2 * day, 4.0))                              // day 1 publishes
+    // a reader resolves: cold day 0 and 1 (generation 0), hot day 2
+    val frame = MetricStore.readMaintained(spark, hot, cold)
+    val snapshot = Seq(("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0), ("m", 2 * day, 4.0))
+    // late rows rewrite published day 0 while day 2 publishes: the
+    // tick replaces two copies the frame lists and deletes neither
+    tick(2, ("m", 60L, 9.0), ("m", 3 * day, 5.0))
+    assert(multiset(frame) == snapshot)
+    // a reader resolved between two ticks survives the next one, whose
+    // sweep takes exactly the copies replaced before it began
+    val between = MetricStore.readMaintained(spark, hot, cold)
+    val snapshot2 = (snapshot.filterNot(_._2 == 60L) ++
+      Seq(("m", 60L, 9.0), ("m", 3 * day, 5.0))).sorted
+    tick(3, ("m", 120L, 8.0), ("m", 4 * day, 6.0))
+    assert(multiset(between) == snapshot2)
+    assert(!exists(s"$cold/day=0/gen=0") && !exists(s"$hot/day=${2 * day}"))
+    assert(exists(s"$cold/day=0/gen=1") && exists(s"$hot/day=${3 * day}"))
+    assert(multiset(MetricStore.readMaintained(spark, hot, cold)) ==
+      (snapshot2 ++ Seq(("m", 120L, 8.0), ("m", 4 * day, 6.0))).sorted)
+  }
+
+  test("crash before the publish rename: the stage is invisible, the replay converges (D7)") {
+    val day = MetricStore.DaySeconds
+    val hot = Files.createTempDirectory("graft-crash-hot").toString
+    val cold = Files.createTempDirectory("graft-crash-cold").toString
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "ts", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    graft.streaming.CarbonStream.maintainTick(
+      Seq(("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0))
+        .toDF("path", "ts", "value"), hot, cold, 0L)
     val before = multiset(MetricStore.readMaintained(spark, hot, cold))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$cold/_foldstage"))
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$cold/day=0"),
-      new org.apache.hadoop.fs.Path(s"$cold/_foldstage/day=0")))
-    assert(MetricStore.lateFoldTick(spark, hot, cold).isEmpty) // recovery only
-    assert(MetricStore.coldDays(spark, cold).contains(0L))
+    val late = Seq(("m", 60L, 9.0), ("m", 120L, 4.0)).toDF("path", "ts", "value")
+    // a tick that died between the staging write and the rename: day
+    // 0's generation 1 sits complete under `_staging`
+    Rollup.upsert(spark.read.parquet(s"$cold/day=0/gen=0").select("path", "ts", "value"), late)
+      .coalesce(1).write.parquet(s"$cold/_staging/day=0/gen=1")
+    assert(MetricStore.coldDays(spark, cold) == Seq(0L))
+    assert(MetricStore.resolve(spark, hot, cold).cold == Map(0L -> 0L))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == before)
+    // the replayed tick publishes the generation; a replay after the
+    // rename (marker lost) adds one more with equal values
+    val want = (before.filterNot(_._2 == 60L) ++ Seq(("m", 60L, 9.0), ("m", 120L, 4.0))).sorted
+    for (g <- 1L to 2L) {
+      graft.streaming.CarbonStream.maintainTick(late, hot, cold, 1L)
+      assert(MetricStore.resolve(spark, hot, cold).cold == Map(0L -> g))
+      assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want)
+    }
+    assert(!new java.io.File(s"$cold/_staging").exists)
   }
 
   test("retention horizon persists: an aged-out day cannot resurrect (ADVICE r11)") {
@@ -317,10 +361,10 @@ class MetricStoreSpec extends SparkSpec {
     val rep = MetricStore.storeReport(spark, hot, cold)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // cold: days 0 and `day` published; day 0 carries the folded late
-    // point → 3 rows
+    // cold: days 0 and `day` published; day 0's current generation
+    // carries the late point → 3 rows
     assert(rep("cold")._1 == 2 && rep("cold")._2 == 4)
-    // late drained by the tick's fold
+    // late rows became a cold generation inside their tick
     assert(rep("late") == ((0L, 0L, 0L)))
     // hot: the live day plus the grace copy of the day tick 1 published
     assert(rep("hot")._1 == 2 && rep("hot")._2 == 2)
