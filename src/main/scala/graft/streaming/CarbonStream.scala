@@ -208,7 +208,10 @@ object CarbonStream {
     * watermark and no state store: the STORE ITSELF is the state, and
     * slot overwrite is arbitrarily-late-tolerant by construction
     * (contrast G1, where a watermark must bound open aggregation
-    * windows).
+    * windows). The store is the maintained layout with no hot half —
+    * every touched day is a new cold generation `dir/cold/day=D/gen=G`
+    * — read with `MetricStore.readMaintained(spark, s"$dir/hot",
+    * s"$dir/cold")`; `_txn` markers live under `dir`.
     */
   def upsertSink(points: Dataset[Point], dir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -221,51 +224,33 @@ object CarbonStream {
 
   /** Exactly-once [[mergeBatch]] ([[once]]). Without the marker a
     * replayed batch id would re-run the whole merge: value-idempotent
-    * (last-write-wins), but a full dynamic-partition REWRITE of every
-    * touched day, i.e. new files for nothing.
+    * (last-write-wins), but one more generation of every touched day,
+    * i.e. new files for nothing. In the crash window (merge published,
+    * marker lost) the replay publishes that one generation with equal
+    * values.
     */
   private[graft] def mergeBatchOnce(batch: DataFrame, dir: String,
                                     batchId: Long): Boolean =
     once(batch.sparkSession, dir, batchId)(mergeBatch(batch, dir))
 
   /** One micro-batch's merge, shared verbatim by the `stream_upsert`
-    * batch twin: read ONLY the day partitions the batch touches
-    * (partition pruning over the batch's distinct days — a bounded
-    * driver-side list, one entry per calendar day in one micro-batch),
-    * merge with Rollup.upsert's single last-write-wins groupBy, and
-    * rewrite ONLY those days (dynamic partition overwrite). The
-    * localCheckpoint materializes the merged days before the commit —
-    * the write replaces the very files the plan read.
+    * batch twin: ONE publish of every day the batch touches — each
+    * becomes its next cold generation, `Rollup.upsert(current
+    * generation, batch rows)`, or generation 0 when the day is new
+    * (MetricStore.compactTick with every day late) — then the sweep of
+    * what the tick's start listing shows superseded. Nothing a reader
+    * listed is rewritten: a frame resolved before the merge keeps
+    * reading its generation until the next tick's sweep.
     */
   private[graft] def mergeBatch(batch: DataFrame, dir: String): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val day = col("ts") - col("ts") % graft.tsdb.MetricStore.DaySeconds
     // two references: the distinct-day probe and the merge input
-    val b = batch.select(col("path"), col("ts"), col("value"), day.as("day")).cache()
-    val days = b.select(col("day")).distinct().as[Long].collect()
-    if (days.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an existing-but-EMPTY dir (fresh temp store) has no schema to
-      // infer; underscore entries (the _txn markers) are invisible to
-      // parquet discovery and must not count as data
-      val existing =
-        if (fs.exists(p) && fs.listStatus(p).exists(s =>
-            !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".")))
-          spark.read.parquet(dir)
-            .filter(col("day").isin(days.map(d => d: Any): _*))
-            .select(col("path"), col("ts"), col("value"))
-        else spark.emptyDataset[Point].toDF()
-      val merged = graft.tsdb.Rollup
-        .upsert(existing, b.select(col("path"), col("ts"), col("value")))
-        .withColumn("day", day)
-        .localCheckpoint()
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(dir)
-    }
+    val b = batch.select(col("path"), col("ts"), col("value")).cache()
+    val days = b.select(col("ts") - col("ts") % MetricStore.DaySeconds).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val store = MetricStore.resolve(spark, s"$dir/hot", s"$dir/cold")
+    MetricStore.compactTick(spark, store, Long.MinValue, days, b)
+    MetricStore.sweep(spark, store)
     b.unpersist()
   }
 

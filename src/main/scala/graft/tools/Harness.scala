@@ -48,7 +48,7 @@ object Harness {
     } catch { case _: Throwable => () }
 
   /** Drop every cached intermediate: the catalog's caches and the
-    * RDD-level persists (localCheckpoint, memoFetch, mergeBatch) that
+    * RDD-level persists (memoFetch's localCheckpoint) that
     * `catalog.clearCache` does not reach. */
   def clean(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

@@ -126,34 +126,6 @@ object MetricStore {
     }.reduce(_ unionByName _)
   }
 
-  /** Compact a day-partitioned point store (B15): streaming ingest
-    * ([[graft.streaming.CarbonStream.ingestSink]]) lands one parquet
-    * file per micro-batch per day — at a micro-batch every few seconds
-    * that is ~20k files/day/partition-dir, the classic streaming
-    * small-file problem that turns a pruned fetch into a
-    * metadata-listing storm at 100 TB. Each day's rows rewrite into
-    * ~one file (repartition BY the day column: a whole day hashes to
-    * one task), sorted by (path, ts) WITHIN files so parquet
-    * row-group min/max statistics prune the fetch's pushed
-    * StringStartsWith/EqualTo path predicates inside the day too —
-    * compaction buys back both the file count and intra-day IO.
-    *
-    * Writes to `dstDir` (a store cannot atomically overwrite itself —
-    * the swap is the caller's rename, the standard compact-and-swap);
-    * only days strictly BEFORE `beforeDay` move (CLOSED days — the day
-    * still receiving micro-batches keeps appending in `srcDir`, the
-    * watermark discipline). Lossless by construction: one shuffle, no
-    * aggregation — pinned by the driver oracle (compacted scan ≡ the
-    * raw point set) and the file-count spec.
-    */
-  def compactRaw(spark: SparkSession, srcDir: String, dstDir: String,
-                 beforeDay: Long = Long.MaxValue): Unit =
-    spark.read.parquet(srcDir)
-      .filter(col("day") < beforeDay)
-      .repartition(col("day"))
-      .sortWithinPartitions(col("day"), col("path"), col("ts"))
-      .write.partitionBy("day").mode("overwrite").parquet(dstDir)
-
   // ---- G26: the MAINTAINED store — hot appends + cold generations
   //
   // Layout: the stream appends to `hot/day=D/…`; every closed or
@@ -162,7 +134,10 @@ object MetricStore {
   // rewritten in place: each rewrite of a day is a NEW generation,
   // written under `cold/_staging` and published by one rename
   // ([[compactTick]]), and replaced copies go only in a later tick's
-  // [[sweep]].
+  // [[sweep]]. [[compactTick]] is the only writer of published days:
+  // the maintained tick, the G6 upsert store (cold only, no hot half)
+  // and B15's compaction of a plain `partitionBy("day")` store (read
+  // as the hot half) all publish through it.
 
   /** The one schema of every maintained-store read, hot or cold. */
   private val PointSchema: StructType = StructType(Seq(
@@ -229,13 +204,18 @@ object MetricStore {
     else Some(spark.read.schema(PointSchema).option("basePath", base).parquet(dirs: _*)
       .select(PointSchema.fieldNames.toSeq.map(col): _*))
 
+  private def noPoints(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), PointSchema)
+
   /** The publish half of a G26 maintenance tick, against `store`, the
     * listing the tick took at its start (plus the days it appended):
     *   - every closed hot day (strictly before `beforeDay`, not yet
     *     cold) becomes generation 0 of its cold day;
-    *   - every published day in `lateDays` becomes its next generation,
+    *   - every day in `lateDays` becomes its next generation,
     *     `Rollup.upsert(current generation, late rows)` — the G6
-    *     last-write-wins fold, so the late row wins its slot.
+    *     last-write-wins fold, so the late row wins its slot; a day
+    *     not yet published takes generation 0, `Rollup.upsert(∅, late
+    *     rows)` (the upsert store's first write of a day).
     * One job writes them all under `cold/_staging` (underscore:
     * invisible to every listing), sorted by (path, ts) within one file
     * per day so parquet row-group statistics prune the fetch's pushed
@@ -250,18 +230,22 @@ object MetricStore {
   def compactTick(spark: SparkSession, store: Layout, beforeDay: Long,
                   lateDays: Seq[Long], late: DataFrame): Seq[Long] = {
     val closed = store.hot.filter(d => d < beforeDay && !store.cold.contains(d))
-    val merged = scan(spark, store.coldDir, store.coldPaths(lateDays)).map { current =>
+    val merged = Option.when(lateDays.nonEmpty) {
+      val current = scan(spark, store.coldDir, store.coldPaths(lateDays.filter(store.cold.contains)))
+        .getOrElse(noPoints(spark))
       Rollup.upsert(current.select(col("path"), col("ts"), col("value")),
           late.select(col("path"), col("ts"), col("value")))
         .withColumn("day", col("ts") - col("ts") % DaySeconds)
     }
-    val gens = closed.map(_ -> 0L) ++ lateDays.map(d => d -> (store.cold(d) + 1))
+    val gens = closed.map(_ -> 0L) ++ lateDays.map(d => d -> store.cold.get(d).fold(0L)(_ + 1))
     (scan(spark, store.hotDir, store.hotPaths(closed)) ++ merged).reduceOption(_ unionByName _)
       .foreach { rows =>
         val staging = s"${store.coldDir}/_staging"
         rows.withColumn("gen", element_at(typedLit(gens.toMap), col("day")))
           .repartition(col("day"))
-          .sortWithinPartitions(col("day"), col("path"), col("ts"))
+          // led by the partition columns, or the writer re-sorts by
+          // (day, gen) alone and the (path, ts) order is lost
+          .sortWithinPartitions(col("day"), col("gen"), col("path"), col("ts"))
           .write.partitionBy("day", "gen").mode("overwrite").parquet(staging)
         val (fs, _) = hadoopFs(spark, staging)
         gens.foreach { case (d, g) =>
@@ -393,8 +377,7 @@ object MetricStore {
     val store = resolve(spark, hotDir, coldDir)
     (scan(spark, coldDir, store.coldPaths(store.cold.keys.toSeq.sorted)) ++
       scan(spark, hotDir, store.hotPaths(store.hot.filterNot(store.cold.contains))))
-      .reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), PointSchema))
+      .reduceOption(_ unionByName _).getOrElse(noPoints(spark))
   }
 
   /** Fetch from the materialized store: archive selection as in

@@ -1212,11 +1212,13 @@ object Queries {
     * metric stream lands as FOUR per-"micro-batch" appends, each
     * splintered across 8 tasks (the one-file-per-batch-per-day shape
     * [[graft.streaming.CarbonStream.ingestSink]] accumulates), then
-    * [[MetricStore.compactRaw]] rewrites each closed day into ~one
-    * (path, ts)-sorted file; the scan of the COMPACTED store must
-    * return exactly the raw point set — losslessness is the contract
-    * (the file-count and sort-layout claims are MetricStoreSpec's).
-    * Write-once per process like the store/fixture queries.
+    * [[MetricStore.compactTick]], reading that plain day-partitioned
+    * store as its hot half, publishes every day as cold generation 0,
+    * one (path, ts)-sorted file per day; the maintained read of the
+    * COMPACTED store must return exactly the raw point set —
+    * losslessness is the contract (the file-count and sort-layout
+    * claims are MetricStoreSpec's). Write-once per process like the
+    * store/fixture queries.
     */
   def storeCompactFetch(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -1229,10 +1231,11 @@ object Queries {
       for (k <- 0 until 4)
         m.filter(col("ts") % 4 === k).repartition(8)
           .write.partitionBy("day").mode("append").parquet(s"$root/raw")
-      MetricStore.compactRaw(spark, s"$root/raw", s"$root/compact")
+      MetricStore.compactTick(spark, MetricStore.resolve(spark, s"$root/raw", s"$root/compact"),
+        Long.MaxValue, Nil, spark.emptyDataFrame)
       java.nio.file.Files.writeString(marker, "ok")
     }
-    spark.read.parquet(s"$root/compact")
+    MetricStore.readMaintained(spark, s"$root/raw", s"$root/compact")
       .select(col("path"), col("ts"), round(col("value"), 4).as("value"))
       .orderBy(col("path"), col("ts"), col("value"))
   }
@@ -1569,10 +1572,13 @@ object Queries {
 
   /** G6 batch twin: the streaming slot-upsert replayed as two
     * micro-batch merges through the SAME CarbonStream.mergeBatch path —
-    * the base points, then the B11 late-rewrite batch arriving later.
-    * The final store state equals `ts_upsert`, so the oracle is shared
-    * verbatim (the two-phase max(struct(src, value)) fold composes:
-    * batch-2 incoming beats batch-1 stored exactly as src 1 beats 0).
+    * the base points (every day's generation 0), then the B11
+    * late-rewrite batch arriving later (the next generation of each
+    * day it touches). The final store state, read through
+    * MetricStore.readMaintained, equals `ts_upsert`, so the oracle is
+    * shared verbatim (the two-phase max(struct(src, value)) fold
+    * composes: batch-2 incoming beats batch-1 stored exactly as src 1
+    * beats 0).
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
     val store = java.nio.file.Files
@@ -1581,7 +1587,7 @@ object Queries {
     graft.streaming.CarbonStream.mergeBatch(m, store)
     graft.streaming.CarbonStream.mergeBatch(
       m.filter(col("ts") % 3 === 0).withColumn("value", col("value") * 2), store)
-    spark.read.parquet(store)
+    MetricStore.readMaintained(spark, s"$store/hot", s"$store/cold")
       .select(col("path"), col("ts"), round(col("value"), 4).as("value"))
       .orderBy(col("path"), col("ts"), col("value"))
   }
@@ -1589,9 +1595,10 @@ object Queries {
   /** G6x (r10): exactly-once under REPLAY — the same two micro-batches
     * through the txn-marked mergeBatchOnce, with batch 1 replayed (the
     * at-least-once delivery foreachBatch actually has after a
-    * failure): the marker makes the replay a file-level no-op, so the
-    * final store equals ts_upsert exactly — the oracle is shared
-    * verbatim, and the byte-level no-op is pinned in StreamSpec.
+    * failure): the marker makes the replay a file-level no-op (no
+    * third generation), so the final store equals ts_upsert exactly —
+    * the oracle is shared verbatim, and the byte-level no-op is pinned
+    * in StreamSpec.
     */
   def streamUpsertReplay(spark: SparkSession, dir: String): DataFrame = {
     val store = java.nio.file.Files
@@ -1601,7 +1608,7 @@ object Queries {
     graft.streaming.CarbonStream.mergeBatchOnce(m, store, 0L)
     graft.streaming.CarbonStream.mergeBatchOnce(late, store, 1L)
     graft.streaming.CarbonStream.mergeBatchOnce(late, store, 1L) // replay
-    spark.read.parquet(store)
+    MetricStore.readMaintained(spark, s"$store/hot", s"$store/cold")
       .select(col("path"), col("ts"), round(col("value"), 4).as("value"))
       .orderBy(col("path"), col("ts"), col("value"))
   }

@@ -129,11 +129,11 @@ class StreamSpec extends SparkSpec {
       source.addData(Point("a.b", 100L, 9.0))
       query.processAllAvailable()
     } finally query.stop()
-    val out = spark.read.parquet(s"$dir/store")
+    val out = graft.tsdb.MetricStore.readMaintained(spark, s"$dir/store/hot", s"$dir/store/cold")
       .select("path", "ts", "value").orderBy("path", "ts").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     // slot (a.b, 100) last-write-wins overwritten; untouched slots — and
-    // the untouched day-86400 partition — survive the dynamic overwrite
+    // the untouched day 86400 — survive day 0's next generation
     assert(out.toSeq == Seq(
       ("a.b", 100L, 9.0), ("a.b", 200L, 2.0), ("c.d", 90000L, 5.0)))
   }
@@ -165,7 +165,8 @@ class StreamSpec extends SparkSpec {
       walk(new java.io.File(dir)).map(f =>
         (f.getPath, f.length(), f.lastModified())).sortBy(_._1)
     }
-    def values = spark.read.parquet(dir).select("path", "ts", "value")
+    def values = graft.tsdb.MetricStore.readMaintained(spark, s"$dir/hot", s"$dir/cold")
+      .select("path", "ts", "value")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .sorted.toSeq
     assert(CarbonStream.mergeBatchOnce(
@@ -176,18 +177,36 @@ class StreamSpec extends SparkSpec {
     val want = Seq(("a.x", 100L, 9.0), ("a.x", 160L, 2.0))
     assert(values == want)
     // replayed batch id: merge skipped, store BYTES untouched (same
-    // files, sizes, mtimes — no dynamic-partition rewrite)
+    // files, sizes, mtimes — no new generation)
     assert(!CarbonStream.mergeBatchOnce(incoming, dir, 1L))
     assert(snapshot == committed)
     assert(values == want)
     // the crash window (merge committed, marker lost): the replay
-    // re-merges and last-write-wins converges to identical VALUES —
-    // files legitimately rewrite, observable state is exactly-once
+    // publishes one more generation and last-write-wins converges to
+    // identical VALUES — observable state is exactly-once
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_txn/1"), false)
     assert(CarbonStream.mergeBatchOnce(incoming, dir, 1L))
     assert(values == want)
+  }
+
+  test("upsert store: a resolved read keeps its snapshot across a merge that rewrites its day (G6)") {
+    import graft.tsdb.MetricStore
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-snap").toString
+    def df(rows: (String, Long, Double)*) = rows.toDF("path", "ts", "value")
+    def read = MetricStore.readMaintained(spark, s"$dir/hot", s"$dir/cold")
+    def values(frame: org.apache.spark.sql.DataFrame) = frame.select("path", "ts", "value")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq
+    assert(CarbonStream.mergeBatchOnce(
+      df(("a.x", 100L, 1.0), ("a.x", 160L, 2.0), ("b.y", 90000L, 5.0)), dir, 0L))
+    val frame = read
+    // the merge rewrites day 0, which the frame covers
+    assert(CarbonStream.mergeBatchOnce(df(("a.x", 100L, 9.0)), dir, 1L))
+    // the frame reads its pre-merge snapshot; a fresh read the merge
+    assert(values(frame) == Seq(("a.x", 100L, 1.0), ("a.x", 160L, 2.0), ("b.y", 90000L, 5.0)))
+    assert(values(read) == Seq(("a.x", 100L, 9.0), ("a.x", 160L, 2.0), ("b.y", 90000L, 5.0)))
   }
 
   test("maintained tick: replayed committed batch is a file-level no-op; crash window converges (G26)") {

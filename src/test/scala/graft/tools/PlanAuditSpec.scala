@@ -604,10 +604,17 @@ class PlanAuditSpec extends SparkSpec {
   test("no unbounded cartesian product in any driver query") {
     // broadcast nested-loop joins over bounded broadcasts (band index,
     // centroid codebook, query subset, 1-row bounds) are fine; a
-    // CartesianProduct node — both sides shuffled all-pairs — never is
-    for (name <- graft.SparkEntry.queries.keys.toSeq.sorted) {
-      val p = plan(name)
-      assert(!p.contains("CartesianProduct"), s"$name:\n${p.take(2000)}")
+    // CartesianProduct node — both sides shuffled all-pairs — never is.
+    // Every query is visited: a query that fails to build is reported
+    // beside the cartesians, and does not end the audit early
+    val problems = graft.SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      scala.util.Try(plan(name)) match {
+        case scala.util.Failure(e) => Some(s"$name: build failed: $e")
+        case scala.util.Success(p) if p.contains("CartesianProduct") =>
+          Some(s"$name: CartesianProduct\n${p.take(2000)}")
+        case _ => None
+      }
     }
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

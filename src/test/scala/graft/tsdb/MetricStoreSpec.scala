@@ -96,7 +96,7 @@ class MetricStoreSpec extends SparkSpec {
     assert(MetricStore.fetchStoredConf(spark, root, "zz.*", 89940L, now, now).isEmpty)
   }
 
-  test("compactRaw: lossless, one file per day, sorted within, closed days only (B15)") {
+  test("compactTick: lossless, one file per day, sorted within, closed days only (B15)") {
     // splinter 2 days of points across 3 appends × 4 tasks — the
     // small-file shape a per-micro-batch streaming sink accumulates
     val pts = (0L until 120L).map(i =>
@@ -106,32 +106,37 @@ class MetricStoreSpec extends SparkSpec {
     for (k <- 0 until 3)
       pts.filter((col("ts") / 1200L) % 3 === k).repartition(4)
         .write.partitionBy("day").mode("append").parquet(raw)
-    def files(dir: String) = new java.io.File(dir).listFiles()
+    // parquet files per day dir (raw) or per day's generation 0 (cold)
+    def files(dir: String, gen: String = "") = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("day="))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .map(d => d.getName -> new java.io.File(d, gen).listFiles()
+        .count(_.getName.endsWith(".parquet")))
       .toMap
     assert(files(raw).values.forall(_ >= 3), files(raw).toString) // fragmented
+    // the plain day-partitioned store is the hot half of the compaction
+    def compact(dst: String, beforeDay: Long) =
+      MetricStore.compactTick(spark, MetricStore.resolve(spark, raw, dst), beforeDay,
+        Nil, spark.emptyDataFrame)
     val dst = Files.createTempDirectory("graft-compact-dst").toString
-    MetricStore.compactRaw(spark, raw, dst)
-    // one file per closed day
-    assert(files(dst).values.forall(_ == 1), files(dst).toString)
+    assert(compact(dst, Long.MaxValue) == Seq(0L, MetricStore.DaySeconds))
+    // one file per published day
+    assert(files(dst, "gen=0").values.forall(_ == 1), files(dst, "gen=0").toString)
     // lossless: the exact point multiset survives
     val before = pts.select("path", "ts", "value").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val after = spark.read.parquet(dst).select("path", "ts", "value").collect()
+    val after = MetricStore.readMaintained(spark, raw, dst).select("path", "ts", "value").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(after == before)
     // sorted within files: each file's rows arrive in (path, ts) order
-    val day0 = new java.io.File(dst).listFiles()
-      .filter(_.getName.startsWith("day=")).head.listFiles()
+    val day0 = new java.io.File(s"$dst/day=0/gen=0").listFiles()
       .filter(_.getName.endsWith(".parquet")).head.getPath
     val inFile = spark.read.parquet(day0).select("path", "ts").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(inFile == inFile.sorted, inFile.take(10).toString)
-    // beforeDay gate: only closed days move
+    // beforeDay gate: only closed days publish
     val dst2 = Files.createTempDirectory("graft-compact-dst2").toString
-    MetricStore.compactRaw(spark, raw, dst2, beforeDay = MetricStore.DaySeconds)
-    assert(files(dst2).keySet == Set("day=0"), files(dst2).toString)
+    compact(dst2, MetricStore.DaySeconds)
+    assert(files(dst2, "gen=0").keySet == Set("day=0"), files(dst2, "gen=0").toString)
   }
 
   test("G26 maintained store: atomic day publication, reads never mix") {
