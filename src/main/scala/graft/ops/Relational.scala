@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -195,29 +195,43 @@ object Relational {
     * `t_<step>` with −1 sentinels, plus depth.
     */
   def funnelSteps(e: DataFrame, steps: Seq[String]): DataFrame = {
+    requireSteps(steps)
+    stepChain(e, steps, Seq("user_id")).orderBy(col("user_id"))
+  }
+
+  /** Every funnel entry point's step-list guard: a step list must be
+    * non-empty and name each step once.
+    */
+  private[graft] def requireSteps(steps: Seq[String]): Unit =
+    require(steps.nonEmpty && steps.distinct == steps,
+      s"funnel steps must be non-empty and distinct ($steps)")
+
+  /** The batch step rule, shared by [[funnelSteps]] and
+    * [[funnelHorizonReplay]]: a chain of conditional-min windows over
+    * ONE `keys` partitioning — step i's timestamp is the first
+    * `steps(i)` event at or after step i−1's — then one row per key
+    * group: the keys, the `extraAggs`, `t_<step>` with −1
+    * sentinels, and depth.
+    */
+  private def stepChain(e: DataFrame, steps: Seq[String], keys: Seq[String],
+                        extraAggs: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(steps.nonEmpty, "funnelSteps: need at least one step")
-    require(steps.toSet.size == steps.length,
-      s"funnelSteps: duplicate step types in $steps")
-    val w = Window.partitionBy(col("user_id"))
-    var df = e
-    steps.zipWithIndex.foreach { case (st, i) =>
+    val w = Window.partitionBy(keys.map(col): _*)
+    val chained = steps.zipWithIndex.foldLeft(e) { case (df, (st, i)) =>
       val cond =
         if (i == 0) col("event_type") === st
         else col("event_type") === st && col("t") >= col(s"s${i - 1}")
-      df = df.withColumn(s"s$i", min(when(cond, col("t"))).over(w))
+      df.withColumn(s"s$i", min(when(cond, col("t"))).over(w))
     }
-    val aggs = steps.indices.map(i => first(col(s"s$i")).as(s"v$i"))
+    val aggs = extraAggs ++ steps.indices.map(i => first(col(s"s$i")).as(s"v$i"))
     val depth = steps.indices
       .map(i => when(col(s"v$i").isNotNull, 1L).otherwise(0L))
       .reduce(_ + _)
-    df.groupBy(col("user_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("user_id") +:
-        steps.zipWithIndex.map { case (st, i) =>
-          coalesce(col(s"v$i"), lit(-1L)).as(s"t_$st")
-        } :+ depth.as("depth"): _*)
-      .orderBy(col("user_id"))
+    val g = chained.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    g.select(g.columns.take(keys.length + extraAggs.length).map(col) ++
+      steps.zipWithIndex.map { case (st, i) =>
+        coalesce(col(s"v$i"), lit(-1L)).as(s"t_$st")
+      } :+ depth.as("depth"): _*)
   }
 
   /** E10: LINEAR multi-touch ATTRIBUTION — the credit model E6's
@@ -316,8 +330,7 @@ object Relational {
   def funnelHorizonReplay(e: DataFrame, steps: Seq[String],
                           expireSec: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(steps.nonEmpty && steps.toSet.size == steps.length,
-      s"funnelHorizonReplay: steps must be non-empty and distinct ($steps)")
+    requireSteps(steps)
     require(expireSec >= 1, s"expireSec must be >= 1 (got $expireSec)")
     val rank = steps.zipWithIndex.tail
       .foldLeft(when(col("event_type") === steps.head, 0)) {
@@ -331,25 +344,8 @@ object Relational {
         col("t") - col("prev_t") > expireSec, 1L).otherwise(0L))
       .withColumn("jid", sum(col("nj"))
         .over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-    val wj = Window.partitionBy(col("user_id"), col("jid"))
-    var df = withJ
-    steps.zipWithIndex.foreach { case (st, i) =>
-      val cond =
-        if (i == 0) col("event_type") === st
-        else col("event_type") === st && col("t") >= col(s"s${i - 1}")
-      df = df.withColumn(s"s$i", min(when(cond, col("t"))).over(wj))
-    }
-    val aggs = min(col("t")).as("jstart") +:
-      steps.indices.map(i => first(col(s"s$i")).as(s"v$i"))
-    val depth = steps.indices
-      .map(i => when(col(s"v$i").isNotNull, 1L).otherwise(0L))
-      .reduce(_ + _)
-    df.groupBy(col("user_id"), col("jid"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("user_id") +: col("jstart") +:
-        steps.zipWithIndex.map { case (st, i) =>
-          coalesce(col(s"v$i"), lit(-1L)).as(s"t_$st")
-        } :+ depth.as("depth") :+ lit(1L).as("closed"): _*)
+    stepChain(withJ, steps, Seq("user_id", "jid"), min(col("t")).as("jstart"))
+      .drop("jid").withColumn("closed", lit(1L))
       .orderBy(col("user_id"), col("jstart"))
   }
 
@@ -609,9 +605,7 @@ object Relational {
     */
   def funnelPresplit(e: DataFrame, steps: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(steps.nonEmpty, "funnelPresplit: need at least one step")
-    require(steps.toSet.size == steps.length,
-      s"funnelPresplit: duplicate step types in $steps")
+    requireSteps(steps)
     val n = steps.length
     val withDay = e.withColumn("day", col("t") - col("t") % 86400L)
     val wd = Window.partitionBy(col("user_id"), col("day"))

@@ -332,7 +332,7 @@ object Whisper {
   /** Whisper fetch straight off a .wsp tree, with PER-FILE archive
     * selection from each file's own header — unlike `Fetch.fetch`'s
     * single shared retention spec, a real whisper dir mixes schemas.
-    * Same semantics as Fetch.select/fetchDense (oracle-verified B8):
+    * Same semantics as Fetch.select/fetchDensePaths (oracle-verified B8):
     * clamp [from, until] to the coarsest archive's oldest slot and
     * `now`, choose the highest-precision archive still covering the
     * clamped `from` (fall back to the coarsest), quantize bounds,

@@ -616,8 +616,9 @@ object CarbonStream {
         col("n_events"))
   }
 
-  final case class FunnelState(t1: Long, t2: Long, t3: Long)
-  /** `closed` = 1 only on a processing-time EXPIRY row (the terminal
+  /** One G20 progress row: [[FunnelUpdateN]] at the 3-step query shape
+    * (view → click → purchase), one column per step timestamp.
+    * `closed` = 1 only on a processing-time EXPIRY row (the terminal
     * emission of an abandoned journey); every progress row and every
     * batch-mode row carries 0 — batch has no clock, so expiry is a
     * streaming-only concept and the batch twin's oracle pins the
@@ -626,43 +627,68 @@ object CarbonStream {
   final case class FunnelUpdate(user_id: Long, t_view: Long, t_click: Long,
                                 t_purchase: Long, depth: Long, closed: Long)
 
-  /** G20: streaming conversion FUNNEL — E8's ordered-step law
-    * (view → click-at-or-after → purchase-at-or-after) held as
-    * per-user STATE in `flatMapGroupsWithState`: each micro-batch
-    * folds its user's events in (t, step-rank) order through the
-    * step rule (a view seeds t1, the first click ≥ t1 sets t2, the
-    * first purchase ≥ t2 sets t3; views sort before clicks before
-    * purchases at equal t so same-second chains complete — the E8 `>=`
-    * tie contract), emits one [[FunnelUpdate]] row whenever the
-    * user's funnel ADVANCED, and persists the three timestamps (24
-    * bytes/user) in the state store.
-    *
-    * MONOTONE by construction — the changeRelay arrival-order
-    * contract: a late-arriving view EARLIER than the seeded t1 never
-    * rewinds the funnel (the live pipeline answered conversion
-    * questions with what it had seen; the nightly E8 batch run is the
-    * corrector). On a single batch with empty state the fold is
-    * EXACTLY E8's window chain restricted to depth ≥ 1 users — the
-    * driver oracle's theorem.
+  /** One stream-funnel row: the step timestamps in step order (−1 =
+    * not reached), the completed-step count, and `closed` (1 only on
+    * the terminal row of an expired journey).
     */
   final case class FunnelUpdateN(user_id: Long, ts: Seq[Long],
                                  depth: Long, closed: Long)
 
-  /** [[funnelStream]] generalized to an arbitrary ordered step list
-    * (the [[graft.ops.Relational.funnelSteps]] twin): per-user state
-    * is an N-long array, the fold rule is step i fires on the first
-    * `steps(i)` event at-or-after step i−1's timestamp (ties resolve
-    * by step rank, as in the 3-step form), emission and expiry follow
-    * the G20/G20b contracts. Single-batch ≡ funnelSteps at depth ≥ 1
-    * (the spec pins N=2 and N=4).
+  /** The stream step rule, shared by every stream funnel: one call of
+    * the `flatMapGroupsWithState` function over the step slots
+    * s(0 until n) of the per-user state (−1 = not reached; a caller
+    * may persist more slots after them, sized by `slots`). A timed-out
+    * group emits its terminal closed = 1 row and REMOVES its state.
+    * Otherwise the group's events fold in (t, step rank) order, with
+    * non-step types ranked last, so same-second chains complete (the
+    * E8 `>=` tie contract): step i fires on the first `steps(i)` event
+    * at or after step i−1. `arm` sees the folded state before it is
+    * saved (the caller's timeout), and a row is emitted only when a
+    * step advanced.
+    */
+  private def foldSteps(steps: Seq[String], slots: Int, uid: Long,
+                        events: Array[(Long, String)],
+                        state: GroupState[Array[Long]])
+                       (arm: Array[Long] => Unit): Iterator[FunnelUpdateN] = {
+    val n = steps.length
+    def row(s: Array[Long], closed: Long) = {
+      val ts = s.take(n).toSeq
+      FunnelUpdateN(uid, ts, ts.count(_ >= 0).toLong, closed)
+    }
+    if (state.hasTimedOut) {
+      val s = state.get
+      state.remove()
+      Iterator.single(row(s, 1L))
+    } else {
+      val s = if (state.exists) state.get.clone() else Array.fill(slots)(-1L)
+      val before = s.take(n).toSeq
+      val rank = steps.zipWithIndex.toMap
+      for ((t, tp) <- events.sortBy(x => (x._1, rank.getOrElse(x._2, n))))
+        rank.get(tp).foreach { i =>
+          if (s(i) < 0 && (i == 0 || (s(i - 1) >= 0 && t >= s(i - 1))))
+            s(i) = t
+        }
+      arm(s)
+      state.update(s)
+      if (s.take(n).toSeq != before) Iterator.single(row(s, 0L))
+      else Iterator.empty
+    }
+  }
+
+  /** The streaming conversion funnel over an arbitrary ordered step
+    * list (the [[graft.ops.Relational.funnelSteps]] twin): per-user
+    * state is an N-long array folded by [[foldSteps]]. With `expireMs`
+    * set, each update re-arms a processing-time timeout whose firing
+    * emits the terminal closed = 1 row and removes the state, so the
+    * store holds only journeys touched within the horizon. Batch mode
+    * never times out (one invocation, no clock). Single-batch ≡
+    * funnelSteps at depth ≥ 1 (the spec pins N=2, 3 and 4).
     */
   def funnelStreamSteps(events: Dataset[(Long, Long, String)],
                         steps: Seq[String],
                         expireMs: Option[Long] = None): Dataset[FunnelUpdateN] = {
     import events.sparkSession.implicits._
-    require(steps.nonEmpty && steps.toSet.size == steps.length,
-      s"funnelStreamSteps: steps must be non-empty and distinct ($steps)")
-    val rank = steps.zipWithIndex.toMap
+    graft.ops.Relational.requireSteps(steps)
     val timeoutConf =
       if (expireMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
@@ -670,28 +696,9 @@ object CarbonStream {
       .flatMapGroupsWithState[Array[Long], FunnelUpdateN](
         OutputMode.Append, timeoutConf) {
         (uid, it, state: GroupState[Array[Long]]) =>
-          def depthOf(a: Array[Long]): Long = a.count(_ >= 0).toLong
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(FunnelUpdateN(uid, s.toSeq, depthOf(s), 1L))
-          } else {
-            val s = if (state.exists) state.get.clone()
-                    else Array.fill(steps.length)(-1L)
-            val before = s.toSeq
-            for ((_, t, tp) <- it.toArray
-                .sortBy(x => (x._2, rank.getOrElse(x._3, steps.length)))) {
-              rank.get(tp).foreach { i =>
-                if (s(i) < 0 && (i == 0 || (s(i - 1) >= 0 && t >= s(i - 1))))
-                  s(i) = t
-              }
-            }
-            state.update(s)
-            expireMs.foreach(state.setTimeoutDuration)
-            if (s.toSeq != before)
-              Iterator.single(FunnelUpdateN(uid, s.toSeq, depthOf(s), 0L))
-            else Iterator.empty
-          }
+          foldSteps(steps, steps.length, uid,
+            it.map(e => (e._2, e._3)).toArray, state)(
+            _ => expireMs.foreach(state.setTimeoutDuration))
       }
   }
 
@@ -720,10 +727,8 @@ object CarbonStream {
                             expireSec: Long,
                             watermark: String = "0 seconds"): Dataset[FunnelUpdateN] = {
     import events.sparkSession.implicits._
-    require(steps.nonEmpty && steps.toSet.size == steps.length,
-      s"funnelStreamEventTime: steps must be non-empty and distinct ($steps)")
+    graft.ops.Relational.requireSteps(steps)
     require(expireSec >= 1, s"expireSec must be >= 1 (got $expireSec)")
-    val rank = steps.zipWithIndex.toMap
     // the watermarked column must SURVIVE into the stateful operator —
     // a projection (or object map) that drops it strips the watermark
     // and the analyzer rejects the event-time timeout, so the
@@ -739,84 +744,39 @@ object CarbonStream {
       .flatMapGroupsWithState[Array[Long], FunnelUpdateN](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid, it, state: GroupState[Array[Long]]) =>
-          // state layout: slots 0..n-1 = step timestamps, slot n =
-          // last-activity event time (persisted so the horizon is
-          // monotone across batches)
-          def depthOf(a: Array[Long]): Long = a.take(n).count(_ >= 0).toLong
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(FunnelUpdateN(uid, s.take(n).toSeq, depthOf(s), 1L))
-          } else {
-            val s = if (state.exists) state.get.clone()
-                    else Array.fill(n + 1)(-1L)
-            val before = s.take(n).toSeq
-            var lastT = s(n)
-            for ((_, t, tp, _) <- it.toArray
-                .sortBy(x => (x._2, rank.getOrElse(x._3, n)))) {
-              lastT = math.max(lastT, t)
-              rank.get(tp).foreach { i =>
-                if (s(i) < 0 && (i == 0 || (s(i - 1) >= 0 && t >= s(i - 1))))
-                  s(i) = t
-              }
-            }
-            s(n) = lastT
-            state.update(s)
-            val armMs = math.max((lastT + expireSec) * 1000L,
-              state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(armMs)
-            if (s.take(n).toSeq != before)
-              Iterator.single(FunnelUpdateN(uid, s.take(n).toSeq, depthOf(s), 0L))
-            else Iterator.empty
+          val evs = it.map(e => (e._2, e._3)).toArray
+          foldSteps(steps, n + 1, uid, evs, state) { s =>
+            s(n) = evs.foldLeft(s(n))((m, e) => math.max(m, e._1))
+            state.setTimeoutTimestamp(math.max((s(n) + expireSec) * 1000L,
+              state.getCurrentWatermarkMs() + 1L))
           }
       }
   }
 
+  /** G20: streaming conversion FUNNEL — E8's ordered-step law
+    * (view → click-at-or-after → purchase-at-or-after) held as
+    * per-user STATE: [[funnelStreamSteps]] at N=3, each row mapped to
+    * a [[FunnelUpdate]]. Each micro-batch folds its user's events
+    * through the step rule (views sort before clicks before purchases
+    * at equal t, so same-second chains complete), emits one row
+    * whenever the user's funnel ADVANCED, and persists the three
+    * timestamps as an `array<bigint>` in the state store.
+    *
+    * MONOTONE by construction — the changeRelay arrival-order
+    * contract: a late-arriving view EARLIER than the seeded t_view
+    * never rewinds the funnel (the live pipeline answered conversion
+    * questions with what it had seen; the nightly E8 batch run is the
+    * corrector). On a single batch with empty state the fold is
+    * EXACTLY E8's window chain restricted to depth ≥ 1 users — the
+    * oracle's theorem. With `expireMs` set, journeys expire as
+    * in funnelStreamSteps (G20b).
+    */
   def funnelStream(events: Dataset[(Long, Long, String)],
                    expireMs: Option[Long] = None): Dataset[FunnelUpdate] = {
     import events.sparkSession.implicits._
-    val rank = Map("view" -> 0, "click" -> 1, "purchase" -> 2)
-    // production funnels EXPIRE abandoned journeys: with expireMs set,
-    // each update re-arms a processing-time timeout, and the timeout
-    // invocation emits the terminal `closed = 1` row and REMOVES the
-    // state — the state store holds only journeys touched within the
-    // horizon, instead of every user ever seen. Batch mode never
-    // times out (one invocation, no clock), so the batch twin and its
-    // oracle are unchanged by construction.
-    val timeoutConf =
-      if (expireMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    def depthOf(s: FunnelState): Long =
-      (if (s.t1 >= 0) 1L else 0L) + (if (s.t2 >= 0) 1L else 0L) +
-        (if (s.t3 >= 0) 1L else 0L)
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append, timeoutConf) {
-        (uid, it, state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(FunnelUpdate(uid, s.t1, s.t2, s.t3,
-              depthOf(s), 1L))
-          } else {
-            var s = if (state.exists) state.get else FunnelState(-1L, -1L, -1L)
-            val before = s
-            for ((_, t, tp) <- it.toArray
-                .sortBy(x => (x._2, rank.getOrElse(x._3, 3)))) {
-              if (tp == "view" && s.t1 < 0) s = s.copy(t1 = t)
-              if (tp == "click" && s.t2 < 0 && s.t1 >= 0 && t >= s.t1)
-                s = s.copy(t2 = t)
-              if (tp == "purchase" && s.t3 < 0 && s.t2 >= 0 && t >= s.t2)
-                s = s.copy(t3 = t)
-            }
-            state.update(s)
-            expireMs.foreach(state.setTimeoutDuration)
-            if (s != before)
-              Iterator.single(FunnelUpdate(uid, s.t1, s.t2, s.t3,
-                depthOf(s), 0L))
-            else Iterator.empty
-          }
-      }
+    funnelStreamSteps(events, Seq("view", "click", "purchase"), expireMs)
+      .map(u => FunnelUpdate(u.user_id, u.ts(0), u.ts(1), u.ts(2),
+        u.depth, u.closed))
   }
 
   /** G19: streaming as-of ENRICHMENT — E6's union-and-carry is batch;

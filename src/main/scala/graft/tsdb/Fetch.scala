@@ -62,14 +62,6 @@ object Fetch {
     }
   }
 
-  /** Dense fetch over a pre-built archive DataFrame (path, bucket, value).
-    * The grid derives from the archive itself, so the join side is
-    * re-aliased to keep attribute ids distinct (self-join safety).
-    */
-  def fetchDense(spark: SparkSession, archive: DataFrame, step: Long,
-                 from: Long, until: Long): DataFrame =
-    fetchDensePaths(archive.select(col("path")).distinct(), archive, step, from, until)
-
   /** Dense fetch where the grid's path set comes from an explicit paths
     * DataFrame (one `path` column) — a metric *index*, independent of
     * which paths happen to have data inside the window. A Whisper file
@@ -122,13 +114,6 @@ object Fetch {
     case _ => dense
   }
 
-  /** End-to-end fetch for a glob target over raw metrics: filter paths
-    * (scan-pushed rlike), build the archive cascade, select the archive
-    * for the window, return the dense series with RAW nulls at gaps —
-    * exactly what the reference's whisper fetch returns
-    * (L_DataWhisper.lua:525-552); gap fill is svg-render presentation
-    * (see gapPolicy).
-    */
   /** The (path, t, value) schema every fetch returns — also for the
     * out-of-range empty result, so callers (render, unionByName over
     * targets, fetchRouted's projection) never see a schemaless frame.
@@ -146,6 +131,13 @@ object Fetch {
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), FetchSchema)
 
+  /** End-to-end fetch for a glob target over raw metrics: filter paths
+    * (scan-pushed rlike), build the archive cascade, select the archive
+    * for the window, return the dense series with RAW nulls at gaps —
+    * exactly what the reference's whisper fetch returns
+    * (L_DataWhisper.lua:525-552); gap fill is svg-render presentation
+    * (see gapPolicy).
+    */
   def fetch(spark: SparkSession, metrics: DataFrame, target: String,
             spec: Seq[Retention.Archive], method: String, xff: Double,
             fromTime: Long, untilTime: Long, now: Long,

@@ -550,29 +550,12 @@ object Queries {
       Retention.parse("10m:1d,1h:7d,1d:60d"), "average", 0.0,
       fetchFrom + shiftSec, Now + shiftSec, Now)
 
-  /** Per-invocation (glob, shift) fetch memo with lineage truncation —
-    * the C9 planning fix (guide §3, very wide unions/joins: planning
-    * time itself becomes the bottleneck; materialise an intermediate).
-    * A gfn target referencing G globs (or one glob through several
-    * list functions) otherwise embeds G copies of the full
-    * archive-cascade subtree in ONE logical plan, and Catalyst
-    * planning — not execution — dominated the widest gfn queries
-    * (gfn_agg_lists: 6.3 s plan at sf0.1). `localCheckpoint` runs the
-    * fetch eagerly once per distinct (glob, shift) and replaces the
-    * subtree with its computed rows, so the function machinery plans
-    * over leaf-sized inputs. Results are identical (same rows); the
-    * memo lives only inside one query invocation — every bench/verify
-    * sample rebuilds it from the parquet inputs (no cross-run reuse).
-    */
-  private def fetchMemo(raw: (String, Long) => DataFrame): (String, Long) => DataFrame =
-    TargetExpr.memoFetch(raw)
-
   /** Parse + evaluate a render target through [[TargetExpr]] — every
     * C9 driver query exercises the PARSER, not hand-built combinator
     * chains, so the e2e surface is the one a Graphite client hits.
     */
   private def gfnEval(spark: SparkSession, dir: String, target: String): DataFrame =
-    TargetExpr.evalTargetAt(target, fetchMemo(gfnFetch(spark, dir)))
+    TargetExpr.evalTargetAt(target, TargetExpr.memoFetch(gfnFetch(spark, dir)))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
 
@@ -936,7 +919,7 @@ object Queries {
     * timestamp.
     */
   def gfnConsolidate(spark: SparkSession, dir: String): DataFrame = {
-    val fm = fetchMemo(gfnFetch(spark, dir))
+    val fm = TargetExpr.memoFetch(gfnFetch(spark, dir))
     val f = TargetExpr
       .evalTargetAt("""consolidateBy(vera.u1?.click,"max")""", fm)
       .unionByName(TargetExpr.evalTargetAt("vera.u1?.view", fm))
@@ -1005,7 +988,7 @@ object Queries {
       m.select(col("path")).distinct(),
       (pd, shiftSec) => Fetch.fetchByPaths(spark, m, pd, spec, "average",
         0.0, fetchFrom + shiftSec, Now + shiftSec, Now))
-    TargetExpr.evalTargetAt(target, fetchMemo(fetchAt), Some(env))
+    TargetExpr.evalTargetAt(target, TargetExpr.memoFetch(fetchAt), Some(env))
       .select(col("path"), col("t"), round(col("value"), 4).as("value"))
       .orderBy(col("path"), col("t"))
   }
@@ -1160,7 +1143,7 @@ object Queries {
     TargetExpr.evalTargetAt(
       """group(constantLine(42.5),threshold(95,"limit"),time("tick",21600),""" +
         """verticalLine("2024-01-25T12:00:00","deploy","blue"))""",
-      fetchMemo(gfnFetch(spark, dir)), None, Some(env))
+      TargetExpr.memoFetch(gfnFetch(spark, dir)), None, Some(env))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
   }
@@ -1176,7 +1159,7 @@ object Queries {
   def gfnAliasQuery(spark: SparkSession, dir: String): DataFrame =
     TargetExpr.evalTargetAt(
       """aliasQuery(vera.u{0,1,2,4}.click,"\.click$",".view","views last=%d")""",
-      fetchMemo(gfnFetch(spark, dir)))
+      TargetExpr.memoFetch(gfnFetch(spark, dir)))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"), col("value"))
 

@@ -184,12 +184,6 @@ object TargetExpr {
   def eval(e: Expr, fetch: String => DataFrame): DataFrame =
     evalAt(e, (g, _) => fetch(g), 0L)
 
-  /** Window-aware evaluation: leaf globs inside a `timeShift` subtree
-    * fetch at `shiftSec` relative to the render window (nested shifts
-    * accumulate), and the shifted points re-label back into the render
-    * window so every series aligns on the output grid. `fetchAt(glob,
-    * 0)` must be the unshifted render-window fetch.
-    */
   /** Mutable per-evaluation xFilesFactor context — graphite's
     * requestContext['xFilesFactor']: `setXFilesFactor` writes it while
     * its subtree evaluates, and xff-consuming functions called WITHOUT
@@ -199,6 +193,12 @@ object TargetExpr {
     */
   final class XffCtx { var value: Option[Double] = None }
 
+  /** Window-aware evaluation: leaf globs inside a `timeShift` subtree
+    * fetch at `shiftSec` relative to the render window (nested shifts
+    * accumulate), and the shifted points re-label back into the render
+    * window so every series aligns on the output grid. `fetchAt(glob,
+    * 0)` must be the unshifted render-window fetch.
+    */
   def evalAt(e: Expr, fetchAt: (String, Long) => DataFrame,
              shift: Long, tagEnv: Option[TagEnv] = None,
              winEnv: Option[WindowEnv] = None,

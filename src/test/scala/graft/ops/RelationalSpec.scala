@@ -115,6 +115,24 @@ class RelationalSpec extends SparkSpec {
       plan.take(2000))
   }
 
+  test("every funnel entry point rejects an empty or repeated step list") {
+    import graft.streaming.CarbonStream
+    val e = Seq((1L, 10L, "view")).toDF("user_id", "t", "event_type")
+    val entries: Seq[(String, Seq[String] => Any)] = Seq(
+      "funnelSteps" -> (s => Relational.funnelSteps(e, s)),
+      "funnelPresplit" -> (s => Relational.funnelPresplit(e, s)),
+      "funnelHorizonReplay" -> (s => Relational.funnelHorizonReplay(e, s, 100L)),
+      "funnelStreamSteps" ->
+        (s => CarbonStream.funnelStreamSteps(e.as[(Long, Long, String)], s)),
+      "funnelStreamEventTime" -> (s => CarbonStream.funnelStreamEventTime(e, s, 100L)))
+    for ((name, f) <- entries;
+         bad <- Seq(Seq.empty[String], Seq("view", "click", "view"))) {
+      val err = intercept[IllegalArgumentException](f(bad))
+      assert(err.getMessage.contains("non-empty and distinct"),
+        s"$name($bad): ${err.getMessage}")
+    }
+  }
+
   test("presplit sessionize == plain per-user rule, incl. midnight seams (E5-presplit)") {
     val day = 86400L
     // user 1: one session across a midnight + an isolated later one;

@@ -792,6 +792,40 @@ class StreamSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("seeded funnel corpora: stream fold ≡ window chain ≡ long-horizon replay, N=3 and N=4 (G20c)") {
+    import graft.ops.Relational
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(2024)
+    def chain(df: org.apache.spark.sql.DataFrame, n: Int) = df.collect()
+      .map(r => (r.getLong(0), (1 to n).map(r.getLong), r.getLong(n + 1))).toSeq
+    for (steps <- Seq(Seq("view", "click", "purchase"),
+                      Seq("view", "click", "cart", "purchase")); trial <- 1 to 3) {
+      // a 40-second span over 12 users: same-second ties everywhere,
+      // and `scroll` is a non-step decoy every funnel must ignore
+      val types = steps :+ "scroll"
+      val evs = (1 to 300).map { _ =>
+        (rnd.nextInt(12).toLong, rnd.nextInt(40).toLong, types(rnd.nextInt(types.length)))
+      }.toDF("user_id", "t", "event_type")
+      val n = steps.length
+      val windows = chain(Relational.funnelSteps(evs, steps), n)
+      val advanced = windows.filter(_._3 >= 1)
+      val fold = CarbonStream.funnelStreamSteps(evs.as[(Long, Long, String)], steps)
+        .collect().map(u => (u.user_id, u.ts, u.depth)).sortBy(_._1).toSeq
+      assert(fold == advanced, s"N=$n trial $trial: fold diverged")
+      if (n == 3) {
+        val g20 = CarbonStream.funnelStream(evs.as[(Long, Long, String)])
+          .collect().map(u => (u.user_id, Seq(u.t_view, u.t_click, u.t_purchase),
+            u.depth)).sortBy(_._1).toSeq
+        assert(g20 == advanced, s"trial $trial: funnelStream diverged")
+      }
+      // a horizon longer than the corpus span: one closed journey per user
+      val replay = Relational.funnelHorizonReplay(evs, steps, expireSec = 1000L)
+      assert(replay.filter(col("closed") =!= 1L).count() == 0L)
+      assert(chain(replay.drop("jstart", "closed"), n) == windows,
+        s"N=$n trial $trial: replay diverged")
+    }
+  }
+
   test("streaming funnel expiry: timeout emits terminal row, clears state (G20b)") {
     import graft.streaming.CarbonStream
     implicit val sqlCtx = spark.sqlContext
