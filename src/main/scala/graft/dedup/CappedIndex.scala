@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
@@ -12,6 +13,9 @@ import graft.functions.{MinHashKeys, SimHashKeys}
   * SimHash family): one build, one pair join, one id expansion, one
   * star clustering, one all-level probe with the exact/near/unique
   * gate, and one index merge. A [[Family]] supplies only what differs.
+  * The build and the merge's re-keying are one hash exchange on (band,
+  * level-0 key), and star clustering without a pair check reads bucket
+  * minima instead of pairs.
   *
   * The index keys each (signature, band) at a widening LEVEL: band
   * `b`'s level-`j` key refines its level-(j−1) key, and the top level
@@ -39,10 +43,11 @@ object CappedIndex {
     * @param bandType type of the `band` column the index carries
     * @param keys     the keys of the row's own `band` at every level, as
     *                 one array indexed by level (one compiled per-row
-    *                 call; the build explodes it, then recomputes the
+    *                 call; the build explodes it, partitions the level
+    *                 rows by its first element, then recomputes the
     *                 chosen level's key after its min(LEVEL) aggregate,
-    *                 which hash-aggregates with a map-side combine where
-    *                 min(struct(j, key)) would force a SortAggregate)
+    *                 which hash-aggregates where min(struct(j, key))
+    *                 would force a SortAggregate)
     * @param maxHamming optional pair check: signature pairs farther
     *                 apart are dropped and kept ones carry `hamming`
     */
@@ -81,32 +86,38 @@ object CappedIndex {
       lit(b).cast(f.bandType)): _*)).as("band"): _*)
 
   /** Every (j, key) of each (signature, band) row — one narrow row per
-    * level, map-only. Keys are computed for the row's own band only
-    * (key hashing is the keying stages' dominant CPU).
+    * level, map-only — with the row's level-0 key `key0`. Keys are
+    * computed for the row's own band only (key hashing is the keying
+    * stages' dominant CPU).
     */
   private def levelRows(f: Family, bandRows: DataFrame): DataFrame =
-    bandRows.select(f.cols :+ col("band") :+ posexplode(f.keys).as(Seq("j", "key")): _*)
+    bandRows.select(f.cols :+ col("band") :+ f.keys.as("ks"): _*)
+      .select(f.cols :+ col("band") :+ element_at(col("ks"), 1).as("key0") :+
+        posexplode(col("ks")).as(Seq("j", "key")): _*)
 
-  /** The level choice: ONE count shuffle + ONE join + ONE min-level
-    * groupBy (a per-level window cascade would be 10 sequential
-    * exchanges). Refinement is monotone (df never grows with j) and the
-    * top level has df = 1 over distinct signatures, so the min level
+  /** The level choice inside ONE hash exchange on (band, key0). Every
+    * level-j key refines the level-0 key, so a level-j bucket lies in one
+    * (band, key0) group: the df window over (band, key0, j, key) and the
+    * min-level aggregate over (sig, band, key0) are both satisfied by
+    * that partitioning — no df aggregate, no join back, and the input is
+    * evaluated once. Refinement is monotone (df never grows with j) and
+    * the top level has df = 1 over distinct signatures, so the min level
     * with df ≤ cap IS "the first level that fits" and always exists.
-    * Within a (sig, band) group j is unique, so key(min j) is the key
-    * of the chosen level.
+    * Within a (sig, band) group j is unique, so key(min j) is the key of
+    * the chosen level.
     */
   private def chooseLevels(f: Family, rows: DataFrame, maxDf: Int): DataFrame = {
-    val dfs = rows.groupBy(col("band"), col("j"), col("key"))
-      .agg(count(lit(1)).as("df"))
-    rows.join(dfs, Seq("band", "j", "key"))
-      .groupBy(f.cols :+ col("band"): _*)
+    val bucket = Window.partitionBy(col("band"), col("key0"), col("j"), col("key"))
+    rows.repartition(col("band"), col("key0"))
+      .withColumn("df", count(lit(1)).over(bucket))
+      .groupBy(f.cols :+ col("band") :+ col("key0"): _*)
       .agg(min(when(col("df") <= maxDf, col("j"))).as("lvl0"))
       .select(col(f.sig), col("band"), col("lvl0").cast("long").as("lvl"),
         element_at(f.keys, col("lvl0") + 1).as("bkey"))
   }
 
   /** The index build over DISTINCT signatures: (sig, band, lvl, bkey),
-    * one row per signature per band.
+    * one row per signature per band, in one shuffle.
     */
   def keys(f: Family, sigs: DataFrame, maxDf: Int): DataFrame = {
     checkCap(maxDf)
@@ -119,13 +130,20 @@ object CappedIndex {
       p.withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))).cast("long"))
         .filter(col("hamming") <= m))
 
-  /** Candidate signature pairs (s1 < s2) from the capped band self-join
-    * over DISTINCT signatures.
+  /** The keyed table of an (idCol, sig…) map's DISTINCT signatures,
+    * cached: the band self-join reads it twice, and one plan shape lets
+    * every consumer in a session (capped pairs, clusters) read the same
+    * cache entry.
     */
-  def sigPairs(f: Family, sigs: DataFrame, maxDf: Int): DataFrame = {
-    // cached: the self-join consumes the keyed table twice — uncached,
-    // the whole keying pipeline executes once per join side
-    val keyed = keys(f, sigs, maxDf).cachedOnce
+  private def keyedOnce(f: Family, sigMap: DataFrame, maxDf: Int): DataFrame =
+    keys(f, sigMap.select(f.cols: _*).distinct(), maxDf).cachedOnce
+
+  /** Candidate signature pairs (s1 < s2) from the capped band self-join
+    * over an (idCol, sig…) map's DISTINCT signatures: the keyed table
+    * joined to itself on (band, lvl, bkey).
+    */
+  def sigPairs(f: Family, sigMap: DataFrame, maxDf: Int): DataFrame = {
+    val keyed = keyedOnce(f, sigMap, maxDf)
     probe(f, keyed, keyed).filter(col("s1") < col("s2"))
   }
 
@@ -136,7 +154,7 @@ object CappedIndex {
     */
   def pairs(f: Family, sigMap: DataFrame, idCol: String, maxDf: Int): DataFrame = {
     val (s, x, y) = (f.sig, s"m1.$idCol", s"m2.$idCol")
-    val sp = sigPairs(f, sigMap.select(f.cols: _*).distinct(), maxDf)
+    val sp = sigPairs(f, sigMap, maxDf)
     // two expansion joins reference the id→sig map
     val m = sigMap.cachedOnce
     val cross = sp
@@ -160,23 +178,36 @@ object CappedIndex {
     * (doc_id, sig…) is its own singleton cluster. Output: (doc_id,
     * cluster_id, keep) ordered by doc_id, keep = 1 iff doc_id ==
     * cluster_id.
+    *
+    * A family without a pair check needs no pairs: a signature's
+    * neighbours are exactly the other members of its buckets, so its
+    * cluster id is the min over its buckets of the bucket's min rep (a
+    * window over (band, lvl, bkey) of the keyed table). A family with a
+    * pair check orients each checked [[sigPairs]] pair by rep order.
     */
   def clusters(f: Family, docs: DataFrame, sigMap: DataFrame, maxDf: Int): DataFrame = {
     val s = f.sig
-    val sp = sigPairs(f, sigMap.select(f.cols: _*).distinct(), maxDf)
-    // groups: referenced by the rep joins and the final assignment
-    val groups = sigMap.groupBy(col(s)).agg(min(col("doc_id")).as("rep")).cachedOnce
-    // orient each sig pair by rep order; the larger rep's group gets a
-    // root candidate — min over candidates is the cluster id
-    val oriented = sp
-      .join(groups.as("g1"), col("s1") === col(s"g1.$s"))
-      .join(groups.as("g2"), col("s2") === col(s"g2.$s"))
-      .select(
-        when(col("g1.rep") < col("g2.rep"), col("s2")).otherwise(col("s1")).as(s),
-        least(col("g1.rep"), col("g2.rep")).as("cand"))
-    val roots = oriented.groupBy(col(s)).agg(min(col("cand")).as("root"))
-    val clusterIds = groups.join(roots, Seq(s), "left")
-      .select(col(s), coalesce(col("root"), col("rep")).as("cluster_id"))
+    val groups = sigMap.groupBy(col(s)).agg(min(col("doc_id")).as("rep"))
+    val clusterIds = if (f.maxHamming.isEmpty)
+      keyedOnce(f, sigMap, maxDf).join(groups, Seq(s))
+        .withColumn("root", min(col("rep")).over(
+          Window.partitionBy(col("band"), col("lvl"), col("bkey"))))
+        .groupBy(col(s)).agg(min(col("root")).as("cluster_id"))
+    else {
+      // groups: referenced by the rep joins and the final assignment
+      val g = groups.cachedOnce
+      // the larger rep's group gets a root candidate — min over
+      // candidates is the cluster id
+      val roots = sigPairs(f, sigMap, maxDf)
+        .join(g.as("g1"), col("s1") === col(s"g1.$s"))
+        .join(g.as("g2"), col("s2") === col(s"g2.$s"))
+        .select(
+          when(col("g1.rep") < col("g2.rep"), col("s2")).otherwise(col("s1")).as(s),
+          least(col("g1.rep"), col("g2.rep")).as("cand"))
+        .groupBy(col(s)).agg(min(col("cand")).as("root"))
+      g.join(roots, Seq(s), "left")
+        .select(col(s), coalesce(col("root"), col("rep")).as("cluster_id"))
+    }
     docs.join(clusterIds, Seq(s), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       .withColumn("keep", when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L))

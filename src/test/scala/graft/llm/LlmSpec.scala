@@ -1468,6 +1468,63 @@ class LlmSpec extends SparkSpec {
     assert(out.filter(_._2 == 0L).map(_._1).toSet == Set(0L, 1L, 2L))
   }
 
+  test("minhash clusters and incremental verdicts replay the keyed buckets' pairs (F3k, F36)") {
+    // adversarial corpora: a 3- or 6-word alphabet (hot level-0 buckets
+    // that force widening), exact-dup groups, and docs too short to sign;
+    // the references see only the collected CappedIndex.keys rows
+    for (alphabet <- Seq(3, 6); maxDf <- Seq(2, 4, 64)) {
+      val rnd = new scala.util.Random(alphabet * 100 + maxDf)
+      val texts = (0L until 160L).map { i =>
+        val n = if (i % 11 == 0) 1 + rnd.nextInt(2) else 3 + rnd.nextInt(8)
+        i -> Seq.fill(n)("w" + rnd.nextInt(alphabet)).mkString(" ")
+      }
+      val copies = texts.take(20).map { case (i, t) => (1000L + i, t) }
+      val adv = (texts ++ copies).toDF("doc_id", "text")
+      val sigOf = Dedup.minhashSigRows(adv).select(col("doc_id"), Dedup.minhashSigKey)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val buckets = CappedIndex.keys(CappedIndex.MinHash, Dedup.distinctSigs(adv), maxDf)
+        .collect().groupBy(r => (r.getAs[Int]("band"), r.getAs[Long]("lvl"), r.getAs[String]("bkey")))
+      val nbrs = buckets.values.toSeq.flatMap { rs =>
+        val sks = rs.map(_.getAs[String]("sk")).distinct.toSeq
+        for (a <- sks; b <- sks if a != b) yield a -> b
+      }.groupBy(_._1).map { case (a, ps) => a -> ps.map(_._2).toSet }
+      val ctx = s"alphabet $alphabet, maxDf $maxDf"
+      // star clustering: a sig group's rep is its min doc_id; the
+      // cluster id is the min rep over the group and its neighbours
+      val rep = sigOf.groupBy(_._2).map { case (sk, ds) => sk -> ds.keys.min }
+      val wantClusters = adv.select("doc_id").as[Long].collect().sorted.map { d =>
+        val c = sigOf.get(d).fold(d)(sk =>
+          (nbrs.getOrElse(sk, Set.empty[String]).map(rep) + rep(sk)).min)
+        (d, c, if (c == d) 1L else 0L)
+      }.toSeq
+      val gotClusters = Dedup.minhashClusters(spark, adv, maxDf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(gotClusters == wantClusters, ctx)
+      // arrival replay: incoming docs in id order, base sigs already
+      // seen; a sig seen before is exact, a first arrival with a seen
+      // neighbour is near
+      val base = adv.filter(col("doc_id") % 3 =!= 0)
+      val incoming = adv.filter(col("doc_id") % 3 === 0)
+      val seen = scala.collection.mutable.Set(
+        sigOf.collect { case (d, sk) if d % 3 != 0 => sk }.toSeq: _*)
+      val wantVerdicts = incoming.select("doc_id").as[Long].collect().sorted.map { d =>
+        val v = sigOf.get(d).fold("unique") { sk =>
+          if (seen(sk)) "exact_dup"
+          else {
+            val near = nbrs.getOrElse(sk, Set.empty[String]).exists(seen)
+            seen += sk
+            if (near) "near_dup" else "unique"
+          }
+        }
+        (d, v, if (v == "unique") 1L else 0L)
+      }.toSeq
+      val gotVerdicts = Dedup.minhashIncremental(spark, base, incoming, maxDf).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      assert(gotVerdicts == wantVerdicts, ctx)
+      assert(wantVerdicts.map(_._2).toSet == Set("unique", "near_dup", "exact_dup"), ctx)
+    }
+  }
+
   test("capped minhash equals exact at high cap, subsets at low cap (F3c)") {
     val exact = Dedup.minhashLsh(spark, docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

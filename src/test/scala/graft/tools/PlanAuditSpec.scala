@@ -249,6 +249,38 @@ class PlanAuditSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("capped index build: one (band, key0) exchange, no join, no broadcast") {
+    // every level-j key refines the level-0 key, so the df window and
+    // the min-level aggregate both run inside one hash partitioning on
+    // (band, key0); a df aggregate joined back would add an exchange or
+    // a broadcast and evaluate the input twice
+    import graft.dedup.{CappedIndex, Dedup}
+    spark.catalog.clearCache()
+    val docs = graft.core.Tables.documents(spark, dir)
+    // local input: the signature pipeline's own exchanges stay out
+    def local(df: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val sigs = Seq(
+      CappedIndex.MinHash -> local(Dedup.distinctSigs(docs)),
+      CappedIndex.SimHash -> local(Dedup.simhash(spark, docs).select("simhash").distinct()))
+    for ((f, s) <- sigs) {
+      val p = CappedIndex.keys(f, s, 64).queryExecution.executedPlan.toString
+      assert("(?<![A-Za-z])Exchange ".r.findAllIn(p).size == 1, s"${f.sig}:\n$p")
+      assert(!p.contains("Join") && !p.contains("BroadcastExchange"), s"${f.sig}:\n$p")
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("minhash clusters and incremental verdicts: no join on the bucket key") {
+    // a signature's cluster and its near verdict are bucket aggregates
+    // (windows over (band, lvl, bkey)), not a band self-join
+    for (name <- Seq("dedup_minhash_clusters", "dedup_incremental")) {
+      val p = plan(name)
+      assert(p.contains("Window"), s"$name:\n${p.take(3000)}")
+      assert("Join[^\n]*bkey#".r.findFirstIn(p).isEmpty, s"$name:\n${p.take(3000)}")
+    }
+  }
+
   test("dedup_cc_clusters: a steady-state iteration is one groupBy shuffle") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
