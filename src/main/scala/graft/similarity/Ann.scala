@@ -188,34 +188,44 @@ object Ann {
     var cents = initialCentroids(vecs, nCentroids)
     for (_ <- 0 until iters) {
       val assigned = v.crossJoin(broadcast(cents))
-        .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
+        .withColumn("csim", centSim("nrm"))
         .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("embedding").as("ve"), col("cent_id")),
-          struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("a"))
+        .agg(nearest(struct(col("embedding").as("ve"), col("cent_id")),
+          col("csim"), col("cent_id")).as("a"))
         .select(col("a.cent_id").as("cent_id"), col("a.ve").as("ve"))
       cents = lloydMeans(assigned, cents)
     }
     cents
   }
 
-  /** One Lloyd mean-rebuild step shared by the flat and two-level
-    * trainers: `assigned` is (cent_id, ve) — element-wise FIXED-POINT
-    * mean (1e-6-grid integer sum / count, order-independent, the
-    * engine-parity contract), one narrow (cent_id, dim, value)
-    * aggregation; sort_array(collect_list(struct)) makes the rebuild
-    * order-exact (collect_list alone is partition-order-dependent);
-    * a centroid whose list goes empty keeps its previous value.
+  /** Element-wise FIXED-POINT mean of the array column `vec` per
+    * `keys` group, as `mce` (array<float>): each component scales to a
+    * rounded 1e-6-grid long, the long sum is exact and
+    * order-independent (the engine-parity contract), one narrow
+    * (keys, dim, value) aggregation; array_sort(collect_list(struct))
+    * makes the rebuild order-exact (collect_list alone is
+    * partition-order-dependent). Shared by the coarse ([[lloydMeans]])
+    * and product ([[pqCodebookTrained]]) trainers.
     */
-  private def lloydMeans(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val means = assigned
-      .select(col("cent_id"), posexplode(col("ve")).as(Seq("d", "comp")))
-      .groupBy(col("cent_id"), col("d"))
+  private def fixedPointMean(rows: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    val k = keys.map(col)
+    rows.select(k :+ posexplode(col(vec)).as(Seq("d", "comp")): _*)
+      .groupBy(k :+ col("d"): _*)
       .agg(sum(round(col("comp") * 1e6, 0).cast("long")).as("ms"),
         count(lit(1)).as("mn"))
       .withColumn("m", col("ms").cast("double") / (col("mn").cast("double") * 1e6))
-      .groupBy(col("cent_id"))
+      .groupBy(k: _*)
       .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
         x => x.getField("m").cast("float")).as("mce"))
+  }
+
+  /** One Lloyd mean-rebuild step shared by the flat and two-level
+    * trainers: `assigned` is (cent_id, ve), rebuilt by
+    * [[fixedPointMean]]; a centroid whose list goes empty keeps its
+    * previous value.
+    */
+  private def lloydMeans(assigned: DataFrame, prev: DataFrame): DataFrame = {
+    val means = fixedPointMean(assigned, Seq("cent_id"), "ve")
     // means is K rows but sits behind a corpus-wide aggregate whose
     // size ESTIMATE blocks auto-broadcast — pin it, or this tiny
     // codebook join becomes a SortMergeJoin
@@ -430,42 +440,76 @@ object Ann {
       refinedCentroidsSampled2Level(vecs, nCentroids, iters, rateBp, nSuper))
 
   private def ivfTopKWith(queries: DataFrame, vecs: DataFrame, k: Int,
-                          nProbe: Int, centroids: DataFrame): DataFrame = {
-    val cents = broadcast(centroids)
-    val v = vecs.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    // assignment: argmax over K centroid sims as a max_by AGGREGATE, not
-    // a window — partial aggregation collapses the K scored rows per
-    // vector map-side, so the shuffle carries one row per vector
-    // instead of K (ties break to the lowest cent_id, engine-stable)
-    val assigned = v.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(
-        struct(col("embedding").as("ve"), col("nrm").as("vn"), col("cent_id")),
-        struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("a"))
-      .select(col("vec_id"), col("a.ve").as("ve"), col("a.vn").as("vn"),
-        col("a.cent_id").as("cent_id"))
-    // probe lists: the query side is small by construction, a window
-    // rank over its K scored rows is fine
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val qScored = q.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
+                          nProbe: Int, centroids: DataFrame): DataFrame =
+    topK(ivfCandidates(queries, vecs, nProbe, centroids), k)
+
+  /** Cosine of the row's `embedding` against a codebook row's (ce, cn),
+    * the row's own norm in column `nrm` — the centroid score every IVF
+    * routing step ranks with [[nearest]] or [[probeRank]].
+    */
+  private def centSim(nrm: String): Column =
+    dot(col("embedding"), col("ce")) / (col(nrm) * col("cn"))
+
+  /** The IVF routing rule, written once: the `payload` of the row with
+    * the highest round(sim, 6), ties to the lowest `id`. A max_by
+    * AGGREGATE, not a window — partial aggregation collapses the K
+    * scored rows per vector map-side, so the shuffle carries one row
+    * per vector instead of K. Keep `payload` attribute-only: a
+    * computed payload is re-evaluated per compared row inside the
+    * aggregate, so a PQ-code payload would re-run the encode kernel ~K
+    * times per vector (measured 10× wall; the reason the IVFPQ lists
+    * join the encode after [[coarseAssign]], see
+    * [[AnnIndex.encodeLists]]). The SQ8 codes of [[ivfTopKQuantized]]
+    * are the tolerated exception: their quantize costs about as much
+    * as the csim they ride with, the PQ kernel ~30× that.
+    * [[probeRank]] is the same order as a window; [[assignRowwise]] is
+    * the map-only, stream-safe form.
+    */
+  private def nearest(payload: Column, sim: Column, id: Column): Column =
+    max_by(payload, struct(round(sim, 6).as("s"), (-id).as("t")))
+
+  /** Each query's nProbe nearest lists: the (q_id, centroid) rows of
+    * `qScored`, scored in `csim`, ranked round(csim, 6) desc then
+    * lowest cent_id (the [[nearest]] order). The query side is small
+    * by construction, so a window over its K scored rows is fine; the
+    * caller keeps its query-side columns and broadcasts the result.
+    */
+  private def probeRank(qScored: DataFrame, nProbe: Int): DataFrame = {
     val qw = Window.partitionBy(col("q_id"))
       .orderBy(round(col("csim"), 6).desc, col("cent_id"))
-    val probes = broadcast(qScored
-      .withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
-      .select(col("q_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cent_id")))
-    // NO dedup on the candidate stream: one coarse assignment per
-    // vector × distinct probe lists per query makes (q_id, vec_id)
-    // unique by construction (the F25d proof, which holds verbatim
-    // here) — a dropDuplicates would re-shuffle the largest
-    // intermediate in the query for nothing (VERDICT r6 #2)
-    val scored = assigned.join(probes, Seq("cent_id"))
+    qScored.withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
+  }
+
+  /** The float-IVF candidate stage of [[ivfTopKWith]] and [[ivfRange]]:
+    * every vector's list (its [[nearest]] centroid, the float vector
+    * and norm as payload), each query's [[probeRank]] lists, the
+    * cent_id equi-join, the self-filter and the exact `cos`. NO dedup
+    * on the candidate stream: one coarse assignment per vector ×
+    * distinct probe lists per query makes (q_id, vec_id) unique by
+    * construction (the F25d proof) — a dropDuplicates would re-shuffle
+    * the largest intermediate in the query for nothing (VERDICT r6 #2).
+    */
+  private def ivfCandidates(queries: DataFrame, vecs: DataFrame, nProbe: Int,
+                            centroids: DataFrame): DataFrame = {
+    val cents = broadcast(centroids)
+    val v = vecs.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+    val assigned = v.crossJoin(cents)
+      .withColumn("csim", centSim("nrm"))
+      .groupBy(col("vec_id"))
+      .agg(nearest(
+        struct(col("embedding").as("ve"), col("nrm").as("vn"), col("cent_id")),
+        col("csim"), col("cent_id")).as("a"))
+      .select(col("vec_id"), col("a.ve").as("ve"), col("a.vn").as("vn"),
+        col("a.cent_id").as("cent_id"))
+    val q = queries.select(col("vec_id").as("q_id"), col("embedding"),
+      norm(col("embedding")).as("nrm"))
+    val probes = broadcast(
+      probeRank(q.crossJoin(cents).withColumn("csim", centSim("nrm")), nProbe)
+        .select(col("q_id"), col("embedding").as("qe"),
+          col("nrm").as("qn"), col("cent_id")))
+    assigned.join(probes, Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qe"), col("ve")) / (col("qn") * col("vn")))
-    topK(scored, k)
   }
 
   /** F48: exact RANGE search — every neighbour within a similarity
@@ -481,52 +525,31 @@ object Ann {
   def bruteRange(queries: DataFrame, vecs: DataFrame, tau: Double): DataFrame = {
     val q = broadcast(queries.select(
       col("vec_id").as("q_id"), col("embedding").as("qe"), norm(col("embedding")).as("qn")))
-    vecs.select(col("vec_id"), col("embedding").as("ve"), norm(col("embedding")).as("vn"))
+    withinRadius(vecs.select(col("vec_id"), col("embedding").as("ve"),
+        norm(col("embedding")).as("vn"))
       .crossJoin(q)
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", dot(col("qe"), col("ve")) / (col("qn") * col("vn")))
-      .filter(round(col("cos"), 6) >= tau)
-      .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("q_id"), col("vec_id"))
+      .withColumn("cos", dot(col("qe"), col("ve")) / (col("qn") * col("vn"))), tau)
   }
 
-  /** F48 scale path: range search served from the standing IVF index —
-    * the ivfTopKWith candidate machinery verbatim (payload-free
-    * argmax assignment, broadcast probe lists, no candidate dedup —
-    * the F25d uniqueness proof) with the radius filter in place of the
-    * rank window. nProbe = nCentroids IS brute force over the corpus
-    * (the F42 exactness contract transfers: every list is probed, so
-    * every vector is scored).
+  /** Shared membership tail of the range surfaces: keep cos ≥ τ on the
+    * round-6 grid, project round(cos, 4), order (q_id, vec_id).
     */
-  def ivfRange(queries: DataFrame, vecs: DataFrame, tau: Double,
-               nCentroids: Int, nProbe: Int): DataFrame = {
-    val cents = broadcast(initialCentroids(vecs, nCentroids))
-    val v = vecs.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val assigned = v.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(
-        struct(col("embedding").as("ve"), col("nrm").as("vn"), col("cent_id")),
-        struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("a"))
-      .select(col("vec_id"), col("a.ve").as("ve"), col("a.vn").as("vn"),
-        col("a.cent_id").as("cent_id"))
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val qScored = q.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
-    val qw = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("csim"), 6).desc, col("cent_id"))
-    val probes = broadcast(qScored
-      .withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
-      .select(col("q_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cent_id")))
-    assigned.join(probes, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", dot(col("qe"), col("ve")) / (col("qn") * col("vn")))
-      .filter(round(col("cos"), 6) >= tau)
+  private def withinRadius(scored: DataFrame, tau: Double): DataFrame =
+    scored.filter(round(col("cos"), 6) >= tau)
       .select(col("q_id"), col("vec_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("q_id"), col("vec_id"))
-  }
+
+  /** F48 scale path: range search served from the standing IVF index —
+    * [[ivfTopKWith]]'s candidate stage ([[ivfCandidates]]) with the
+    * radius filter in place of the rank window. nProbe = nCentroids IS
+    * brute force over the corpus (the F42 exactness contract
+    * transfers: every list is probed, so every vector is scored).
+    */
+  def ivfRange(queries: DataFrame, vecs: DataFrame, tau: Double,
+               nCentroids: Int, nProbe: Int): DataFrame =
+    withinRadius(ivfCandidates(queries, vecs, nProbe,
+      initialCentroids(vecs, nCentroids)), tau)
 
   // ---- F25: int8-quantized scoring ------------------------------------
 
@@ -606,26 +629,22 @@ object Ann {
     // assignment carries the CODES (not the float vectors) through the
     // map-side-combined argmax — the shuffled row is 1 byte/dim
     val assigned = v.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
+      .withColumn("csim", centSim("nrm"))
       .groupBy(col("vec_id"))
-      .agg(max_by(
+      .agg(nearest(
         struct(col("qcf").as("vqc"), col("qcn").as("vqn"), col("cent_id")),
-        struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("a"))
+        col("csim"), col("cent_id")).as("a"))
       .select(col("vec_id"), col("a.vqc").as("vqc"), col("a.vqn").as("vqn"),
         col("a.cent_id").as("cent_id"))
     val q = queries.select(col("vec_id").as("q_id"), col("embedding"),
       norm(col("embedding")).as("nrm"),
       qcodeCol.cast("array<float>").as("qe"))
       .withColumn("qn", norm(col("qe")))
-    val qScored = q.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
-    val qw = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("csim"), 6).desc, col("cent_id"))
-    val probes = broadcast(qScored
-      .withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
-      .select(col("q_id"), col("qe"), col("qn"), col("cent_id")))
+    val probes = broadcast(
+      probeRank(q.crossJoin(cents).withColumn("csim", centSim("nrm")), nProbe)
+        .select(col("q_id"), col("qe"), col("qn"), col("cent_id")))
     // (q_id, vec_id) unique by construction — same no-dedup argument
-    // as ivfTopKWith; the saved shuffle is the 1-byte/dim code stream
+    // as ivfCandidates; the saved shuffle is the 1-byte/dim code stream
     val scored = assigned.join(probes, Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qe"), col("vqc")) / (col("qn") * col("vqn")))
@@ -750,12 +769,11 @@ object Ann {
     * O(sample·m·kc) sub-dots, independent of corpus size.
     *
     * Engine-parity contracts, all inherited: argmin of
-    * round(cc − 2·sv·cw, 6) with lowest-j tie-break (the
-    * [[pqEncode]] rule, so training and encoding share one scoring
-    * law), fixed-point 1e-6-grid integer means with the FLOAT pass
-    * (the [[lloydMeans]] discipline — order-independent, bit-equal in
-    * DuckDB), seeds = sub-slices of the kc lowest SAMPLED vec_ids (the
-    * c0 rule). A codeword whose list goes empty keeps its previous
+    * round(cc − 2·sv·cw, 6) with lowest-j tie-break ([[nearest]] on
+    * −d2; the [[pqEncode]] rule, so training and encoding share one
+    * scoring law), the [[fixedPointMean]] rebuild shared with the
+    * coarse trainer (order-independent, bit-equal in DuckDB), seeds =
+    * sub-slices of the kc lowest SAMPLED vec_ids (the c0 rule). A codeword whose list goes empty keeps its previous
     * value. Driver-side only at the END: the trained book collects as
     * m·kc rows (the bounded-codebook contract) for the compiled encode
     * kernel.
@@ -783,21 +801,12 @@ object Ann {
       val assigned = sub.join(broadcast(book), Seq("s"))
         .withColumn("d2", col("cc") - lit(2.0) * dot(col("sv"), col("cw")))
         .groupBy(col("vec_id"), col("s"))
-        .agg(max_by(struct(col("sv").as("sv"), col("j")),
-          struct((-round(col("d2"), 6)).as("nd"), (-col("j")).as("nj"))).as("a"))
+        // nearest codeword = argmax of −d2 (round(−x, 6) ≡ −round(x, 6))
+        .agg(nearest(struct(col("sv").as("sv"), col("j")), -col("d2"), col("j")).as("a"))
         .select(col("s"), col("a.j").as("j"), col("a.sv").as("sv"))
-      val means = assigned
-        .select(col("s"), col("j"), posexplode(col("sv")).as(Seq("d", "comp")))
-        .groupBy(col("s"), col("j"), col("d"))
-        .agg(sum(round(col("comp") * 1e6, 0).cast("long")).as("ms"),
-          count(lit(1)).as("mn"))
-        .withColumn("mv", (col("ms").cast("double") /
-          (col("mn").cast("double") * 1e6)).cast("float"))
-        .groupBy(col("s"), col("j"))
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("mv")))),
-          x => x.getField("mv")).as("mcw"))
+      val means = fixedPointMean(assigned, Seq("s", "j"), "sv")
       book = book.join(broadcast(means), Seq("s", "j"), "left")
-        .select(col("s"), col("j"), coalesce(col("mcw"), col("cw")).as("cw"))
+        .select(col("s"), col("j"), coalesce(col("mce"), col("cw")).as("cw"))
         .withColumn("cc", dot(col("cw"), col("cw")))
         .cachedOnce
     }
@@ -853,16 +862,26 @@ object Ann {
     * final sqrt and divide.
     */
   private def adcCos(book: IndexedSeq[IndexedSeq[Array[Float]]]): Column = {
-    val m = book.length
-    val ccTab: IndexedSeq[IndexedSeq[Long]] =
-      book.map(_.map(cw => math.round(selfDot(cw) * 1e6)))
-    def codeAt(s: Int) = element_at(col("pcode"), s + 1).cast("int") + lit(1)
-    val adcL = (0 until m).map(s =>
-      element_at(element_at(col("qtab"), s + 1), codeAt(s))).reduce(_ + _)
-    val ccL = (0 until m).map(s =>
-      element_at(array(ccTab(s).map(lit): _*), codeAt(s))).reduce(_ + _)
+    val (adcL, ccL) = adcTerms(book)
     (adcL.cast("double") / lit(1e6)) /
       (col("qn") * sqrt(ccL.cast("double") / lit(1e6)))
+  }
+
+  /** 1-based lookup index of subspace `s`'s code in `pcode`. */
+  private def codeAt(s: Int): Column =
+    element_at(col("pcode"), s + 1).cast("int") + lit(1)
+
+  /** The two m-term LONG sums of ADC scoring, shared by [[adcCos]] and
+    * the residual [[ivfTopKPqResidual]]: Σ_s qtab[s][code_s] (the
+    * query · codeword numerator) and Σ_s ‖cw_{s,code_s}‖² (the
+    * reconstruction norm², its self-dots baked in as literals).
+    */
+  private def adcTerms(book: IndexedSeq[IndexedSeq[Array[Float]]]): (Column, Column) = {
+    val ccTab = book.map(_.map(cw => math.round(selfDot(cw) * 1e6)))
+    (book.indices.map(s =>
+      element_at(element_at(col("qtab"), s + 1), codeAt(s))).reduce(_ + _),
+      book.indices.map(s =>
+        element_at(array(ccTab(s).map(lit): _*), codeAt(s))).reduce(_ + _))
   }
 
   /** F25d: IVF probe + PQ/ADC rerank — the FAISS IVFPQ composition,
@@ -1028,23 +1047,14 @@ object Ann {
       norm(col("embedding")).as("qn"),
       graft.functions.PqKernels.adcTab(col("embedding"), b).as("qtab"))
     val qScored = q.crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("qn") * col("cn")))
+      .withColumn("csim", centSim("qn"))
       .withColumn("qcl", round(dot(col("embedding"), col("ce")) * 1e6, 0).cast("long"))
-    val qw = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("csim"), 6).desc, col("cent_id"))
-    val probes = broadcast(qScored
-      .withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
+    val probes = broadcast(probeRank(qScored, nProbe)
       .select(col("q_id"), col("qtab"), col("qn"), col("cent_id"), col("qcl"))
       .join(centArtDf, Seq("cent_id")))
-    val ccTab: IndexedSeq[IndexedSeq[Long]] =
-      book.map(_.map(cw => math.round(selfDot(cw) * 1e6)))
-    def codeAt(s: Int) = element_at(col("pcode"), s + 1).cast("int") + lit(1)
-    val adcL = (0 until m).map(s =>
-      element_at(element_at(col("qtab"), s + 1), codeAt(s))).reduce(_ + _)
+    val (adcL, ccL) = adcTerms(book)
     val ctL = (0 until m).map(s =>
       element_at(col("ctab"), lit(s * kc) + codeAt(s))).reduce(_ + _)
-    val ccL = (0 until m).map(s =>
-      element_at(array(ccTab(s).map(lit): _*), codeAt(s))).reduce(_ + _)
     val scored = codes.join(probes, Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos",
@@ -1057,24 +1067,11 @@ object Ann {
   private def ivfTopKPqWithBook(queries: DataFrame, vecs: DataFrame, k: Int,
                                 nCentroids: Int, nProbe: Int,
                                 book: IndexedSeq[IndexedSeq[Array[Float]]]): DataFrame = {
-    // the index build is TWO independent corpus passes joined on
-    // vec_id — the payload-free coarse argmax ([[coarseAssign]]: the
-    // map-side-combined shuffle row is 16 bytes) and the map-only
-    // encode — NOT one aggregate carrying the code through max_by: a
-    // computed (non-attribute) aggregate payload is re-evaluated per
-    // compared row inside the sort aggregate, which re-runs the encode
-    // kernel ~K times per vector (measured 10× wall on this query; the
-    // SQ8 sibling tolerates the same re-evaluation because its
-    // per-row quantize costs about as much as the csim it rides with,
-    // while the PQ kernel is ~30× that). The joined output
-    // (vec_id, cent_id, pcode) is the IVFPQ index table a production
-    // build persists ([[graft.similarity.AnnIndex]] does exactly that);
-    // the join reuses the aggregate's vec_id partitioning, so it costs
-    // one exchange on the 8-byte code side.
+    // the in-session index: the same (vec_id, cent_id, pcode) list
+    // build a persisted segment gets
     val cents = broadcast(initialCentroids(vecs, nCentroids))
-    val assigned = coarseAssign(vecs, cents)
-      .join(pqEncode(vecs, book), Seq("vec_id"))
-    ivfTopKPqOnIndex(queries, cents, assigned, k, nProbe, book)
+    ivfTopKPqOnIndex(queries, cents, AnnIndex.encodeLists(vecs, cents, book),
+      k, nProbe, book)
   }
 
   /** The IVFPQ SEARCH tail over an explicit index — `cents` is the
@@ -1093,13 +1090,9 @@ object Ann {
     val q = queries.select(col("vec_id").as("q_id"), col("embedding"),
       norm(col("embedding")).as("qn"),
       graft.functions.PqKernels.adcTab(col("embedding"), b).as("qtab"))
-    val qScored = q.crossJoin(cb)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("qn") * col("cn")))
-    val qw = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("csim"), 6).desc, col("cent_id"))
-    val probes = broadcast(qScored
-      .withColumn("crk", row_number().over(qw)).filter(col("crk") <= nProbe)
-      .select(col("q_id"), col("qtab"), col("qn"), col("cent_id")))
+    val probes = broadcast(
+      probeRank(q.crossJoin(cb).withColumn("csim", centSim("qn")), nProbe)
+        .select(col("q_id"), col("qtab"), col("qn"), col("cent_id")))
     val scored = lists.join(probes, Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", adcCos(book))
@@ -1119,10 +1112,9 @@ object Ann {
     val cents = broadcast(centroids)
     vecs.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .crossJoin(cents)
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
+      .withColumn("csim", centSim("nrm"))
       .groupBy(col("vec_id"))
-      .agg(max_by(col("cent_id"),
-        struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("cent_id"))
+      .agg(nearest(col("cent_id"), col("csim"), col("cent_id")).as("cent_id"))
   }
 
   /** F6d: TWO-LEVEL (hierarchical) coarse assignment — the production
@@ -1160,8 +1152,7 @@ object Ann {
       centroids.crossJoin(supers)
         .withColumn("ssim", dot(col("ce"), col("se")) / (col("cn") * col("sn")))
         .groupBy(col("cent_id"))
-        .agg(max_by(col("super_id"),
-          struct(round(col("ssim"), 6).as("s"), (-col("super_id")).as("t"))).as("super_id"),
+        .agg(nearest(col("super_id"), col("ssim"), col("super_id")).as("super_id"),
           first(col("ce")).as("ce"), first(col("cn")).as("cn")))
     val v = vecs.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))
@@ -1172,18 +1163,17 @@ object Ann {
     val routed = v.crossJoin(supers)
       .withColumn("ssim", dot(col("embedding"), col("se")) / (col("nrm") * col("sn")))
       .groupBy(col("vec_id"))
-      .agg(max_by(
+      .agg(nearest(
         struct(col("embedding").as("e"), col("nrm").as("n"), col("super_id")),
-        struct(round(col("ssim"), 6).as("s"), (-col("super_id")).as("t"))).as("a"))
+        col("ssim"), col("super_id")).as("a"))
       .select(col("vec_id"), col("a.e").as("embedding"), col("a.n").as("nrm"),
         col("a.super_id").as("super_id"))
     // level 2: score ONLY the super-cell's member centroids
     routed.join(cellMap, Seq("super_id"))
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")))
+      .withColumn("csim", centSim("nrm"))
       .groupBy(col("vec_id"))
       .agg(first(col("super_id")).as("super_id"),
-        max_by(col("cent_id"),
-          struct(round(col("csim"), 6).as("s"), (-col("cent_id")).as("t"))).as("cent_id"))
+        nearest(col("cent_id"), col("csim"), col("cent_id")).as("cent_id"))
       .select(col("vec_id"), col("super_id"), col("cent_id"))
   }
 

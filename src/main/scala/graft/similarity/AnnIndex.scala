@@ -121,11 +121,18 @@ object AnnIndex {
       .collect { case n if n.startsWith("seg=") => n.stripPrefix("seg=").toLong }
   }
 
-  /** One assign+encode pass: the (vec_id, cent_id, pcode) inverted-list
-    * rows of `vecs` under a FROZEN (centroids, book) — the exact
-    * two-pass index build of the in-session IVFPQ path
-    * (Ann.ivfTopKPqWithBook), shared so a persisted segment can never
-    * encode differently than the in-session index does.
+  /** The IVFPQ list build: the (vec_id, cent_id, pcode) inverted-list
+    * rows of `vecs` under a FROZEN (centroids, book). The one copy —
+    * the in-session IVFPQ path (Ann.ivfTopKPqWithBook) builds its
+    * index here too, so a persisted segment can never encode
+    * differently than the in-session index does. TWO independent
+    * corpus passes joined on vec_id — the payload-free coarse argmax
+    * (the map-side-combined shuffle row is 16 bytes) and the map-only
+    * encode — NOT one aggregate carrying the code through max_by: a
+    * computed aggregate payload is re-evaluated per compared row,
+    * which re-runs the encode kernel ~K times per vector (measured 10×
+    * wall). The join reuses the aggregate's vec_id partitioning, so
+    * it costs one exchange on the 8-byte code side.
     */
   def encodeLists(vecs: DataFrame, centroids: DataFrame,
                   book: IndexedSeq[IndexedSeq[Array[Float]]]): DataFrame =

@@ -24,6 +24,9 @@ import graft.ops.LlmQueries
   *
   * Output: one JSON line per (family, copies) and a final compact
   * per-family summary line {"family":{"x1":s,"x4":s,"x10":s}, ...}.
+  * Usage: `runMain graft.tools.ScaleBench [dataDir]`;
+  * `SPARK_GRAFT_ONLY=f1,f2` runs only the named families, and only
+  * the fixtures those families read are built.
   */
 object ScaleBench {
 
@@ -83,6 +86,9 @@ object ScaleBench {
       concat(lit("cpu;dc=dc"), (col("id") % 20).cast("string"),
         lit(";host=h"), col("id").cast("string")).as("path"))
 
+  private def f2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val spark = Harness.session()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
@@ -100,63 +106,73 @@ object ScaleBench {
         .write.mode("overwrite").parquet(path)
       val docs = spark.read.parquet(path)
       val nDocs = docs.count()
+      // every other fixture below is a lazy val: only the families
+      // SPARK_GRAFT_ONLY selects build what they read
       // scaled embeddings for the semantic family: replica k shifts the
       // first component by k·1e-3 — still a near-copy of its source
       // (the adversarial dup-mass case) but not float-identical
-      val epath = s"target/scalebench/x$copies/embeddings.parquet"
-      (0 until copies).map { k =>
-        if (k == 0) ebase.select(col("vec_id"), col("embedding"))
-        else ebase.select((col("vec_id") + lit(k * 10000000L)).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            (x + when(i === lit(0), lit(k * 1e-3)).otherwise(lit(0.0)))
-              .cast("float")).as("embedding"))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(epath)
-      val vecs = spark.read.parquet(epath)
+      lazy val vecs = {
+        val epath = s"target/scalebench/x$copies/embeddings.parquet"
+        (0 until copies).map { k =>
+          if (k == 0) ebase.select(col("vec_id"), col("embedding"))
+          else ebase.select((col("vec_id") + lit(k * 10000000L)).as("vec_id"),
+            transform(col("embedding"), (x, i) =>
+              (x + when(i === lit(0), lit(k * 1e-3)).otherwise(lit(0.0)))
+                .cast("float")).as("embedding"))
+        }.reduce(_ unionByName _).write.mode("overwrite").parquet(epath)
+        spark.read.parquet(epath)
+      }
+      def buildIndex(root: String): Unit =
+        graft.similarity.AnnIndex.build(spark, vecs,
+          graft.similarity.AnnIndex.Params(LlmQueries.IvfCentroids,
+            LlmQueries.IvfProbe, LlmQueries.PqSubspaces,
+            LlmQueries.PqCodes, LlmQueries.PqTrainIters,
+            math.max(1, LlmQueries.PqTrainBp / copies)), root)
       // F60: the standing index artifact the lifecycle rows consume —
       // built once per scale point (it IS the offline artifact; the
       // timed rows measure serving and delta-encode, never the build);
       // a leftover epoch from a previous run is reused (deterministic
       // build over the same scaled corpus)
-      val annRoot = s"target/scalebench/x$copies/annidx"
-      if (graft.similarity.AnnIndex.readyEpochs(spark, annRoot).isEmpty)
-        graft.similarity.AnnIndex.build(spark, vecs,
-          graft.similarity.AnnIndex.Params(LlmQueries.IvfCentroids,
-            LlmQueries.IvfProbe, LlmQueries.PqSubspaces,
-            LlmQueries.PqCodes, LlmQueries.PqTrainIters,
-            math.max(1, LlmQueries.PqTrainBp / copies)), annRoot)
+      lazy val annRoot = {
+        val root = s"target/scalebench/x$copies/annidx"
+        if (graft.similarity.AnnIndex.readyEpochs(spark, root).isEmpty)
+          buildIndex(root)
+        root
+      }
       // F60 long-chain fixture (VERDICT r10 #4): the SAME standing
       // index driven through 12 streaming extend ticks with composed
       // maintenance (compact every 4 segments, keep 2 epochs) — built
       // once per scale point; the timed row below serves through it.
       // Fixed-size deltas (the ebase corpus under shifted ids), so the
       // chain itself is delta-proportional work
-      val chainRoot = s"target/scalebench/x$copies/annchain"
-      if (graft.similarity.AnnIndex.readyEpochs(spark, chainRoot).isEmpty) {
-        graft.similarity.AnnIndex.build(spark, vecs,
-          graft.similarity.AnnIndex.Params(LlmQueries.IvfCentroids,
-            LlmQueries.IvfProbe, LlmQueries.PqSubspaces,
-            LlmQueries.PqCodes, LlmQueries.PqTrainIters,
-            math.max(1, LlmQueries.PqTrainBp / copies)), chainRoot)
-        for (k <- 1 to 12)
-          graft.similarity.AnnIndex.extendOnce(
-            ebase.select((col("vec_id") + lit(900000000L + k * 1000000L))
-              .as("vec_id"), col("embedding")),
-            chainRoot, k.toLong, compactEvery = 4, vacuumKeep = 2)
-        val segs = new java.io.File(chainRoot).listFiles()
-          .count(_.getName.startsWith("seg="))
-        val eps = graft.similarity.AnnIndex.readyEpochs(spark, chainRoot).size
-        println(s"""{"family":"ann_index_chain_build","copies":$copies,""" +
-          s""""segments":$segs,"epochs":$eps}""")
+      lazy val chainRoot = {
+        val root = s"target/scalebench/x$copies/annchain"
+        if (graft.similarity.AnnIndex.readyEpochs(spark, root).isEmpty) {
+          buildIndex(root)
+          for (k <- 1 to 12)
+            graft.similarity.AnnIndex.extendOnce(
+              ebase.select((col("vec_id") + lit(900000000L + k * 1000000L))
+                .as("vec_id"), col("embedding")),
+              root, k.toLong, compactEvery = 4, vacuumKeep = 2)
+          val segs = new java.io.File(root).listFiles()
+            .count(_.getName.startsWith("seg="))
+          val eps = graft.similarity.AnnIndex.readyEpochs(spark, root).size
+          println(s"""{"family":"ann_index_chain_build","copies":$copies,""" +
+            s""""segments":$segs,"epochs":$eps}""")
+        }
+        root
       }
       // image-family corpus: replica offset 1e9 so scaled doc ids can
       // never collide with the planted-twin media offsets (2e7/3e7)
-      val ipath = s"target/scalebench/x$copies/imgdocs.parquet"
-      (0 until copies).map { k =>
-        if (k == 0) base.select(col("doc_id"), col("text"))
-        else base.select((col("doc_id") + lit(k * 1000000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(ipath)
-      val imgDocs = spark.read.parquet(ipath)
+      lazy val imgDocs = {
+        val ipath = s"target/scalebench/x$copies/imgdocs.parquet"
+        (0 until copies).map { k =>
+          if (k == 0) base.select(col("doc_id"), col("text"))
+          else base.select((col("doc_id") + lit(k * 1000000000L)).as("doc_id"),
+            col("text"))
+        }.reduce(_ unionByName _).write.mode("overwrite").parquet(ipath)
+        spark.read.parquet(ipath)
+      }
 
       // G26 read-side evidence (r10): the same point set in the
       // splintered streaming-sink layout (8 appends × 8 tasks per day
@@ -168,28 +184,31 @@ object ScaleBench {
       // back
       // the marker names the store's layout (cold generations): a store
       // left in an older layout has no such marker and is rebuilt
-      val mroot = s"target/scalebench/x$copies/maintstore"
-      if (!new java.io.File(s"$mroot/_OK_GEN").exists) {
-        val mpath = new org.apache.hadoop.fs.Path(mroot)
-        mpath.getFileSystem(spark.sessionState.newHadoopConf()).delete(mpath, true)
-        // split the appends on id (ts = id*26 is always even, so a ts%8
-        // split would leave the odd appends empty and halve the
-        // documented ~64 files/day small-file pressure)
-        val pts = spark.range(100000L * copies).select(
-            col("id"),
-            concat(lit("m."), (col("id") % 50).cast("string")).as("path"),
-            (col("id") * 26L % (30L * 86400L)).as("ts"),
-            col("id").cast("double").as("value"))
-          .withColumn("day", col("ts") - col("ts") % 86400L)
-        for (k <- 0 until 8; dst <- Seq("splintered", "hot"))
-          pts.filter(col("id") % 8 === k).drop("id").repartition(8)
-            .write.partitionBy("day").mode("append").parquet(s"$mroot/$dst")
-        // a def: the sweep needs the listing taken after the publish
-        def store = graft.tsdb.MetricStore.resolve(spark, s"$mroot/hot", s"$mroot/cold")
-        graft.tsdb.MetricStore.compactTick(spark, store, 29L * 86400L, Nil,
-          spark.emptyDataFrame)
-        graft.tsdb.MetricStore.sweep(spark, store)
-        new java.io.File(s"$mroot/_OK_GEN").createNewFile()
+      lazy val mroot = {
+        val mroot = s"target/scalebench/x$copies/maintstore"
+        if (!new java.io.File(s"$mroot/_OK_GEN").exists) {
+          val mpath = new org.apache.hadoop.fs.Path(mroot)
+          mpath.getFileSystem(spark.sessionState.newHadoopConf()).delete(mpath, true)
+          // split the appends on id (ts = id*26 is always even, so a ts%8
+          // split would leave the odd appends empty and halve the
+          // documented ~64 files/day small-file pressure)
+          val pts = spark.range(100000L * copies).select(
+              col("id"),
+              concat(lit("m."), (col("id") % 50).cast("string")).as("path"),
+              (col("id") * 26L % (30L * 86400L)).as("ts"),
+              col("id").cast("double").as("value"))
+            .withColumn("day", col("ts") - col("ts") % 86400L)
+          for (k <- 0 until 8; dst <- Seq("splintered", "hot"))
+            pts.filter(col("id") % 8 === k).drop("id").repartition(8)
+              .write.partitionBy("day").mode("append").parquet(s"$mroot/$dst")
+          // a def: the sweep needs the listing taken after the publish
+          def store = graft.tsdb.MetricStore.resolve(spark, s"$mroot/hot", s"$mroot/cold")
+          graft.tsdb.MetricStore.compactTick(spark, store, 29L * 86400L, Nil,
+            spark.emptyDataFrame)
+          graft.tsdb.MetricStore.sweep(spark, store)
+          new java.io.File(s"$mroot/_OK_GEN").createNewFile()
+        }
+        mroot
       }
 
       val families: Seq[(String, () => DataFrame)] = Seq(
@@ -380,26 +399,19 @@ object ScaleBench {
         // extend(): a FIXED batch against the frozen books, which must
         // stay FLAT as the standing corpus grows (work ∝ delta, the
         // F37 claim for the vector side)
-        "ann_index_search" -> (() => {
-          val root = s"target/scalebench/x$copies/annidx"
-          val idx = graft.similarity.AnnIndex.load(spark, root)
+        "ann_index_search" -> (() =>
           graft.similarity.AnnIndex.search(
             vecs.filter(col("vec_id") < LlmQueries.AnnQueryMax),
-            idx, LlmQueries.AnnK)
-        }),
+            graft.similarity.AnnIndex.load(spark, annRoot), LlmQueries.AnnK)),
         // serving through the 12-tick maintained chain must cost the
         // same as through the 1-extend index (bounded segments ⇒ the
         // maintenance history is invisible to a reader)
-        "ann_index_chain_search" -> (() => {
-          val root = s"target/scalebench/x$copies/annchain"
-          val idx = graft.similarity.AnnIndex.load(spark, root)
+        "ann_index_chain_search" -> (() =>
           graft.similarity.AnnIndex.search(
             vecs.filter(col("vec_id") < LlmQueries.AnnQueryMax),
-            idx, LlmQueries.AnnK)
-        }),
+            graft.similarity.AnnIndex.load(spark, chainRoot), LlmQueries.AnnK)),
         "ann_index_encode_delta" -> (() => {
-          val root = s"target/scalebench/x$copies/annidx"
-          val idx = graft.similarity.AnnIndex.load(spark, root)
+          val idx = graft.similarity.AnnIndex.load(spark, annRoot)
           graft.similarity.AnnIndex.encodeLists(
             ebase.select((col("vec_id") + lit(900000000L)).as("vec_id"),
               col("embedding")),
@@ -736,11 +748,16 @@ object ScaleBench {
             graft.multimodal.ImageDedup.plantedImages(spark, imgDocs),
             LlmQueries.PhashMaxHamming, LlmQueries.PhashMaxDf))
       ) else Nil)
-      // args(1..): optional family-name filter for targeted re-runs
-      val only = args.drop(1).toSet
-      def f2(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      for ((name, mk) <- families if only.isEmpty || only(name)) {
+      // the fixtures a family reads, built before its timed samples
+      def prepare(name: String): Unit = {
+        if (name.startsWith("ann_") || name.startsWith("dedup_semantic")) vecs
+        if (name == "ann_index_search" || name == "ann_index_encode_delta") annRoot
+        if (name == "ann_index_chain_search") chainRoot
+        if (name.startsWith("store_read")) mroot
+        if (name == "image_decode" || name == "dedup_image_phash") imgDocs
+      }
+      for ((name, mk) <- families if Harness.wanted(name)) {
+        prepare(name)
         val sec = Harness.samples(spark) {
           mk().write.format("noop").mode("overwrite").save()
         }.min
@@ -749,8 +766,6 @@ object ScaleBench {
         println(s"""{"family":"$name","copies":$copies,"docs":$nDocs,"sec":${f2(sec)}}""")
       }
     }
-    def f2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val summary = out.map { case (name, m) =>
       s"\"" + name + "\":" +
         m.map { case (c, s) => s"\"x$c\":${f2(s)}" }.mkString("{", ",", "}")

@@ -2162,7 +2162,11 @@ class LlmSpec extends SparkSpec {
       (10L, v(0.95f, 0.05f, 0, 0)), (11L, v(0.88f, 0.12f, 0, 0)),
       (12L, v(0.02f, 0.97f, 0.03f, 0)), (13L, v(0, 0.85f, 0.15f, 0)),
       (14L, v(0.01f, 0, 0.99f, 0.08f)), (15L, v(0, 0, 0.86f, 0.14f)),
-      (16L, v(0.12f, 0, 0, 0.92f)), (17L, v(0.07f, 0, 0, 0.97f)))
+      (16L, v(0.12f, 0, 0, 0.92f)), (17L, v(0.07f, 0, 0, 0.97f)),
+      // the tie row: bit-equal cosine to centroids 4 and 5 (same norms,
+      // same dot terms in the same order) and to supers 0, 1 and 2 —
+      // every form must route it to the lowest id
+      (20L, v(1, 1, 1, 0)))
     val vecs = rows.toDF("vec_id", "embedding")
     val cents = Ann.initialCentroids(vecs, 8)
     val flat = Ann.coarseAssign(vecs, cents).collect()
@@ -2173,6 +2177,13 @@ class LlmSpec extends SparkSpec {
     two.foreach { case (vid, _, cell) =>
       assert(cell == flat(vid), s"vec $vid: two-level $cell vs flat ${flat(vid)}")
     }
+    val book = cents.select($"cent_id", $"ce").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
+    val rowwise = Ann.assignRowwise(vecs, book).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rowwise == flat)
+    assert(flat(20L) == 4L)
+    assert(two.collectFirst { case (20L, sup, _) => sup } == Some(0L))
   }
 
   test("hierarchical lloyd: nSuper = K degenerates to the flat trainer bit-for-bit (F6f)") {

@@ -1328,6 +1328,44 @@ class StreamSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("quantile register state stays at the register bound while values grow (G22 state size)") {
+    import graft.streaming.CarbonStream
+    import graft.ops.Sketch
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[(String, Long)]
+    val query = CarbonStream.qsketchStream(source.toDF().toDF("lang", "v"), "lang")
+      .writeStream.format("noop").outputMode("update").start()
+    def stateRows(): Long =
+      query.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    // a value's register, derived from its bits: octave e = floor(log2 v)
+    // split into QSub equal-width sub-buckets; v <= 0 shares register -1
+    def register(v: Long): Long =
+      if (v <= 0) -1L
+      else {
+        val e = 63 - java.lang.Long.numberOfLeadingZeros(v)
+        val p = 1L << e
+        e * Sketch.QSub + (v - p) * Sketch.QSub / p
+      }
+    try {
+      var registers = Set.empty[Long]
+      // 1k small values, then 20k and 40k values over [1, 100000]: the
+      // stream grows 60×, the state only by the registers values first hit
+      val rows = for ((n, mult) <- Seq(1000L -> 1L, 20000L -> 37L, 40000L -> 41L)) yield {
+        val batch = (0L until n).map(i => ("en", i * mult % 100000 + 1))
+        source.addData(batch: _*)
+        query.processAllAvailable()
+        registers ++= batch.map(b => register(b._2))
+        assert(stateRows() == registers.size.toLong,
+          s"state ${stateRows()} rows vs ${registers.size} registers after $n values")
+        stateRows()
+      }
+      // the last 40k values land in registers already held: no new rows
+      assert(rows(2) == rows(1), rows)
+      // values < 2^17 span octaves 0..16: at most 17·QSub registers
+      assert(registers.size <= 17 * Sketch.QSub)
+    } finally query.stop()
+  }
+
   test("streaming byte-CDC ingest gate: frozen chunk index, stream ≡ batch (G25)") {
     import graft.streaming.CarbonStream
     import graft.dedup.Dedup

@@ -341,10 +341,28 @@ class PlanAuditSpec extends SparkSpec {
     // IVF paths must not pay a dropDuplicates exchange on the candidate
     // stream (at 100 TB the largest intermediate in the query). Hash
     // exchanges = assignment argmax + probe-rank window + topK window:
-    // exactly 3 (the r6 dedup made it 4).
-    for (name <- Seq("ann_ivf", "ann_ivf_quantized")) {
+    // exactly 3 (the r6 dedup made it 4). Range search has no topK
+    // window (2); residual IVFPQ reads its assignment argmax from the
+    // cached residual table, whose final and initial plans both print
+    // it (4).
+    for ((name, n) <- Seq("ann_ivf" -> 3, "ann_ivf_quantized" -> 3,
+        "ann_range_ivf" -> 2, "ann_ivf_pq_residual" -> 4)) {
       val p = plan(name)
-      assert(countOf(p, "Exchange hashpartitioning") == 3,
+      assert(countOf(p, "Exchange hashpartitioning") == n,
+        s"$name:\n${p.take(3000)}")
+    }
+  }
+
+  test("ann_range_ivf / ann_ivf_pq_residual: codebook and probe joins broadcast") {
+    // the ann_ivf join shape: the K-row codebook and the probe lists
+    // (residual: with the per-centroid scoring table) join as
+    // broadcasts; a SortMergeJoin or a cartesian means a bounded side
+    // lost its broadcast and the corpus is sorted or crossed against it
+    for (name <- Seq("ann_range_ivf", "ann_ivf_pq_residual")) {
+      val p = plan(name)
+      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&
+        !p.contains("ShuffledHashJoin"), s"$name:\n${p.take(3000)}")
+      assert(p.contains("BroadcastNestedLoopJoin") && p.contains("BroadcastHashJoin"),
         s"$name:\n${p.take(3000)}")
     }
   }
